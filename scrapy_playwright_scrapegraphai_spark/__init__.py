@@ -12,7 +12,7 @@ parquet/Iceberg-style table of Common-Crawl-style pages
 This is NOT a port: the reference is Scrapy+Playwright+PostgreSQL; this
 engine is DataFrame-declarative (Catalyst-optimized), with vectorized
 pandas/Arrow UDFs for HTML kernels, window-ranked politeness admission,
-anti-join + bloom-prefiltered URL-seen set, and checkpointed superstep
+an exact broadcast anti-join URL-seen set, and checkpointed superstep
 snapshots for exact resume.
 
 Layout
@@ -23,7 +23,8 @@ functions/  pure Python kernels (shared with the single-process oracle —
 sources/    deterministic synthetic corpus generator (pages/seeds/robots)
             and driver-testdata loaders
 operators/  classification, frontier dedup, politeness ranking, seen-set
-            bloom shards, dedup suite (exact/minhash/simhash/jaccard),
+            bloom shards (a standalone K5 operator the engine does not
+            call), dedup suite (exact/minhash/simhash/jaccard),
             similarity search, multimodal plumbing, statistics aggregates
 plans/      snapshot store (parquet + atomic manifest; Iceberg-snapshot
             stand-in) and the superstep driver loop

@@ -84,7 +84,7 @@ def canonicalize_url(url: str, mode: str = "exact") -> str:
 
     ``mode='normalize'`` lowercases scheme+host, strips default ports and
     fragments, and defaults an empty path to ``/`` — the scale-mode key
-    for the 10^10-URL bloom-sharded seen set.
+    for a 10^10-URL seen set.
     """
     if mode == "exact":
         return url

@@ -104,8 +104,10 @@ def anti_join_seen(
     """J1: drop candidates whose ``url`` already exists in the seen set.
 
     Exactness is non-negotiable (north rule: final URL-seen set must match
-    the reference); the bloom shards in ``seenset.py`` are a *prefilter*
-    only — false positives are re-checked here, never dropped.
+    the reference), and this join is the engine's whole seen check. The
+    bloom shards in ``seenset.py`` are a standalone *prefilter* operator
+    the engine does not call; a caller that uses one must re-check its
+    false positives here, never drop them.
 
     Default plan (``broadcast_candidates=True``): the candidate batch is
     politeness-bounded, hence broadcastable BY DESIGN, while the seen set

@@ -65,7 +65,9 @@ def robots_dim_profile(robots: DataFrame) -> tuple[bool, int]:
     politeness join force-broadcasts the dim (see ``with_robots``).
     """
     def _bad(p):
-        return p.rlike(_BAD_META_RE) | p.rlike(_NON_ASCII_RE)
+        # a null element would make rlike null, which the coalesce below
+        # would read as "not bad"; a malformed dim stays off the native path
+        return p.isNull() | p.rlike(_BAD_META_RE) | p.rlike(_NON_ASCII_RE)
 
     row = (
         robots.select(

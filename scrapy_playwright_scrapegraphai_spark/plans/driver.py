@@ -7,14 +7,18 @@ mirroring the reference's event loop semantics (SURVEY.md §3):
     admitted ──fetch join vs pages (J3; In-pushdown for small batches)──►
     fetched ──parse_pages: ONE Arrow pass (K1+K2 links+text, P2-P6
               classify)──► parsed (cached) ──explode──► children
-    children ──first-writer dedup (J2)──► batch ──bloom probe flag (K5)──►
-    batch' ──single localCheckpoint barrier──► shuffle-free anti-join
-              seen (J1) ──► new ──plan-mode dense discovery_seq──►
-    frontier append (S4)
+    children ──first-writer dedup (J2)──► batch ──single localCheckpoint
+              barrier──► exact shuffle-free anti-join seen (J1) ──► new
+              ──plan-mode dense discovery_seq──► frontier append (S4)
     + per-superstep metrics (Observations — no dedicated count jobs)
     + per-partition lineage (S6/A4) + page text, all in one atomic
-      snapshot commit (checkpoint/resume); bloom deltas merge on a
-      background thread before the next probe
+      snapshot commit (checkpoint/resume)
+
+The seen check is the exact anti-join alone: the seen set streams
+map-side against a broadcast of the politeness-bounded batch's urls, so
+no prefilter could spare that scan. The bloom shards of
+``operators/seenset.py`` (K5) remain a standalone operator; the engine
+does not call them.
 
 The reference's recursion (frontier_spider.py:246-260 re-yields Requests
 for seeds below max_depth) becomes the driver-side ``while`` loop; its
@@ -24,15 +28,15 @@ fetchable rows".
 Scale notes (10^10-URL design point):
 - every join in the loop is either broadcast (admitted batch, robots) or
   hash-partitioned on url; the frontier is the only big state and is
-  touched via anti-join (bloom-prefiltered) + unionByName append.
+  touched via the shuffle-free anti-join + unionByName append.
 - snapshot commits are DELTAS (state-transition rows + new rows + lineage),
   never a full-frontier rewrite — write cost is O(delta) per superstep;
   under Iceberg the same commit is MERGE + append. The working frontier
   advances in memory (localCheckpoint truncates lineage); resume folds the
   committed deltas over the step-0 base.
 - no collect() of row data ever; only tiny aggregates (Observation
-  metrics, bloom shard blobs) reach the driver — with one deliberate
-  exception: a politeness-bounded SMALL batch's URL list is collected to
+  metrics) reach the driver — with one deliberate exception: a
+  politeness-bounded SMALL batch's URL list is collected to
   push an In predicate into the pages scan (point-lookup path; the list
   is bounded by ``lookup_pushdown_threshold``).
 
@@ -64,7 +68,6 @@ from ..operators.frontier import (
     finalize_new_rows,
     first_writer_dedup,
 )
-from ..operators.seenset import BloomShards
 from .store import SnapshotStore
 
 # Largest In(url, [...]) list forwarded to the parquet reader as an exact
@@ -111,7 +114,9 @@ class CrawlConfig:
     # discovery_seq keeps the order total ⇒ admission deterministic.
     order_cols: tuple = ("discovery_seq",)
     seq_mode: str = "ranged"         # discovery_seq assignment strategy
-    use_bloom: bool = True
+    # bloom_shards, expected_urls and bloom_broadcast_max_bytes (below)
+    # size the standalone seen-set operator (operators/seenset.py) for
+    # callers that probe it; the engine no longer reads them
     bloom_shards: int = 16
     expected_urls: int = 200_000     # bloom sizing hint
     max_supersteps: int = 1000
@@ -122,10 +127,11 @@ class CrawlConfig:
     # pending-batch size up to which the admitted side is broadcast into
     # the fetch join; beyond it AQE chooses the join strategy from stats
     broadcast_admitted_threshold: int = 2_000_000
-    # bloom bitmap bytes up to which the whole sharded set broadcasts to
-    # every executor; beyond it the probe goes partition-local (cogroup
-    # candidate shard ↔ shard blob — at the 10^10 design point the
-    # bitmaps total ~12 GB and must never broadcast)
+    # bloom bitmap bytes up to which the standalone operator's probe
+    # broadcasts the whole sharded set; beyond it the probe goes
+    # partition-local (cogroup candidate shard ↔ shard blob — at the
+    # 10^10 design point the bitmaps total ~12 GB and must never
+    # broadcast)
     bloom_broadcast_max_bytes: int = 64 << 20
     # robots dim rows up to which the politeness join force-broadcasts
     # the rules (reference parity: a handful of hosts). Above it the
@@ -182,9 +188,6 @@ class CrawlEngine:
         # whether the politeness join may force-broadcast it.
         self._native_robots, n_rules = politeness.robots_dim_profile(robots)
         self._broadcast_robots = n_rules <= self.cfg.robots_broadcast_max_rows
-        # in-flight background bloom merges: (thread, {"err": ...}) pairs;
-        # joined before the next probe (see _flush_bloom_pending)
-        self._bloom_pending: list = []
         # in-flight background snapshot write (at most one): joined before
         # the next step's write / the terminal meta update, where its
         # manifest is folded into the bookkeeping and the step's caches
@@ -242,109 +245,6 @@ class CrawlEngine:
             .withColumn("superstep", F.lit(0))
             .select(*FRONTIER_COLUMNS)
         )
-
-    def _bloom_path(self) -> str:
-        import os
-
-        return os.path.join(self.store.root, "bloom_shards.bin")
-
-    def _build_bloom(
-        self,
-        frontier: DataFrame,
-        known_empty: bool = False,
-        resume_step: int | None = None,
-    ) -> BloomShards | None:
-        if not self.cfg.use_bloom:
-            return None
-        sized = BloomShards.sized_for(self.cfg.expected_urls, self.cfg.bloom_shards)
-        if resume_step is not None:
-            # resume fast path: load the persisted shards (O(shards), a
-            # few MB of driver IO) instead of re-scanning the frontier
-            # (O(seen-set) — a full-table job at the 10^10 design point);
-            # steps committed after the last save merge their new_rows
-            # deltas. Any mismatch (absent/corrupt file, re-sized config,
-            # file from the future) falls back to the exact rebuild.
-            loaded = BloomShards.load(self._bloom_path())
-            if loaded is not None:
-                bloom, saved_step = loaded
-                if (
-                    (bloom.num_shards, bloom.bits, bloom.k)
-                    == (sized.num_shards, sized.bits, sized.k)
-                    and saved_step <= resume_step
-                ):
-                    for s in range(saved_step + 1, resume_step + 1):
-                        if self.store.has_table(s, "new_rows"):
-                            bloom.add_df(
-                                self.store.read_table(
-                                    self.spark, s, "new_rows"
-                                ).select("url")
-                            )
-                    self._bloom_pending = []
-                    self._bloom_source = "checkpoint"
-                    return bloom
-        bloom = sized
-        if not known_empty:
-            seen = frontier.filter(~F.col("is_root")).select("url")
-            bloom.add_df(seen)
-            self._bloom_source = "rebuilt"
-        else:
-            # a fresh start's frontier holds only root rows (excluded from
-            # the seen set by construction) — skip the empty-scan Spark job
-            self._bloom_source = "fresh"
-        self._bloom_pending = []  # frontier already covers everything committed
-        return bloom
-
-    def _start_bloom_merge(self, spark: SparkSession, bloom: BloomShards,
-                           path: str, step: int,
-                           cached_df: DataFrame | None = None) -> None:
-        """OR the committed new_rows' urls into the shards on a background
-        thread — overlaps with the frontier advance and the next step's
-        politeness/fetch planning. At most one merge is ever in flight
-        (the flush below joins before the next probe), so the bitmap
-        mutation is race-free. After the merge the shards are persisted
-        next to the snapshots (atomic rename) so a resumed run loads them
-        instead of re-scanning the frontier; a kill mid-save leaves the
-        previous save, which the resume path tops up from the committed
-        new_rows deltas.
-
-        ``cached_df`` lets the merge aggregate over an already-
-        materialized DataFrame (the step's localCheckpoint-ed batch)
-        instead of re-reading committed parquet — one cheap scan, started
-        the moment the barrier finishes. Falls back to ``path`` on any
-        error via the pending-state re-raise."""
-        import threading
-
-        state = {"err": None}
-
-        def run():
-            try:
-                spark.sparkContext.setJobDescription(f"bloom merge step {step}")
-                src = cached_df if cached_df is not None else (
-                    spark.read.parquet(path)
-                )
-                bloom.add_df(src.select("url"))
-                bloom.save(self._bloom_path(), step)
-            except BaseException as e:  # noqa: BLE001 — must not lose it
-                state["err"] = e
-
-        t = threading.Thread(target=run, daemon=True)
-        t.start()
-        self._bloom_pending.append((t, state))
-
-    def _flush_bloom_pending(self, spark: SparkSession,
-                             bloom: BloomShards) -> None:
-        """Wait for deferred bloom merges before a probe.
-
-        A lost merge would give the bloom a FALSE NEGATIVE (an already-
-        seen url claimed definitely-new → duplicate frontier row), so a
-        failed background merge re-raises here. The terminal superstep
-        never probes again and never pays the wait.
-        """
-        for t, state in self._bloom_pending:
-            t.join()
-            if state["err"] is not None:
-                raise state["err"]
-        self._bloom_pending = []
 
     # -- delta fold (MERGE semantics; Iceberg stand-in) -------------------------
 
@@ -474,8 +374,7 @@ class CrawlEngine:
             # corpus/seed list) would otherwise leave higher-numbered
             # manifests from the old run in place; a later resume would
             # see the stale latest_step and fold deltas from two
-            # different runs into one corrupted frontier. reset() also
-            # removes the persisted bloom shard file.
+            # different runs into one corrupted frontier.
             self.store.reset()
 
             from pyspark.sql import Observation
@@ -534,15 +433,6 @@ class CrawlEngine:
 
         import sys
 
-        t_init = time.monotonic()
-        bloom = self._build_bloom(
-            frontier,
-            known_empty=fresh_start,
-            resume_step=None if fresh_start else step,
-        )
-        if cfg.profile:
-            print(f"[profile] bloom_build={time.monotonic()-t_init:.1f}s",
-                  file=sys.stderr)
         steps_run = 0
 
         def _flush_write():
@@ -764,54 +654,18 @@ class CrawlEngine:
                 children, order_cols=["parent_seq", "item_seq"], key_cols=["url"]
             )
 
-            # J1 (+K5): seen check — bloom prefilter, exact anti-join confirm.
-            # The probe FLAG rides the batch through ONE materialization
-            # barrier; branching before materializing would re-execute the
-            # parse+dedup pipeline once per branch. Bloom deltas from the
-            # previous superstep merge lazily here — only when a probe
-            # actually needs them (the terminal superstep never pays).
+            # J1: exact seen check behind ONE materialization barrier —
+            # the plan-mode seq assignment below needs a materialized
+            # input, and the write and advance then scan the checkpoint
+            # instead of re-running the parse+dedup pipeline.
             seen = frontier.filter(~F.col("is_root"))
             _mark("plan_build")
-            if bloom is not None:
-                # blocking join on the previous step's background bloom
-                # merge — reported as its own phase so plan construction
-                # cost and merge-wait cost don't blur together
-                self._flush_bloom_pending(spark, bloom)
-                _mark("bloom_wait")
-                if bloom.total_bytes() <= cfg.bloom_broadcast_max_bytes:
-                    batch = bloom.with_maybe_flag(batch)
-                else:
-                    batch = bloom.with_maybe_flag_shard_local(batch)
             batch = batch.localCheckpoint(eager=True)
             _mark("parse_barrier")
-            if bloom is not None:
-                # start this step's bloom merge NOW, from the materialized
-                # batch — not from new_rows on the advance thread. The two
-                # produce IDENTICAL bitmaps: batch ∖ new is exactly the
-                # already-seen urls, which the bloom contains by
-                # construction (no false negatives), so OR-ing them back
-                # is a no-op. Starting at the barrier's end gives the
-                # merge the whole expand/advance/write window (tens of
-                # seconds) to finish in background, so the next step's
-                # pre-probe flush never blocks — the round-3 profile
-                # showed an 11 s bloom_wait when the merge could only
-                # overlap the ~1.5 s of next-step plan building. The
-                # terminal superstep now runs a merge it never probes
-                # (n_pending is unknown this early), but vectorized it is
-                # ~1 s of background work, long done before the terminal
-                # join, and the persisted shards still serve resume.
-                self._start_bloom_merge(
-                    spark, bloom, None, step, cached_df=batch
-                )
-                new = batch.filter(~F.col("_maybe")).drop("_maybe").unionByName(
-                    anti_join_seen(
-                        batch.filter(F.col("_maybe")).drop("_maybe"), seen,
-                        unique_urls=True,  # batch deduped, frontier url-unique
-                    )
-                )
-            else:
-                new = anti_join_seen(batch, seen, unique_urls=True)
-
+            new = anti_join_seen(
+                batch, seen,
+                unique_urls=True,  # batch deduped, frontier url-unique
+            )
             new = new.drop("partition_id", "found_count")
             # 'plan' seq assignment: offsets are part of the lazy plan —
             # no collect, no checkpoint; determinism holds because the
@@ -825,11 +679,11 @@ class CrawlEngine:
                 key_bound=next_seq,  # every parent_seq < current next_seq
             )
             # coalesce before caching for the same reason as `updates`
-            # below: `new` inherits the barrier batch's two-branch union
-            # partitioning (≈2× the dedup shuffle width) though the rows
-            # are narrow frontier entries; the cache is then scanned by
-            # THREE consumers (table write, advance union, next step's
-            # politeness) and each would dispatch the full task fan-out.
+            # below: `new` inherits the barrier batch's partitioning (the
+            # dedup shuffle width) though the rows are narrow frontier
+            # entries; the cache is then scanned by THREE consumers
+            # (table write, advance union, next step's politeness) and
+            # each would dispatch the full task fan-out.
             # 2×cluster-width partitions keep every consumer fully
             # parallel at any scale.
             new_rows = (
@@ -1067,19 +921,13 @@ class CrawlEngine:
                             f"{time.monotonic()-_t_adv:.1f}s",
                             file=sys.stderr,
                         )
-                    # (this step's bloom merge already started at the
-                    # parse barrier's end, from the materialized batch —
-                    # see the merge-equivalence note there)
                 except BaseException as e:  # noqa: BLE001 — re-raised below
                     adv["err"] = e
                 finally:
                     adv_done.set()  # unblock _commit_meta either way
 
             adv_t = threading.Thread(target=_advance, daemon=True)
-            import os as _os
-            _seq_tail = _os.environ.get("SPARK_GRAFT_SEQ_TAIL", "") == "1"
-            if not _seq_tail:
-                adv_t.start()
+            adv_t.start()
             # the snapshot write ALSO runs off the main thread: step k's
             # commit needs to finish only before step k+1's commit (or
             # the terminal meta update) — enforced by _flush_write below
@@ -1122,16 +970,7 @@ class CrawlEngine:
             # heavy (page_text fan-out), so there it starts immediately
             # and overlaps the advance as well.
             small_step = n_pending <= cfg.lookup_pushdown_threshold
-            if _seq_tail:
-                # measurement mode: serialize advance before write to see
-                # the uncontended cost of each (throwaway diagnostics;
-                # write-before-advance would deadlock — the manifest meta
-                # waits on the advance Observation for n_new)
-                adv_t.start()
-                adv_t.join()
-                wr_t.start()
-                small_step = False
-            elif not small_step:
+            if not small_step:
                 wr_t.start()
             _mark("state_write")
             adv_t.join()
@@ -1144,12 +983,9 @@ class CrawlEngine:
             n_pending = adv["n_pending"]
             n_new = adv["n_new"]
             next_seq += n_new
-            # (this step's bloom merge started at the parse barrier's end
-            # and has been overlapping the advance + write;
-            # _flush_bloom_pending joins it before the next probe)
             # caches stay alive until the write flush (the write scans
             # parsed for updates/lineage/page_text and new_rows for the
-            # table write; the bloom merge scans new_rows too)
+            # table write)
             self._write_pending = (
                 wr_t, wr_state, step, commit,
                 (tagged, parsed, new_rows, updates),
@@ -1162,23 +998,8 @@ class CrawlEngine:
                 print(f"[profile] step {step}: {phases}", file=sys.stderr)
 
         # settle any write still in flight (max_supersteps exit path — the
-        # n_pending==0 branch already flushed) before joining bloom merges
+        # n_pending==0 branch already flushed)
         _flush_write()
-        # join any background bloom merge started on the final iteration so
-        # its Spark jobs are not still running during spark.stop(); merge
-        # errors are swallowed on this terminal path — the bloom is rebuilt
-        # from the committed frontier on the next run(), so no state is lost
-        t_term = time.monotonic()
-        for t, _state in self._bloom_pending:
-            t.join()
-        self._bloom_pending = []
-        if cfg.profile:
-            import sys
-
-            print(
-                f"[profile] terminal_bloom_join={time.monotonic()-t_term:.1f}s",
-                file=sys.stderr,
-            )
 
         return self._result(frontier, metrics_rows, lineage_paths, text_paths,
                             steps_run, latest)

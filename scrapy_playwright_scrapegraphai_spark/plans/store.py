@@ -130,8 +130,6 @@ class SnapshotStore:
                 shutil.rmtree(path)
             elif name.startswith("manifest_") and name.endswith(".json"):
                 os.remove(path)
-            elif name == "bloom_shards.bin":  # persisted seen-set shards
-                os.remove(path)
         return counts
 
     def latest_step(self) -> int | None:

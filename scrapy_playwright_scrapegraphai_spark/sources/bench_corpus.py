@@ -19,6 +19,7 @@ without changing any page's bytes.
 
 from __future__ import annotations
 
+import itertools
 import os
 import random
 
@@ -73,6 +74,8 @@ def generate_bench_corpus(
         for h in range(n_hosts)
     }
     total = sum(host_pages.values())
+    # host_start[h]: pages of every host before h (warc_ts offset base)
+    host_start = list(itertools.accumulate(host_pages.values(), initial=0))
     # warm-up corpus: a SMALL synthetic hub (page 0) + pages 1-3 per host
     # (pages 1-3 byte-identical to the main corpus rows). A micro-crawl
     # over it in the same JVM compiles every superstep plan shape
@@ -133,7 +136,7 @@ def generate_bench_corpus(
         parts.append("</body></html>")
         # warc_ts: global generation-order second offset (host blocks,
         # hub first within each) — same clock semantics as before
-        ts = sum(host_pages[hh] for hh in range(h)) + j
+        ts = host_start[h] + j
         return (
             f"https://{host}/page/{j}",
             epoch + dt.timedelta(seconds=ts),

@@ -1,9 +1,14 @@
-"""One profiled 8-core crawl leg: generates the bench corpus if absent,
-then runs bench.crawl_run(8) with SPARK_GRAFT_PROFILE=1 so the per-phase
-seed-superstep breakdown (the round-5 ≤5 s target, VERDICT r4 task #2)
-prints to stderr. Not part of the bench artifact — a developer loop tool.
+"""One profiled crawl leg, for the developer loop (not part of any bench
+artifact).
+
+Generates the bench corpus if absent, then runs ``bench.py --crawl-run
+CORES`` (CORES = first argument, default 8) as a child process with
+``SPARK_GRAFT_PROFILE=1`` and a 10 s warm-up rest unless the caller set
+them. The child's per-phase superstep breakdown prints to stderr, and its
+result line (``CRAWLJSON:{...}``) to stdout; the exit code is the child's.
+
+    python scripts/profile_seed_step.py [CORES]
 """
-import json
 import os
 import subprocess
 import sys

@@ -38,14 +38,10 @@ def oracle_result(corpus):
     )
 
 
-@pytest.fixture(scope="module", params=["bloom", "exact"])
+@pytest.fixture(scope="module", params=["exact"])
 def engine_result(request, spark, corpus_spark, tmp_path_factory):
     pages_df, seeds_df, robots_df = corpus_spark
-    cfg = CrawlConfig(
-        superstep_seconds=SS_SECONDS,
-        use_bloom=(request.param == "bloom"),
-        expected_urls=20_000,
-    )
+    cfg = CrawlConfig(superstep_seconds=SS_SECONDS)
     ckpt = str(tmp_path_factory.mktemp(f"ckpt_{request.param}"))
     engine = CrawlEngine(spark, pages_df, seeds_df, robots_df, ckpt, cfg)
     return engine.run()
@@ -334,7 +330,7 @@ def test_normalize_mode_canonicalized_ingestion(spark, tmp_path):
 
     result = CrawlEngine(
         spark, pages_df, seeds_df, robots_df, str(tmp_path / "ckpt"),
-        CrawlConfig(superstep_seconds=SS_SECONDS, expected_urls=20_000),
+        CrawlConfig(superstep_seconds=SS_SECONDS),
     ).run()
 
     oracle = oracle_crawl(

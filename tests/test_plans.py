@@ -204,7 +204,7 @@ def test_point_lookup_batch_above_parquet_in_pushdown_cap(spark, tmp_path):
     robots = spark.createDataFrame(
         [tuple(r.values()) for r in robots_rows], ROBOTS_DDL
     )
-    cfg = CrawlConfig(superstep_seconds=1e6, expected_urls=10_000)
+    cfg = CrawlConfig(superstep_seconds=1e6)
     # the step-2 batch ((pages_per_host - 1) * n_hosts = 2552 pending
     # urls) sits strictly between the pushdown cap and the lookup
     # threshold — the window where the old code crashed the JVM

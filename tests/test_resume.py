@@ -25,7 +25,7 @@ def _engine(spark, corpus_spark, ckpt):
     pages, seeds, robots = corpus_spark
     return CrawlEngine(
         spark, pages, seeds, robots, ckpt,
-        CrawlConfig(superstep_seconds=SS, expected_urls=20_000),
+        CrawlConfig(superstep_seconds=SS),
     )
 
 
@@ -119,43 +119,52 @@ def test_store_reset_truncates_all_state(spark, corpus_spark, tmp_path):
 
 
 def test_bloom_persisted_and_loaded_on_resume(spark, corpus_spark, tmp_path):
-    """Resume loads the persisted bloom shards (O(shards) driver IO)
-    instead of rebuilding from the frontier, with identical results; a
-    missing/corrupt file falls back to the exact rebuild."""
+    """Checkpoints written before the seen check became the exact
+    anti-join alone also hold a persisted ``bloom_shards.bin``. Resume
+    from such a checkpoint (here with a corrupt file) must neither read
+    nor rewrite it, and must end equal to an uninterrupted run."""
     import os
 
     full = _engine(spark, corpus_spark, str(tmp_path / "bloomfull")).run()
 
     ckpt = str(tmp_path / "bloomres")
-    eng = _engine(spark, corpus_spark, ckpt)
-    eng.run(max_supersteps=2)  # incomplete run
-    assert eng._bloom_source == "fresh"
-    assert os.path.exists(eng._bloom_path())  # saved by the merge thread
-
-    # corrupt file → resume must fall back to the exact rebuild, with
-    # identical final state (the bloom is a prefilter only)
-    with open(eng._bloom_path(), "wb") as fh:
+    _engine(spark, corpus_spark, ckpt).run(max_supersteps=2)  # incomplete run
+    stale = os.path.join(ckpt, "bloom_shards.bin")
+    with open(stale, "wb") as fh:
         fh.write(b"garbage")
-    eng2 = _engine(spark, corpus_spark, ckpt)
-    r2 = eng2.run()
-    assert eng2._bloom_source == "rebuilt"
-    assert _key(r2.frontier) == _key(full.frontier)
+    resumed = _engine(spark, corpus_spark, ckpt).run()
+    assert resumed.resumed_from == 2
+    assert _key(resumed.frontier) == _key(full.frontier)
+    with open(stale, "rb") as fh:
+        assert fh.read() == b"garbage"
 
 
 def test_bloom_gap_merge_on_mid_run_resume(spark, corpus_spark, tmp_path):
-    """Kill after superstep 1 (bloom saved at step 1), resume to
-    completion: the loaded shards are topped up with later steps' deltas
-    and the final state equals an uninterrupted run."""
-    ckpt_a = str(tmp_path / "full")
-    full = _engine(spark, corpus_spark, ckpt_a).run()
+    """Kill after superstep 1, resume to completion: the final state
+    equals an uninterrupted run. (The name is kept from when resume also
+    topped up persisted bloom shards with the later steps' deltas; the
+    seen check is now the exact anti-join and has no such state.)"""
+    full = _engine(spark, corpus_spark, str(tmp_path / "full")).run()
 
-    ckpt_b = str(tmp_path / "killed")
-    eng1 = _engine(spark, corpus_spark, ckpt_b)
-    eng1.run(max_supersteps=1)  # "killed" after step 1; bloom file at step 1
-    eng2 = _engine(spark, corpus_spark, ckpt_b)
-    resumed = eng2.run()
-    assert eng2._bloom_source == "checkpoint"
+    ckpt = str(tmp_path / "killed")
+    _engine(spark, corpus_spark, ckpt).run(max_supersteps=1)  # "killed"
+    resumed = _engine(spark, corpus_spark, ckpt).run()
+    assert resumed.resumed_from == 1
     assert _key(resumed.frontier) == _key(full.frontier)
+
+
+def test_finished_checkpoint_holds_only_manifests_and_steps(spark, corpus_spark, tmp_path):
+    """A finished checkpoint dir holds the snapshot commits alone: one
+    manifest and one step directory per committed step, nothing else."""
+    import os
+
+    ckpt = str(tmp_path / "only")
+    done = _engine(spark, corpus_spark, ckpt).run()
+    n = done.supersteps_run + 1  # + step 0
+    assert sorted(os.listdir(ckpt)) == sorted(
+        [f"manifest_{k}.json" for k in range(n)]
+        + [f"step={k}" for k in range(n)]
+    )
 
 
 def test_fresh_start_wipes_stale_higher_steps(spark, corpus_spark, tmp_path):
@@ -173,13 +182,13 @@ def test_fresh_start_wipes_stale_higher_steps(spark, corpus_spark, tmp_path):
     one_seed = seeds.filter(F.col("url_seed_root_id") == 1)
     eng = CrawlEngine(
         spark, pages, one_seed, robots, ckpt,
-        CrawlConfig(superstep_seconds=SS, expected_urls=20_000),
+        CrawlConfig(superstep_seconds=SS),
     )
     fresh = eng.run(resume=False)
     assert store.latest_step() < old_latest  # stale manifests are gone
     resumed = CrawlEngine(
         spark, pages, one_seed, robots, ckpt,
-        CrawlConfig(superstep_seconds=SS, expected_urls=20_000),
+        CrawlConfig(superstep_seconds=SS),
     ).run()
     assert resumed.supersteps_run == 0  # fresh run had completed
     assert _key(resumed.frontier) == _key(fresh.frontier)

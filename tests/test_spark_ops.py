@@ -363,8 +363,10 @@ def test_bloom_shard_local_probe_matches_broadcast(spark):
 
 
 def test_engine_shard_local_bloom_equals_exact(spark, tmp_path):
-    """Forcing the partition-local bloom probe (broadcast budget 0) must
-    leave the crawl result byte-identical to the exact no-bloom path."""
+    """The engine's seen check is the exact anti-join alone: bloom knobs
+    that would force the standalone operator onto its partition-local
+    probe (broadcast budget 0) leave the crawl result byte-identical, and
+    that probe, sized by the same knobs, misses none of the crawled URLs."""
     import tempfile
 
     from scrapy_playwright_scrapegraphai_spark.plans.driver import (
@@ -379,20 +381,28 @@ def test_engine_shard_local_bloom_equals_exact(spark, tmp_path):
     corpus = generate_corpus(n_hosts=5, pages_per_host=8, seed=11)
     pages, seeds, robots = corpus_to_spark(spark, corpus)
 
-    def run(**kw):
-        eng = CrawlEngine(
-            spark, pages, seeds, robots, tempfile.mkdtemp(),
-            CrawlConfig(superstep_seconds=9.0, **kw),
-        )
-        r = eng.run()
-        return sorted(
+    def run(cfg):
+        r = CrawlEngine(spark, pages, seeds, robots, tempfile.mkdtemp(), cfg).run()
+        return r.frontier, sorted(
             (x["discovery_seq"], x["url"], x["url_state"], x["superstep"])
             for x in r.frontier.collect()
         )
 
-    exact = run(use_bloom=False)
-    shard_local = run(use_bloom=True, bloom_broadcast_max_bytes=0)
+    _, exact = run(CrawlConfig(superstep_seconds=9.0))
+    shard_cfg = CrawlConfig(
+        superstep_seconds=9.0, bloom_shards=4, expected_urls=64,
+        bloom_broadcast_max_bytes=0,
+    )
+    frontier, shard_local = run(shard_cfg)
     assert exact == shard_local
+
+    bloom = BloomShards.sized_for(
+        shard_cfg.expected_urls, num_shards=shard_cfg.bloom_shards
+    )
+    bloom.add_df(frontier.select("url"))
+    flags = bloom.with_maybe_flag_shard_local(frontier.select("url")).collect()
+    assert len(flags) == len(exact)
+    assert all(r["_maybe"] for r in flags)
 
 
 def test_native_robots_verdict_matches_udf_on_ascii(spark):
@@ -605,6 +615,19 @@ def test_robots_dim_profile_is_aggregate_not_collect(spark):
     assert robots_dim_profile(null_arrays) == (True, 1)
     empty = _robots_df(spark, [])
     assert robots_dim_profile(empty) == (True, 0)
+
+
+def test_robots_dim_profile_null_pattern_element_is_not_regex_free(spark):
+    """A NULL element inside a pattern array is a malformed dim: it must
+    keep the rules off the native substring path, not read as clean."""
+    from scrapy_playwright_scrapegraphai_spark.operators.politeness import (
+        robots_dim_profile,
+    )
+
+    null_allow = _robots_df(spark, [("h1.t", ["/ok/", None], ["/private/"], 2.0)])
+    assert robots_dim_profile(null_allow) == (False, 1)
+    null_deny = _robots_df(spark, [("h1.t", ["/ok/"], [None, "/private/"], 2.0)])
+    assert robots_dim_profile(null_deny) == (False, 1)
 
 
 def test_robots_broadcast_gate_engine_equality(spark):

@@ -214,7 +214,6 @@ def crawl_run(cores: int) -> dict:
     cfg = CrawlConfig(
         superstep_seconds=1e6,  # politeness budget ≫ frontier → max admission
         expected_urls=2_000_000,
-        seq_mode="ranged",
         profile=os.environ.get("SPARK_GRAFT_PROFILE", "") == "1",
     )
 
@@ -238,8 +237,7 @@ def crawl_run(cores: int) -> dict:
     # corpus); only the tiny updates-CASE subtree differs from the timed
     # crawl's plans, everything else matches literal-for-literal
     warm_cfg = CrawlConfig(
-        superstep_seconds=1e6, expected_urls=2_000_000, seq_mode="ranged",
-        retry_times=0,
+        superstep_seconds=1e6, expected_urls=2_000_000, retry_times=0,
     )
     warm_ckpt = tempfile.mkdtemp(prefix=f"sps_warm_ckpt_{cores}_", dir=BENCH_TMP)
     warm_pages = spark.read.parquet(warm_corpus_path(CORPUS_PATH))
@@ -251,8 +249,10 @@ def crawl_run(cores: int) -> dict:
     # point-lookup pays ~2 s of one-time per-FILE metadata parse — a
     # fixed, core-count-independent cost that measures cold caches, not
     # the engine (a steady-state cluster crawl has table metadata hot; cf.
-    # CrawlConfig.prewarm_pages_scan). The sentinel prunes every data
-    # page, so nothing is decoded and the burn is ~2 s of footer parse.
+    # the engine's own background prewarm at run() start — run here before
+    # the timer so none of it overlaps the timed leg's first superstep).
+    # The sentinel prunes every data page, so nothing is decoded and the
+    # burn is ~2 s of footer parse.
     pages.select("url", "html").filter(
         F.col("url").isin(["~prewarm~sentinel~"])
     ).count()

@@ -85,7 +85,7 @@ def matches_pattern_udf(
     """(url, patterns array) → dual substring/regex match (url_utils.py:14-24).
 
     Invalid-regex rows yield False here (row-granular use); page-granular
-    abort semantics live in ``expand_pages``/``classify_links``.
+    abort semantics live in ``parse_pages`` (via ``kernels.classify_links``).
     """
     import re
 
@@ -118,105 +118,6 @@ def robots_allows_udf(
                 for u, a, d in zip(urls, allows, denies)
             ]
         )
-
-
-# --- page expansion: extract + classify in ONE Arrow pass -------------------
-
-# Output schema of expand_pages (child-link rows).
-EXPANDED_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("category", StringType()),
-        StructField("url_type", IntegerType()),
-        StructField("depth", IntegerType()),
-        StructField("max_depth", IntegerType()),
-        StructField("target_patterns", ArrayType(StringType())),
-        StructField("seed_pattern", StringType()),
-        StructField("is_target", BooleanType()),
-        StructField("parent_url", StringType()),
-        StructField("parent_seq", LongType()),
-        StructField("item_seq", IntegerType()),
-        StructField("root_seed_id", IntegerType()),
-        StructField("found_count", IntegerType()),
-    ]
-)
-
-_EXPAND_IN_COLS = [
-    "url",
-    "category",
-    "url_type",
-    "depth",
-    "max_depth",
-    "target_patterns",
-    "seed_pattern",
-    "html",
-    "discovery_seq",
-    "root_seed_id",
-]
-
-
-def expand_pages(fetched: DataFrame) -> DataFrame:
-    """Fetched frontier pages → classified child-link rows.
-
-    One ``mapInPandas`` pass fuses link extraction
-    (frontier_spider.py:186-212), validity filtering (url_utils.py:5-11)
-    and target/seed classification with depth gating
-    (crawl_manager_utils.py:18-125). Fusing keeps the huge intermediate
-    found-links arrays inside the Python worker instead of shipping them
-    through the JVM for a posexplode — at 10^10-URL scale that array
-    shuffle would dominate.
-
-    Input columns: url, category, url_type, depth, max_depth,
-    target_patterns, seed_pattern, html, discovery_seq, root_seed_id.
-    Output: EXPANDED_SCHEMA; ``item_seq`` preserves the reference's
-    yielded-item order (targets in link order, then seeds), ``found_count``
-    is len(found_links) for lineage metrics (logging_utils.py:93-122).
-    """
-
-    names = [f.name for f in EXPANDED_SCHEMA.fields]
-
-    def _expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # columnar accumulation: per-page extend of plain lists — no
-            # per-link dict construction (the hot path at 10^10 links)
-            cols: dict[str, list] = {n: [] for n in names}
-            for r in pdf.itertuples(index=False):
-                if r.html is None:
-                    continue
-                found = kernels.extract_links(r.html, r.url)
-                patterns = (
-                    list(r.target_patterns) if r.target_patterns is not None else []
-                )
-                items = kernels.classify_links(
-                    r.url,
-                    found,
-                    int(r.url_type),
-                    patterns,
-                    r.seed_pattern,
-                    int(r.depth),
-                    int(r.max_depth),
-                )
-                if not items:
-                    continue
-                n = len(items)
-                cols["url"].extend(item.url for item in items)
-                cols["category"].extend([r.category] * n)
-                cols["url_type"].extend([int(r.url_type)] * n)
-                cols["depth"].extend(item.depth for item in items)
-                cols["max_depth"].extend([int(r.max_depth)] * n)
-                cols["target_patterns"].extend([patterns] * n)
-                cols["seed_pattern"].extend([r.seed_pattern] * n)
-                cols["is_target"].extend(item.is_target for item in items)
-                cols["parent_url"].extend([r.url] * n)
-                cols["parent_seq"].extend([int(r.discovery_seq)] * n)
-                cols["item_seq"].extend(item.item_seq for item in items)
-                cols["root_seed_id"].extend([int(r.root_seed_id)] * n)
-                cols["found_count"].extend([len(found)] * n)
-            yield pd.DataFrame(cols) if cols["url"] else pd.DataFrame(
-                {n: pd.Series(dtype="object") for n in names}
-            )
-
-    return fetched.select(*_EXPAND_IN_COLS).mapInPandas(_expand, EXPANDED_SCHEMA)
 
 
 # --- fused per-page parse: links + classification + text in ONE pass --------
@@ -257,6 +158,19 @@ PARSED_SCHEMA = StructType(
         ),
     ]
 )
+
+_PARSE_IN_COLS = [
+    "url",
+    "category",
+    "url_type",
+    "depth",
+    "max_depth",
+    "target_patterns",
+    "seed_pattern",
+    "html",
+    "discovery_seq",
+    "root_seed_id",
+]
 
 
 def parse_pages(fetched: DataFrame) -> DataFrame:
@@ -310,11 +224,19 @@ def parse_pages(fetched: DataFrame) -> DataFrame:
                 {n: pd.Series(dtype="object") for n in names}
             )
 
-    return fetched.select(*_EXPAND_IN_COLS).mapInPandas(_parse, PARSED_SCHEMA)
+    return fetched.select(*_PARSE_IN_COLS).mapInPandas(_parse, PARSED_SCHEMA)
 
 
 def explode_parsed(parsed: DataFrame) -> DataFrame:
-    """parse_pages output → child-link rows (EXPANDED_SCHEMA + partition_id).
+    """parse_pages output → one row per classified child link.
+
+    Output columns: url, category, url_type, depth, max_depth,
+    target_patterns, seed_pattern, is_target, parent_url (the page url),
+    parent_seq (the page's discovery_seq), item_seq, root_seed_id,
+    found_count, partition_id. ``item_seq`` preserves the reference's
+    yielded-item order (targets in link order, then seeds);
+    ``found_count`` is the page's len(found_links) for lineage metrics
+    (logging_utils.py:93-122).
 
     The explode is native columnar JVM work; ``partition_id`` (per-
     partition lineage grain) is taken on the parsed-page rows.

@@ -13,12 +13,12 @@ Replicates the reference's two dedup layers set-oriented:
 Discovery sequence: the reference's BIGSERIAL ``id`` (schema.sql:3)
 doubles as FIFO scheduling order (queries.sql:62 ORDER BY insert_date).
 Spark's ``monotonically_increasing_id`` is neither dense nor stable, so
-we assign an explicit dense sequence. Two implementations:
-- 'window': one global window — simple, fine for politeness-bounded
-  superstep batches in tests.
-- 'ranged': repartitionByRange + per-partition row_number + partition
-  offsets — the scale path; no single-partition global sort (partition i
-  holds strictly smaller keys than i+1, so pid order IS global order).
+``assign_global_seq`` assigns an explicit dense sequence as one lazy
+plan: rows are bucketed on the VALUE of the leading order key (monotone,
+so bucket order is global order), each bucket is ranked by a window, and
+per-bucket offsets come from a running sum over the tiny bucket-count
+aggregate, broadcast-joined back — no single-partition global sort, no
+driver collect.
 """
 
 from __future__ import annotations
@@ -139,119 +139,71 @@ def anti_join_seen(
 def assign_global_seq(
     df: DataFrame,
     order_cols: list[str],
-    start: int = 0,
-    mode: str = "ranged",
+    start: int,
+    key_bound: int,
+    mode: str = "plan",
     num_partitions: int | None = None,
-    key_bound: int | None = None,
-    with_count: bool = False,
 ) -> DataFrame:
     """Add dense ``discovery_seq`` = start + (rank in global order) - 1.
 
-    'ranged' mode avoids the single-partition global window by bucketing
-    on the VALUE of the leading order key: ``bucket = key*B div bound``
-    is monotone in the key, so (bucket asc, rank-within-bucket) is the
-    global order; per-bucket offsets come from a tiny B-row count
-    collect. Value-derived buckets are invariant to parallelism, AQE
-    coalescing, and physical partitioning — ``spark_partition_id`` is
-    deliberately NOT used (post-shuffle partition ids can differ between
-    the count pass and the rank pass under AQE, which would corrupt the
-    offsets). Order keys must be unique (ours: (parent_seq, item_seq))
-    and the leading key non-negative.
+    Buckets on the VALUE of the leading order key: ``bucket = key*B div
+    key_bound`` is monotone in the key, so (bucket asc, rank-within-
+    bucket) is the global order. Value-derived buckets are invariant to
+    parallelism, AQE coalescing, and physical partitioning —
+    ``spark_partition_id`` is deliberately NOT used (post-shuffle
+    partition ids can differ between the count subtree and the rank
+    subtree under AQE, which would corrupt the offsets). Order keys must
+    be unique (ours: (parent_seq, item_seq)) and the leading key
+    non-negative and below ``key_bound`` (exclusive).
 
-    ``key_bound``: exclusive upper bound of the leading key if the
-    caller knows it (skips one agg job). The input is localCheckpoint-ed
-    so the expensive upstream (extract UDF, dedup, anti-join) executes
-    exactly once across the count and rank passes.
+    The whole assignment is ONE lazy plan: no driver collect and no
+    checkpoint barrier. Caller contract: ``df``'s lineage must already
+    be deterministic (materialized upstream) because the offsets subtree
+    and the rank subtree each evaluate it.
+
+    ``mode`` accepts only ``"plan"`` (the one algorithm).
     """
+    if mode != "plan":
+        raise ValueError(f"assign_global_seq: unknown mode {mode!r}")
     cols = [F.col(c) for c in order_cols]
-    if mode == "window":
-        w = Window.orderBy(*cols)
-        out = df.withColumn(
-            "discovery_seq", (F.row_number().over(w) + F.lit(start - 1)).cast("long")
-        )
-        return (out, out.count()) if with_count else out
-
     B = num_partitions or 2 * df.sparkSession.sparkContext.defaultParallelism
-
-    if mode == "plan":
-        # Zero-job variant: per-bucket offsets come from a running-sum
-        # window over the tiny B-row count aggregate, broadcast-joined
-        # back — the whole assignment is ONE lazy plan, no driver collect
-        # and no checkpoint barrier. Caller contract: ``df``'s lineage
-        # must already be deterministic (materialized upstream) because
-        # the offsets subtree and the rank subtree each evaluate it, and
-        # ``key_bound`` must be provided (no agg job to infer it).
-        assert key_bound is not None, "mode='plan' requires key_bound"
-        kb = max(int(key_bound), 1)
-        src = df.withColumn(
-            "_bkt",
-            F.expr(f"CAST(({order_cols[0]} * {B}) DIV {kb} AS INT)"),
-        )
-        # explicit user repartition on the bucket key: the rank window's
-        # exchange is otherwise sized by AQE, and with size-based
-        # coalescing a few-hundred-thousand-row superstep batch (~20 MB)
-        # collapses to ONE reducer — the whole window + every downstream
-        # projection/UDF then runs single-threaded (event-log profiled:
-        # a 5 s serial stage in the frontier advance). A user-specified
-        # width is preserved by AQE, the window reuses the partitioning
-        # (no second exchange), and the counts aggregate below rides the
-        # same exchange with a map-side partial. B buckets ≍ B partitions
-        # scales with cluster width.
-        src = src.repartition(B, "_bkt")
-        counts = src.groupBy("_bkt").agg(F.count("*").alias("_cnt"))
-        w_off = (
-            Window.orderBy("_bkt")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = counts.select(
-            "_bkt",
-            F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_off"),
-        )
-        w = Window.partitionBy("_bkt").orderBy(*cols)
-        out = (
-            src.join(F.broadcast(offsets), on="_bkt")
-            .withColumn("_rn", F.row_number().over(w))
-            .withColumn(
-                "discovery_seq",
-                (F.lit(start) + F.col("_off") + F.col("_rn") - F.lit(1)).cast(
-                    "long"
-                ),
-            )
-            .drop("_bkt", "_rn", "_off")
-        )
-        return (out, None) if with_count else out
-
-    src = df.localCheckpoint(eager=True)
-    if key_bound is None:
-        key_bound = (src.agg(F.max(cols[0])).collect()[0][0] or 0) + 1
-    key_bound = max(int(key_bound), 1)
-    src = src.withColumn(
+    kb = max(int(key_bound), 1)
+    src = df.withColumn(
         "_bkt",
-        F.expr(f"CAST(({order_cols[0]} * {B}) DIV {key_bound} AS INT)"),
+        F.expr(f"CAST(({order_cols[0]} * {B}) DIV {kb} AS INT)"),
     )
-    counts = {r["_bkt"]: r["cnt"] for r in
-              src.groupBy("_bkt").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = {}, start
-    for bkt in sorted(counts):
-        offsets[bkt] = acc
-        acc += counts[bkt]
-    if offsets:
-        offmap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-        off_expr = offmap[F.col("_bkt")]
-    else:  # empty batch — any literal works, no rows exist
-        off_expr = F.lit(start)
+    # explicit user repartition on the bucket key: the rank window's
+    # exchange is otherwise sized by AQE, and with size-based
+    # coalescing a few-hundred-thousand-row superstep batch (~20 MB)
+    # collapses to ONE reducer — the whole window + every downstream
+    # projection/UDF then runs single-threaded (event-log profiled:
+    # a 5 s serial stage in the frontier advance). A user-specified
+    # width is preserved by AQE, the window reuses the partitioning
+    # (no second exchange), and the counts aggregate below rides the
+    # same exchange with a map-side partial. B buckets ≍ B partitions
+    # scales with cluster width.
+    src = src.repartition(B, "_bkt")
+    counts = src.groupBy("_bkt").agg(F.count("*").alias("_cnt"))
+    w_off = (
+        Window.orderBy("_bkt")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = counts.select(
+        "_bkt",
+        F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_off"),
+    )
     w = Window.partitionBy("_bkt").orderBy(*cols)
-    out = (
-        src.withColumn("_rn", F.row_number().over(w))
+    return (
+        src.join(F.broadcast(offsets), on="_bkt")
+        .withColumn("_rn", F.row_number().over(w))
         .withColumn(
             "discovery_seq",
-            (off_expr + F.col("_rn") - F.lit(1)).cast("long"),
+            (F.lit(start) + F.col("_off") + F.col("_rn") - F.lit(1)).cast(
+                "long"
+            ),
         )
-        .drop("_bkt", "_rn")
+        .drop("_bkt", "_rn", "_off")
     )
-    # the bucket-count pass already totalled the batch — callers needing
-    # the row count (superstep metrics / next_seq advance) get it free
-    return (out, acc - start) if with_count else out
 
 
 def finalize_new_rows(new: DataFrame, superstep: int) -> DataFrame:

@@ -21,9 +21,24 @@ no prefilter could spare that scan. The bloom shards of
 does not call them.
 
 The reference's recursion (frontier_spider.py:246-260 re-yields Requests
-for seeds below max_depth) becomes the driver-side ``while`` loop; its
-termination condition (Scrapy scheduler drained) becomes "no pending
-fetchable rows".
+for seeds below max_depth) becomes the driver-side ``while`` loop in
+``CrawlEngine.run``; its termination condition (Scrapy scheduler
+drained) becomes "no pending fetchable rows". Each superstep phase
+(admit, fetch, expand, updates, lineage, advance, commit) is its own
+method.
+
+Concurrency model: ``run()`` owns ONE ``ThreadPoolExecutor``, opened in
+a ``with`` block, so no background job of a run outlives it. Its tasks
+are the pages-scan prewarm (once per run), step k's politeness cache
+fill (overlaps plan building), step k's frontier advance and step k's
+snapshot write (they overlap each other; a politeness-small step starts
+its write only after the advance). The write's manifest waits for the
+advance future (it carries n_new), and the main thread joins the write
+at two points: write k before write k+1 is submitted, and the last
+write before the terminal ``done`` update. A background error surfaces
+on the main thread at the next join, and the executor's exit settles
+every task before ``run()`` raises it. A crash while write k is in
+flight loses step k only; resume folds the committed deltas ≤ k-1.
 
 Scale notes (10^10-URL design point):
 - every join in the loop is either broadcast (admitted batch, robots) or
@@ -53,10 +68,14 @@ per-superstep canonicalization pass.
 
 from __future__ import annotations
 
+import sys
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import explode_parsed, main_domain_udf, parse_pages
@@ -68,7 +87,7 @@ from ..operators.frontier import (
     finalize_new_rows,
     first_writer_dedup,
 )
-from .store import SnapshotStore
+from .store import COMPATIBLE_SNAPSHOT_FORMATS, SnapshotStore
 
 # Largest In(url, [...]) list forwarded to the parquet reader as an exact
 # pushed filter. parquet-mr represents a pushed In as a nested binary
@@ -88,6 +107,14 @@ from .store import SnapshotStore
 # pushed min/max range filter.
 PARQUET_IN_PUSHDOWN_SAFE_MAX = 384
 
+# Threads of the run's executor: the most tasks ever in flight — the
+# prewarm, step k's politeness fill, step k's advance and the write of
+# step k-1 (or k) — so no task ever queues for a thread. The write task
+# blocks on the advance future, so a smaller pool can deadlock (a write
+# holding the last thread while the advance it waits for is queued) or
+# serialize work the schedule overlaps.
+_BACKGROUND_THREADS = 4
+
 METRICS_DDL = (
     "superstep int, n_work long, n_admitted long, n_denied long, "
     "n_deferred long, n_fetched_ok long, n_fetch_failed long, n_new long, "
@@ -98,6 +125,13 @@ LINEAGE_DDL = (
     "superstep int, partition_id int, root_seed_id int, category string, "
     "target_urls_found long, seed_urls_found long, total_urls_found long"
 )
+
+
+def _pending_work() -> Column:
+    """Fetchable work: pending roots and pending non-target links."""
+    return (F.col("url_state") == "pending") & (
+        F.col("is_root") | ~F.col("is_target")
+    )
 
 
 @dataclass
@@ -113,7 +147,6 @@ class CrawlConfig:
     # politeness two-phase rank is priority-agnostic. The trailing
     # discovery_seq keeps the order total ⇒ admission deterministic.
     order_cols: tuple = ("discovery_seq",)
-    seq_mode: str = "ranged"         # discovery_seq assignment strategy
     # bloom_shards, expected_urls and bloom_broadcast_max_bytes (below)
     # size the standalone seen-set operator (operators/seenset.py) for
     # callers that probe it; the engine no longer reads them
@@ -141,18 +174,6 @@ class CrawlConfig:
     # every executor. 100k rows ≈ tens of MB of patterns, the edge of
     # sensible broadcast on big-memory executors.
     robots_broadcast_max_rows: int = 100_000
-    # warm the pages-table scan machinery on a background thread at run()
-    # start: a zero-row pushed-down point probe parses every parquet
-    # footer + ColumnIndex and initializes the vectorized reader without
-    # decoding data (a lexically-out-of-range sentinel prunes every page).
-    # First touch of a large table otherwise costs seconds of one-time
-    # metadata parse INSIDE the first superstep's fetch barrier (measured
-    # 2.9 s cold vs 0.3 s warm for the seed point-lookup on the 1.5 GB
-    # bench corpus). This is the single-JVM analog of keeping table
-    # metadata caches hot (Iceberg manifest cache / FileStatusCache) in a
-    # long-running cluster crawl. coalesce(2) bounds the probe to two
-    # task slots so critical-path jobs are never starved behind it.
-    prewarm_pages_scan: bool = True
     profile: bool = False            # print per-phase wall times to stderr
 
 
@@ -164,6 +185,50 @@ class CrawlResult:
     supersteps_run: int = 0
     resumed_from: int | None = None
     extra: dict = field(default_factory=dict)
+
+
+@dataclass
+class _History:
+    """What the committed steps contribute to the result: one metrics row
+    each (from the manifest meta) and their lineage / page-text tables."""
+
+    metrics_rows: list = field(default_factory=list)
+    lineage_paths: list = field(default_factory=list)
+    text_paths: list = field(default_factory=list)
+
+    def add(self, manifest: dict) -> None:
+        self.metrics_rows.append(tuple(manifest["meta"]["metrics"]))
+        self.lineage_paths.append(manifest["tables"]["lineage"])
+        if "page_text" in manifest["tables"]:
+            self.text_paths.append(manifest["tables"]["page_text"])
+
+
+class _PhaseClock:
+    """Wall seconds per superstep phase: ``with clock("fetch_join"):``
+    adds the block's wall time to that phase. Background tasks time
+    their own phases on their step's clock; every phase name is written
+    by one thread only, so no update is lost. ``report`` prints the
+    ``[profile] <label>: <phase>=<s>s ...`` line when profiling is on."""
+
+    def __init__(self, label: str, enabled: bool):
+        self.label = label
+        self.enabled = enabled
+        self.seconds: dict[str, float] = {}
+
+    @contextmanager
+    def __call__(self, phase: str):
+        t = time.monotonic()
+        try:
+            yield
+        finally:
+            self.seconds[phase] = (
+                self.seconds.get(phase, 0.0) + time.monotonic() - t
+            )
+
+    def report(self) -> None:
+        if self.enabled:
+            phases = " ".join(f"{k}={v:.1f}s" for k, v in self.seconds.items())
+            print(f"[profile] {self.label}: {phases}", file=sys.stderr)
 
 
 class CrawlEngine:
@@ -188,11 +253,6 @@ class CrawlEngine:
         # whether the politeness join may force-broadcast it.
         self._native_robots, n_rules = politeness.robots_dim_profile(robots)
         self._broadcast_robots = n_rules <= self.cfg.robots_broadcast_max_rows
-        # in-flight background snapshot write (at most one): joined before
-        # the next step's write / the terminal meta update, where its
-        # manifest is folded into the bookkeeping and the step's caches
-        # released — see the _flush_write closure in run()
-        self._write_pending: tuple | None = None
         # the point-lookup fetch path pushes an In(url, [...]) predicate
         # with up to lookup_pushdown_threshold values into the parquet
         # scan; Spark only forwards exact In filters up to this conf
@@ -246,6 +306,41 @@ class CrawlEngine:
             .select(*FRONTIER_COLUMNS)
         )
 
+    def _bootstrap(self) -> tuple[DataFrame, int, int]:
+        """Fresh start: truncate the store and commit the step-0 base
+        frontier. Returns (frontier, next_seq, n_pending)."""
+        # truncate ALL existing state first. A fresh run into a
+        # populated dir (run(resume=False), or a dir from a different
+        # corpus/seed list) would otherwise leave higher-numbered
+        # manifests from the old run in place; a later resume would
+        # see the stale latest_step and fold deltas from two
+        # different runs into one corrupted frontier.
+        self.store.reset()
+        # ONE job bootstraps everything: the step-0 write materializes
+        # the seed frontier, and the Observation riding it yields both
+        # next_seq (max discovery_seq) and the initial pending-work
+        # count — no dedicated agg/count jobs before the loop.
+        obs = Observation("step0")
+        seeds = self._initial_frontier().observe(
+            obs,
+            F.max("discovery_seq").alias("max_seq"),
+            F.sum(F.when(_pending_work(), 1).otherwise(0)).alias("n_pending"),
+        )
+
+        def next_seq() -> int:
+            max_seq = obs.get["max_seq"]
+            return 0 if max_seq is None else max_seq + 1
+
+        # step 0 commits the full base frontier; every later step
+        # commits only deltas (updates + new_rows + lineage)
+        self.store.write_step(
+            0,
+            {"frontier": seeds.coalesce(1)},  # seed list — tiny
+            lambda: {"next_seq": next_seq(), "done": False},
+        )
+        frontier = self.store.read_table(self.spark, 0, "frontier")
+        return frontier, next_seq(), obs.get["n_pending"] or 0
+
     # -- delta fold (MERGE semantics; Iceberg stand-in) -------------------------
 
     @staticmethod
@@ -281,25 +376,34 @@ class CrawlEngine:
             .drop("_new_state", "_new_error", "_attempt_inc")
         )
 
-    def _rebuild(self, upto: int):
-        """Reconstruct (frontier, metrics_rows, lineage_paths) from the
-        step-0 base + the committed per-step deltas — the resume path.
+    def _resume_meta(self, step: int) -> dict:
+        """Manifest meta of the resume point ``step``; refuses a snapshot
+        format this engine cannot fold."""
+        manifest = self.store.read_manifest(step)
+        got = manifest.get("format", 1)
+        if got not in COMPATIBLE_SNAPSHOT_FORMATS:
+            raise ValueError(
+                f"checkpoint at {self.store.root} uses snapshot format "
+                f"{got}, this engine reads formats "
+                f"{sorted(COMPATIBLE_SNAPSHOT_FORMATS)}; delete the "
+                "checkpoint dir (or rerun with the matching engine "
+                "version) to proceed"
+            )
+        return manifest["meta"]
+
+    def _rebuild(self, upto: int) -> tuple[DataFrame, _History]:
+        """Reconstruct (frontier, history) from the step-0 base + the
+        committed per-step deltas — the resume path.
         The folded plan is localCheckpoint-ed so subsequent supersteps
         start from a materialized frontier, same as an unkilled run."""
         spark = self.spark
         frontier = self.store.read_table(spark, 0, "frontier")
-        metrics_rows: list[tuple] = []
-        lineage_paths: list[str] = []
-        text_paths: list[str] = []
+        hist = _History()
         for k in range(1, upto + 1):
-            man = self.store.read_manifest(k)
             frontier = self._apply_updates(
                 frontier, self.store.read_table(spark, k, "updates")
             ).unionByName(self.store.read_table(spark, k, "new_rows"))
-            metrics_rows.append(tuple(man["meta"]["metrics"]))
-            lineage_paths.append(man["tables"]["lineage"])
-            if "page_text" in man["tables"]:
-                text_paths.append(man["tables"]["page_text"])
+            hist.add(self.store.read_manifest(k))
         if upto > 0:
             # same width guarantee as the live advance: the folded MERGE
             # joins end in AQE-sized exchanges that size-based coalescing
@@ -308,24 +412,20 @@ class CrawlEngine:
             frontier = frontier.repartition(
                 2 * spark.sparkContext.defaultParallelism
             ).localCheckpoint(eager=True)
-        return frontier, metrics_rows, lineage_paths, text_paths
+        return frontier, hist
 
-    def _result(self, frontier, metrics_rows, lineage_paths, text_paths,
-                steps_run, resumed_from) -> CrawlResult:
+    def _result(self, frontier: DataFrame, hist: _History, steps_run: int,
+                resumed_from: int | None) -> CrawlResult:
         spark = self.spark
-        metrics = (
-            spark.createDataFrame(metrics_rows, METRICS_DDL)
-            if metrics_rows
-            else spark.createDataFrame([], METRICS_DDL)
-        )
+        metrics = spark.createDataFrame(hist.metrics_rows, METRICS_DDL)
         lineage = (
-            spark.read.parquet(*lineage_paths)
-            if lineage_paths
+            spark.read.parquet(*hist.lineage_paths)
+            if hist.lineage_paths
             else spark.createDataFrame([], LINEAGE_DDL)
         )
         return CrawlResult(
             frontier, metrics, lineage, steps_run, resumed_from=resumed_from,
-            extra={"page_text_paths": list(text_paths)},
+            extra={"page_text_paths": list(hist.text_paths)},
         )
 
     def page_text(self, result: "CrawlResult") -> DataFrame:
@@ -339,303 +439,306 @@ class CrawlEngine:
     # -- main loop ---------------------------------------------------------------
 
     def run(self, resume: bool = True, max_supersteps: int | None = None) -> CrawlResult:
-        spark, cfg = self.spark, self.cfg
+        """Crawl until no fetchable work is pending or ``max_supersteps``
+        supersteps have run, resuming from the latest committed step
+        unless ``resume`` is False. See the module docstring for the
+        concurrency model."""
+        cfg = self.cfg
         max_steps = max_supersteps or cfg.max_supersteps
-
-        _work_pred = (F.col("url_state") == "pending") & (
-            F.col("is_root") | ~F.col("is_target")
-        )
-
-        if cfg.prewarm_pages_scan:
-            import threading as _th
-
-            def _prewarm():
-                # advisory only — never fails or delays the crawl. '~'
-                # (0x7E) sorts above every scheme-prefixed URL, so page
-                # min/max stats prune all data pages: the job parses scan
-                # metadata and returns 0 rows.
-                try:
-                    spark.sparkContext.setJobDescription(
-                        "prewarm pages scan metadata"
-                    )
-                    self.pages.select("url", "html").filter(
-                        F.col("url").isin(["~prewarm~sentinel~"])
-                    ).coalesce(2).count()
-                except Exception:
-                    pass
-
-            _th.Thread(target=_prewarm, daemon=True).start()
-
         latest = self.store.latest_step() if resume else None
-        fresh_start = latest is None
-        if fresh_start:
-            # truncate ALL existing state first. A fresh run into a
-            # populated dir (run(resume=False), or a dir from a different
-            # corpus/seed list) would otherwise leave higher-numbered
-            # manifests from the old run in place; a later resume would
-            # see the stale latest_step and fold deltas from two
-            # different runs into one corrupted frontier.
-            self.store.reset()
+        meta = None if latest is None else self._resume_meta(latest)
+        if meta is not None and meta.get("done"):
+            return self._result(*self._rebuild(latest), 0, latest)
 
-            from pyspark.sql import Observation
+        steps_run, pending = 0, None
+        with ThreadPoolExecutor(max_workers=_BACKGROUND_THREADS) as pool:
+            self._submit(pool, "prewarm", latest or 0, self._prewarm)
+            if latest is None:
+                step, hist = 0, _History()
+                frontier, next_seq, n_pending = self._bootstrap()
+            else:
+                step, next_seq = latest, meta["next_seq"]
+                frontier, hist = self._rebuild(latest)
+                # a fresh start reads this count off the step-0 write's
+                # Observation, and every later step off the advance's;
+                # resume pays one explicit count
+                n_pending = frontier.filter(_pending_work()).count()
 
-            # ONE job bootstraps everything: the step-0 write materializes
-            # the seed frontier, and the Observation riding it yields both
-            # next_seq (max discovery_seq) and the initial pending-work
-            # count — no dedicated agg/count jobs before the loop.
-            obs0 = Observation("step0")
-            frontier = self._initial_frontier().observe(
-                obs0,
-                F.max("discovery_seq").alias("max_seq"),
-                F.sum(F.when(_work_pred, 1).otherwise(0)).alias("n_pending"),
-            )
-            step = 0
-            metrics_rows, lineage_paths, text_paths = [], [], []
-            boot: dict = {}
-
-            def _meta0() -> dict:
-                vals = obs0.get
-                boot["next_seq"] = (
-                    vals["max_seq"] if vals["max_seq"] is not None else -1
-                ) + 1
-                boot["n_pending"] = vals["n_pending"] or 0
-                return {"next_seq": boot["next_seq"], "done": False}
-
-            # step 0 commits the full base frontier; every later step
-            # commits only deltas (updates + new_rows + lineage)
-            self.store.write_step(
-                0,
-                {"frontier": frontier.coalesce(1)},  # seed list — tiny
-                _meta0,
-            )
-            next_seq = boot["next_seq"]
-            frontier = self.store.read_table(spark, 0, "frontier")
-        else:
-            step = latest
-            manifest = self.store.read_manifest(step)
-            from .store import COMPATIBLE_SNAPSHOT_FORMATS
-
-            got = manifest.get("format", 1)
-            if got not in COMPATIBLE_SNAPSHOT_FORMATS:
-                raise ValueError(
-                    f"checkpoint at {self.store.root} uses snapshot format "
-                    f"{got}, this engine reads formats "
-                    f"{sorted(COMPATIBLE_SNAPSHOT_FORMATS)}; delete the "
-                    "checkpoint dir (or rerun with the matching engine "
-                    "version) to proceed"
-                )
-            frontier, metrics_rows, lineage_paths, text_paths = self._rebuild(step)
-            next_seq = manifest["meta"]["next_seq"]
-            if manifest["meta"].get("done"):
-                return self._result(
-                    frontier, metrics_rows, lineage_paths, text_paths, 0, step
-                )
-
-        import sys
-
-        steps_run = 0
-
-        def _flush_write():
-            """Join the in-flight background snapshot write (if any),
-            re-raise its error, fold its committed manifest into the
-            bookkeeping lists, and release the step's caches. Called
-            before the next step's write, before the terminal meta
-            update, and after the loop — the points where the commit
-            ordering (manifest k before k+1 / before 'done') and the
-            cache lifetimes must be settled."""
-            if self._write_pending is None:
-                return
-            wt, wstate, wstep, wcommit, caches = self._write_pending
-            self._write_pending = None
-            wt.join()
-            if "err" in wstate:
-                raise wstate["err"]
-            metrics_rows.append(wcommit["metrics_row"])
-            tables = self.store.read_manifest(wstep)["tables"]
-            lineage_paths.append(tables["lineage"])
-            text_paths.append(tables["page_text"])
-            for df in caches:
-                df.unpersist()
-
-        def _mkphase():
-            state = {"last": time.monotonic(), "acc": {}}
-
-            def mark(name):
-                now = time.monotonic()
-                state["acc"][name] = state["acc"].get(name, 0.0) + now - state["last"]
-                state["last"] = now
-
-            return state, mark
-
-        # fresh start: the pending-work count already rode the step-0 write
-        # Observation; resume pays one explicit count. Every later iteration
-        # reads the count off the frontier-advance Observation instead of
-        # running a dedicated scan job.
-        n_pending = (
-            boot["n_pending"] if fresh_start
-            else frontier.filter(_work_pred).count()
-        )
-
-        while steps_run < max_steps:
-            t0 = time.monotonic()
-            _pstate, _mark = _mkphase()
-            work = frontier.filter(_work_pred)
-            if n_pending == 0:
-                _flush_write()  # manifest of the last step must exist
-                done_meta = dict(self.store.read_manifest(step)["meta"])
-                done_meta.update({"next_seq": next_seq, "done": True})
-                self.store.update_meta(step, done_meta)
-                if cfg.profile:
-                    print(
-                        f"[profile] term_check={time.monotonic()-t0:.1f}s",
-                        file=sys.stderr,
+            while steps_run < max_steps:
+                if n_pending == 0:
+                    clock = _PhaseClock("done", cfg.profile)
+                    with clock("term_check"):
+                        # the last step's manifest must exist first
+                        self._settle(pending, hist)
+                        pending = None
+                        last = self.store.read_manifest(step)["meta"]
+                        self.store.update_meta(
+                            step, {**last, "next_seq": next_seq, "done": True}
+                        )
+                    clock.report()
+                    break
+                step += 1
+                steps_run += 1
+                t0 = time.monotonic()
+                clock = _PhaseClock(f"step {step}", cfg.profile)
+                # a politeness-small step: point-lookup fetch, unsalted
+                # rank, one-file tables, write after the advance
+                small = n_pending <= cfg.lookup_pushdown_threshold
+                with clock("work_check"):
+                    work = frontier.filter(_pending_work())
+                with clock("politeness"):
+                    tagged, admitted, denied, obs_adm = self._admit(
+                        work, small, step
                     )
-                break
-            step += 1
-            steps_run += 1
-            _mark("work_check")
-
-            # W2 + J5: politeness admission & robots — ONE cached plan;
-            # admission metrics ride the plan as an Observation (collected
-            # as a side-effect of the first job that evaluates it — no
-            # dedicated count job)
-            from pyspark.sql import Observation
-
-            obs_adm = Observation(f"admission_{step}")
-            # small batches skip the salted two-phase rank (skew cannot
-            # bite; the extra exchange is pure fixed cost) — identical
-            # admission set either way
-            step_salt = (
-                1 if n_pending <= cfg.lookup_pushdown_threshold
-                else cfg.salt_shards
-            )
-            tagged = (
-                politeness.admit_tagged(
-                    work, self.robots, cfg.superstep_seconds, step_salt,
-                    order_cols=cfg.order_cols,
-                    native_robots=self._native_robots,
-                    broadcast_robots=self._broadcast_robots,
+                    # fill the politeness cache in the background: the
+                    # rank subtree (window + cache + Observation) would
+                    # otherwise evaluate serially inside the parse
+                    # barrier as the broadcast build of the admitted
+                    # side; overlapping it with the In-list collect and
+                    # plan building shaves its latency off the barrier's
+                    # critical path. Errors surface through the barrier
+                    # itself (it evaluates the same cached plan).
+                    self._submit(pool, "politeness", step, tagged.count)
+                with clock("fetch_join"):
+                    fetched = self._fetch(work, admitted, n_pending)
+                parsed, failed, new_rows, obs_ok = self._expand(
+                    clock, fetched, admitted, frontier, step, next_seq
                 )
-                .observe(
-                    obs_adm,
-                    F.count(F.lit(1)).alias("n_work"),
-                    F.sum(
-                        F.when(F.col("_disposition") == "admitted", 1).otherwise(0)
-                    ).alias("n_admitted"),
-                    F.sum(
-                        F.when(F.col("_disposition") == "denied", 1).otherwise(0)
-                    ).alias("n_denied"),
-                )
-                .cache()
-            )
-            admitted = tagged.filter(F.col("_disposition") == "admitted").drop(
-                "_disposition"
-            )
-            denied = tagged.filter(F.col("_disposition") == "denied").drop(
-                "_disposition"
-            )
-            # fill the politeness cache on a background thread: the rank
-            # subtree (window + cache + Observation) would otherwise
-            # evaluate serially inside the parse barrier as the broadcast
-            # build of the admitted side; overlapping it with the In-list
-            # collect and plan building below shaves its latency off the
-            # barrier's critical path. Errors surface through the barrier
-            # itself (it evaluates the same cached plan).
-            import threading
+                with clock("metrics_lineage"):
+                    updates = self._updates(parsed, failed, denied)
+                    lineage = self._lineage(parsed, step)
+                    counts = self._step_counts(obs_adm, obs_ok)
+                with clock("state_write"):
+                    page_text = parsed.select(
+                        "discovery_seq", F.col("page_url").alias("url"), "text"
+                    )
+                    # a small batch (e.g. the seed superstep: dozens of
+                    # rows) would otherwise inherit the pages-scan
+                    # partitioning — ~100 write tasks for ~50 rows — so
+                    # its tables collapse to one file; large waves keep
+                    # their fan-out
+                    tables = {
+                        "updates": updates.coalesce(1 if small else 8),
+                        "new_rows": new_rows,
+                        "lineage": lineage.coalesce(1),
+                        "page_text": page_text.coalesce(1) if small else page_text,
+                    }
+                    adv = self._submit(
+                        pool, "advance", step, self._advance,
+                        frontier, updates, new_rows, n_pending, step, clock,
+                    )
+                    write = partial(
+                        self._submit, pool, "write", step, self._commit,
+                        step, tables, counts, next_seq, t0, adv, clock,
+                    )
+                    self._settle(pending, hist)  # manifest k-1 before k
+                    # a small step's write is a few mini-jobs while its
+                    # advance is the critical path: the advance runs the
+                    # cluster uncontended and the write starts after it
+                    # (it still overlaps the whole next superstep). A big
+                    # wave's write is heavy (page_text fan-out), so it
+                    # starts at once and overlaps the advance as well.
+                    if not small:
+                        wr = write()
+                with clock("advance"):
+                    # a failed advance raises here; leaving the executor
+                    # settles a write already in flight first
+                    frontier, n_pending, n_new = adv.result()
+                    if small:
+                        wr = write()
+                next_seq += n_new
+                # the write scans these caches; they are released once
+                # it is settled
+                pending = (wr, step, (tagged, parsed, new_rows, updates), clock)
+            self._settle(pending, hist)  # a max_supersteps exit
 
-            threading.Thread(
-                target=lambda df=tagged: df.count(), daemon=True
-            ).start()
-            _mark("politeness")
+        return self._result(frontier, hist, steps_run, latest)
 
-            # J3: fetch join — admitted batch is politeness-bounded → broadcast
-            # build side; the big pages table streams exactly once. Failures
-            # (url not in corpus ≙ errback_playwright) are admitted minus ok on
-            # the unique discovery_seq — never a second pass over pages.
-            obs_ok = Observation(f"fetch_{step}")
-            # a pages row with NULL html is an unfetchable page — treated
-            # as fetch FAILURE (retry → failed), same as a missing row;
-            # the oracle's pages.get(url) is None covers both cases, and
-            # counting it as 'processed' would diverge metrics and states
-            page_content = self.pages.select("url", "html").filter(
-                F.col("html").isNotNull()
-            )
-            # small-batch point-lookup path: when the pending set is small
-            # (n_pending rides the previous advance Observation — no extra
-            # job), push the admitted URL list into the pages scan as an
-            # In predicate. With a sorted/page-indexed corpus (Iceberg
-            # metadata pruning at cluster scale) the scan decodes only the
-            # matching data pages instead of streaming the whole table —
-            # the difference between a seed superstep touching 50 rows and
-            # a full-corpus scan. Large batches keep the streaming scan.
-            if 0 < n_pending <= cfg.lookup_pushdown_threshold:
-                # the In list is the PENDING url set — a politeness-
-                # bounded superset of the admitted batch (this branch is
-                # gated on n_pending, so the list stays ≤ threshold).
-                # Collecting it from the checkpointed frontier is a
-                # narrow scan with no shuffle, so the politeness-rank
-                # plan's first evaluation rides the parse barrier instead
-                # of paying a dedicated driver round-trip here; the
-                # admitted join below filters any deferred/denied rows
-                # the scan decoded.
-                batch_urls = [
-                    r["url"] for r in work.select("url").collect()
-                ]
-                # Spark rewrites In(url, [...]) to a min/max RANGE filter
-                # once the list exceeds parquet.pushdown.inFilterThreshold
-                # (default 10); a seed batch spanning many hosts has a
-                # range covering the whole corpus, so nothing prunes and
-                # the scan decodes every row group's url column. Raising
-                # the threshold to cover the lookup list pushes the actual
-                # point set → row-group stats + ColumnIndex page pruning
-                # do their job (measured 6.5 s → 1.9 s on the bench
-                # corpus). Capped at PARQUET_IN_PUSHDOWN_SAFE_MAX: a
-                # pushed In overflows the executor stack at ~800 terms on
-                # a cold JVM (nested binary OR tree — see the constant's
-                # docstring); larger small-batches keep the exact isin()
-                # filter post-scan and a range filter in the scan.
-                _key = "spark.sql.parquet.pushdown.inFilterThreshold"
-                try:
-                    if (
-                        int(spark.conf.get(_key, "10")) <= len(batch_urls)
-                        <= PARQUET_IN_PUSHDOWN_SAFE_MAX
-                    ):
-                        # min(): the conf persists across batches, so it
-                        # must never exceed the cap — Spark pushes an In
-                        # when len <= threshold, so a cap-sized threshold
-                        # still pushes a cap-sized list while a cap+1 list
-                        # falls back to the range filter
-                        spark.conf.set(_key, str(min(
-                            len(batch_urls) + 1,
-                            PARQUET_IN_PUSHDOWN_SAFE_MAX,
-                        )))
-                except Exception:
-                    pass  # conf not supported on this session — range scan
-                page_content = page_content.filter(
-                    F.col("url").isin(batch_urls)
-                ).coalesce(
-                    # the pruned point-lookup matches a handful of row
-                    # groups; without this the scan inherits the full
-                    # corpus split fan-out (~size/maxPartitionBytes
-                    # dispatch-only tasks for a politeness-small batch)
-                    max(8, spark.sparkContext.defaultParallelism)
-                )
-            # broadcast the admitted batch only while it is plausibly
-            # broadcast-sized; a multi-million-row admitted wave on a big
-            # cluster should let AQE pick sort-merge vs broadcast from
-            # runtime stats instead of being forced
-            adm_side = (
-                F.broadcast(admitted)
-                if n_pending <= cfg.broadcast_admitted_threshold
-                else admitted
-            )
-            fetched = page_content.join(adm_side, on="url", how="inner")
-            _mark("fetch_join")
+    # -- background tasks ------------------------------------------------------
 
+    def _submit(self, pool: ThreadPoolExecutor, phase: str, step: int,
+                fn, *args) -> Future:
+        """Run ``fn(*args)`` on the run's executor. Pool threads are
+        reused and Spark local properties are per thread, so every task
+        sets its own job description ("<phase> step <k>") on entry —
+        the label the event log attributes its jobs by."""
+
+        def task():
+            self.spark.sparkContext.setJobDescription(f"{phase} step {step}")
+            return fn(*args)
+
+        return pool.submit(task)
+
+    def _prewarm(self) -> None:
+        """Warm the pages-table scan machinery: a zero-row pushed-down
+        point probe parses every parquet footer + ColumnIndex and
+        initializes the vectorized reader without decoding data. First
+        touch of a large table otherwise costs seconds of one-time
+        metadata parse INSIDE the first superstep's fetch barrier
+        (measured 2.9 s cold vs 0.3 s warm for the seed point-lookup on
+        the 1.5 GB bench corpus) — the single-JVM analog of keeping
+        table metadata caches hot (Iceberg manifest cache /
+        FileStatusCache) in a long-running cluster crawl. coalesce(2)
+        bounds the probe to two task slots so critical-path jobs are
+        never starved behind it. Advisory only: it never fails the crawl.
+        """
+        # '~' (0x7E) sorts above every scheme-prefixed URL, so page
+        # min/max stats prune all data pages: the job returns 0 rows
+        try:
+            self.pages.select("url", "html").filter(
+                F.col("url").isin(["~prewarm~sentinel~"])
+            ).coalesce(2).count()
+        except Exception:
+            pass
+
+    def _settle(self, pending: tuple | None, hist: _History) -> None:
+        """Join an in-flight snapshot write ``(future, step, caches,
+        clock)``: re-raise its error, fold its committed manifest into
+        ``hist``, release the step's caches and report its phases."""
+        if pending is None:
+            return
+        future, step, caches, clock = pending
+        future.result()
+        hist.add(self.store.read_manifest(step))
+        for df in caches:
+            df.unpersist()
+        clock.report()
+
+    # -- superstep phases --------------------------------------------------------
+
+    def _admit(self, work: DataFrame, small: bool, step: int):
+        """W2 + J5: politeness admission & robots — ONE cached plan.
+        Returns (tagged, admitted, denied, admission Observation); the
+        admission counts ride the plan (collected as a side-effect of the
+        first job that evaluates it — no dedicated count job)."""
+        cfg = self.cfg
+        obs = Observation(f"admission_{step}")
+        tagged = (
+            politeness.admit_tagged(
+                work, self.robots, cfg.superstep_seconds,
+                # small batches skip the salted two-phase rank (skew
+                # cannot bite; the extra exchange is pure fixed cost) —
+                # identical admission set either way
+                1 if small else cfg.salt_shards,
+                order_cols=cfg.order_cols,
+                native_robots=self._native_robots,
+                broadcast_robots=self._broadcast_robots,
+            )
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n_work"),
+                F.sum(
+                    F.when(F.col("_disposition") == "admitted", 1).otherwise(0)
+                ).alias("n_admitted"),
+                F.sum(
+                    F.when(F.col("_disposition") == "denied", 1).otherwise(0)
+                ).alias("n_denied"),
+            )
+            .cache()
+        )
+        admitted = tagged.filter(F.col("_disposition") == "admitted").drop(
+            "_disposition"
+        )
+        denied = tagged.filter(F.col("_disposition") == "denied").drop(
+            "_disposition"
+        )
+        return tagged, admitted, denied, obs
+
+    def _fetch(self, work: DataFrame, admitted: DataFrame,
+               n_pending: int) -> DataFrame:
+        """J3: fetch join — the admitted batch is politeness-bounded, so
+        it is the broadcast build side and the big pages table streams
+        exactly once. Failures (url not in corpus ≙ errback_playwright)
+        are admitted minus ok on the unique discovery_seq — never a
+        second pass over pages."""
+        spark, cfg = self.spark, self.cfg
+        # a pages row with NULL html is an unfetchable page — treated
+        # as fetch FAILURE (retry → failed), same as a missing row;
+        # the oracle's pages.get(url) is None covers both cases, and
+        # counting it as 'processed' would diverge metrics and states
+        page_content = self.pages.select("url", "html").filter(
+            F.col("html").isNotNull()
+        )
+        # small-batch point-lookup path: when the pending set is small
+        # (n_pending rides the previous advance Observation — no extra
+        # job), push the admitted URL list into the pages scan as an
+        # In predicate. With a sorted/page-indexed corpus (Iceberg
+        # metadata pruning at cluster scale) the scan decodes only the
+        # matching data pages instead of streaming the whole table —
+        # the difference between a seed superstep touching 50 rows and
+        # a full-corpus scan. Large batches keep the streaming scan.
+        if n_pending <= cfg.lookup_pushdown_threshold:
+            # the In list is the PENDING url set — a politeness-
+            # bounded superset of the admitted batch (this branch is
+            # gated on n_pending, so the list stays ≤ threshold).
+            # Collecting it from the checkpointed frontier is a
+            # narrow scan with no shuffle, so the politeness-rank
+            # plan's first evaluation rides the parse barrier instead
+            # of paying a dedicated driver round-trip here; the
+            # admitted join below filters any deferred/denied rows
+            # the scan decoded.
+            batch_urls = [r["url"] for r in work.select("url").collect()]
+            # Spark rewrites In(url, [...]) to a min/max RANGE filter
+            # once the list exceeds parquet.pushdown.inFilterThreshold
+            # (default 10); a seed batch spanning many hosts has a
+            # range covering the whole corpus, so nothing prunes and
+            # the scan decodes every row group's url column. Raising
+            # the threshold to cover the lookup list pushes the actual
+            # point set → row-group stats + ColumnIndex page pruning
+            # do their job (measured 6.5 s → 1.9 s on the bench
+            # corpus). Capped at PARQUET_IN_PUSHDOWN_SAFE_MAX: a
+            # pushed In overflows the executor stack at ~800 terms on
+            # a cold JVM (nested binary OR tree — see the constant's
+            # docstring); larger small-batches keep the exact isin()
+            # filter post-scan and a range filter in the scan.
+            _key = "spark.sql.parquet.pushdown.inFilterThreshold"
+            try:
+                if (
+                    int(spark.conf.get(_key, "10")) <= len(batch_urls)
+                    <= PARQUET_IN_PUSHDOWN_SAFE_MAX
+                ):
+                    # min(): the conf persists across batches, so it
+                    # must never exceed the cap — Spark pushes an In
+                    # when len <= threshold, so a cap-sized threshold
+                    # still pushes a cap-sized list while a cap+1 list
+                    # falls back to the range filter
+                    spark.conf.set(_key, str(min(
+                        len(batch_urls) + 1,
+                        PARQUET_IN_PUSHDOWN_SAFE_MAX,
+                    )))
+            except Exception:
+                pass  # conf not supported on this session — range scan
+            page_content = page_content.filter(
+                F.col("url").isin(batch_urls)
+            ).coalesce(
+                # the pruned point-lookup matches a handful of row
+                # groups; without this the scan inherits the full
+                # corpus split fan-out (~size/maxPartitionBytes
+                # dispatch-only tasks for a politeness-small batch)
+                max(8, spark.sparkContext.defaultParallelism)
+            )
+        # broadcast the admitted batch only while it is plausibly
+        # broadcast-sized; a multi-million-row admitted wave on a big
+        # cluster should let AQE pick sort-merge vs broadcast from
+        # runtime stats instead of being forced
+        adm_side = (
+            F.broadcast(admitted)
+            if n_pending <= cfg.broadcast_admitted_threshold
+            else admitted
+        )
+        return page_content.join(adm_side, on="url", how="inner")
+
+    def _expand(self, clock: _PhaseClock, fetched: DataFrame,
+                admitted: DataFrame, frontier: DataFrame, step: int,
+                next_seq: int):
+        """Parse, dedup, barrier, seen check and sequence numbers.
+        Returns (parsed, failed, new_rows, fetch Observation)."""
+        obs_ok = Observation(f"fetch_{step}")
+        with clock("plan_build"):
             # K1 + K2 + P2–P6: ONE Arrow pass per page — link extraction,
             # classification, and text extraction fused; html crosses the
             # JVM→Python boundary exactly once per superstep. Cached: the
-            # page_text/lineage/updates reads below are cache scans, not
+            # page_text/lineage/updates reads are cache scans, not
             # re-parses.
             parsed = (
                 parse_pages(fetched)
@@ -647,362 +750,224 @@ class CrawlEngine:
                 on="discovery_seq",
                 how="left_anti",
             )
-            children = explode_parsed(parsed)
-
             # J2 within-batch first-writer dedup (url-global, insertion order)
             batch = first_writer_dedup(
-                children, order_cols=["parent_seq", "item_seq"], key_cols=["url"]
+                explode_parsed(parsed),
+                order_cols=["parent_seq", "item_seq"], key_cols=["url"],
             )
-
-            # J1: exact seen check behind ONE materialization barrier —
-            # the plan-mode seq assignment below needs a materialized
-            # input, and the write and advance then scan the checkpoint
-            # instead of re-running the parse+dedup pipeline.
-            seen = frontier.filter(~F.col("is_root"))
-            _mark("plan_build")
+        # J1: exact seen check behind ONE materialization barrier — the
+        # plan-mode seq assignment below needs a materialized input, and
+        # the write and advance then scan the checkpoint instead of
+        # re-running the parse+dedup pipeline.
+        with clock("parse_barrier"):
             batch = batch.localCheckpoint(eager=True)
-            _mark("parse_barrier")
+        with clock("expand_dedup_seq"):
             new = anti_join_seen(
-                batch, seen,
+                batch, frontier.filter(~F.col("is_root")),
                 unique_urls=True,  # batch deduped, frontier url-unique
-            )
-            new = new.drop("partition_id", "found_count")
-            # 'plan' seq assignment: offsets are part of the lazy plan —
-            # no collect, no checkpoint; determinism holds because the
-            # upstream ``batch`` is materialized and ``seen`` is the
-            # localCheckpoint-ed frontier. n_new rides an Observation,
-            # resolved when the snapshot write evaluates new_rows.
-            seq_mode = "plan" if cfg.seq_mode == "ranged" else cfg.seq_mode
+            ).drop("partition_id", "found_count")
+            # the seq offsets are part of the lazy plan — no collect, no
+            # checkpoint; determinism holds because ``batch`` is
+            # materialized and the seen side is the localCheckpoint-ed
+            # frontier. n_new rides the advance Observation.
             new = assign_global_seq(
                 new, ["parent_seq", "item_seq"], start=next_seq,
-                mode=seq_mode,
                 key_bound=next_seq,  # every parent_seq < current next_seq
             )
-            # coalesce before caching for the same reason as `updates`
-            # below: `new` inherits the barrier batch's partitioning (the
-            # dedup shuffle width) though the rows are narrow frontier
-            # entries; the cache is then scanned by THREE consumers
-            # (table write, advance union, next step's politeness) and
-            # each would dispatch the full task fan-out.
-            # 2×cluster-width partitions keep every consumer fully
-            # parallel at any scale.
+            # coalesce before caching for the same reason as `updates`:
+            # `new` inherits the barrier batch's partitioning (the dedup
+            # shuffle width) though the rows are narrow frontier entries;
+            # the cache is then scanned by THREE consumers (table write,
+            # advance union, next step's politeness) and each would
+            # dispatch the full task fan-out. 2×cluster-width partitions
+            # keep every consumer fully parallel at any scale.
             new_rows = (
                 finalize_new_rows(new, step)
-                .coalesce(2 * spark.sparkContext.defaultParallelism)
+                .coalesce(2 * self.spark.sparkContext.defaultParallelism)
                 .cache()
             )
-            _mark("expand_dedup_seq")
+        return parsed, failed, new_rows, obs_ok
 
-            # state transitions (F9 CASE semantics, queries.sql:66-74):
-            # fetched → processed; missing page → retry then failed
-            # (errback_playwright, frontier_spider.py:310-338); robots-denied
-            # → skipped. Parquet fallback for MERGE: join on unique
-            # discovery_seq + coalesce; under Iceberg this is MERGE INTO.
-            updates = (
-                parsed.select(
+    def _updates(self, parsed: DataFrame, failed: DataFrame,
+                 denied: DataFrame) -> DataFrame:
+        """State transitions (F9 CASE semantics, queries.sql:66-74):
+        fetched → processed; missing page → retry then failed
+        (errback_playwright, frontier_spider.py:310-338); robots-denied
+        → skipped. Parquet fallback for MERGE: join on unique
+        discovery_seq + coalesce; under Iceberg this is MERGE INTO."""
+        retry = F.col("attempt") + 1 <= self.cfg.retry_times
+        return (
+            parsed.select(
+                "discovery_seq",
+                F.lit("processed").alias("_new_state"),
+                F.lit(None).cast("string").alias("_new_error"),
+                F.lit(0).alias("_attempt_inc"),
+            )
+            .unionByName(
+                failed.select(
                     "discovery_seq",
-                    F.lit("processed").alias("_new_state"),
-                    F.lit(None).cast("string").alias("_new_error"),
+                    F.when(retry, "pending").otherwise("failed")
+                    .alias("_new_state"),
+                    F.when(retry, F.lit(None).cast("string"))
+                    .otherwise(F.lit("fetch_failed: url not in corpus"))
+                    .alias("_new_error"),
+                    F.lit(1).alias("_attempt_inc"),
+                )
+            )
+            .unionByName(
+                denied.select(
+                    "discovery_seq",
+                    F.lit("skipped").alias("_new_state"),
+                    F.lit("robots_denied").alias("_new_error"),
                     F.lit(0).alias("_attempt_inc"),
                 )
-                .unionByName(
-                    failed.select(
-                        "discovery_seq",
-                        F.when(
-                            F.col("attempt") + 1 <= cfg.retry_times, "pending"
-                        )
-                        .otherwise("failed")
-                        .alias("_new_state"),
-                        F.when(
-                            F.col("attempt") + 1 <= cfg.retry_times,
-                            F.lit(None).cast("string"),
-                        )
-                        .otherwise(F.lit("fetch_failed: url not in corpus"))
-                        .alias("_new_error"),
-                        F.lit(1).alias("_attempt_inc"),
-                    )
-                )
-                .unionByName(
-                    denied.select(
-                        "discovery_seq",
-                        F.lit("skipped").alias("_new_state"),
-                        F.lit("robots_denied").alias("_new_error"),
-                        F.lit(0).alias("_attempt_inc"),
-                    )
-                )
-                # cached: the snapshot write (updates table) and the
-                # frontier advance (MERGE join build side) each scan this
-                # delta from concurrent threads — without the cache both
-                # recompute the parsed-cache scans + failed anti-join.
-                # coalesce FIRST: the raw union inherits the three
-                # branches' partitioning (parse fan-out × 2 + denied —
-                # profiled at 222 partitions for 225k ~30-byte rows), and
-                # two concurrent jobs each dispatched all 222 cache-fill
-                # tasks; a handful of partitions of this tiny delta is
-                # right at any scale (the rows are fixed-width ids+enums,
-                # a multi-million-row wave is still < a few hundred MB)
-                .coalesce(2 * spark.sparkContext.defaultParallelism)
-                .cache()
             )
-            # S6/A4: per-partition lineage + per-superstep metrics. The
-            # per-page item counts were computed INSIDE the fused parse
-            # pass (udfs.py n_targets/n_seeds), so this aggregates one
-            # cached row per page — it never re-explodes the (100×
-            # larger) child-link rows a second time.
-            step_lineage = (
-                parsed.withColumn("partition_id", F.spark_partition_id())
-                .filter((F.col("n_targets") + F.col("n_seeds")) > 0)
-                .groupBy("partition_id", "root_seed_id", "category")
-                .agg(
-                    F.sum("n_targets").cast("long").alias("target_urls_found"),
-                    F.sum("n_seeds").cast("long").alias("seed_urls_found"),
-                    F.sum(F.col("n_targets") + F.col("n_seeds"))
-                    .cast("long")
-                    .alias("total_urls_found"),
-                )
-                .withColumn("superstep", F.lit(step))
-                .select(
-                    "superstep", "partition_id", "root_seed_id", "category",
-                    "target_urls_found", "seed_urls_found", "total_urls_found",
-                )
+            # cached: the snapshot write (updates table) and the
+            # frontier advance (MERGE join build side) each scan this
+            # delta from concurrent threads — without the cache both
+            # recompute the parsed-cache scans + failed anti-join.
+            # coalesce FIRST: the raw union inherits the three
+            # branches' partitioning (parse fan-out × 2 + denied —
+            # profiled at 222 partitions for 225k ~30-byte rows), and
+            # two concurrent jobs each dispatched all 222 cache-fill
+            # tasks; a handful of partitions of this tiny delta is
+            # right at any scale (the rows are fixed-width ids+enums,
+            # a multi-million-row wave is still < a few hundred MB)
+            .coalesce(2 * self.spark.sparkContext.defaultParallelism)
+            .cache()
+        )
+
+    @staticmethod
+    def _lineage(parsed: DataFrame, step: int) -> DataFrame:
+        """S6/A4: per-partition lineage. The per-page item counts were
+        computed INSIDE the fused parse pass (udfs.py n_targets/n_seeds),
+        so this aggregates one cached row per page — it never re-explodes
+        the (100× larger) child-link rows a second time."""
+        return (
+            parsed.withColumn("partition_id", F.spark_partition_id())
+            .filter((F.col("n_targets") + F.col("n_seeds")) > 0)
+            .groupBy("partition_id", "root_seed_id", "category")
+            .agg(
+                F.sum("n_targets").cast("long").alias("target_urls_found"),
+                F.sum("n_seeds").cast("long").alias("seed_urls_found"),
+                F.sum(F.col("n_targets") + F.col("n_seeds"))
+                .cast("long")
+                .alias("total_urls_found"),
             )
-            # observation values for admission/fetch are final once the
-            # batch checkpoint evaluated those cached plans (sum() over
-            # empty → None); n_new resolves inside the snapshot write.
-            adm = obs_adm.get
-            n_work = adm["n_work"] or 0
-            n_admitted = adm["n_admitted"] or 0
-            n_denied = adm["n_denied"] or 0
-            n_ok = obs_ok.get["n_ok"] or 0
-            n_failed = n_admitted - n_ok
-            _mark("metrics_lineage")
-
-            # atomic DELTA commit (Iceberg-MERGE stand-in): only the
-            # state-transition rows + new frontier rows + lineage hit disk;
-            # write cost is O(delta), never O(frontier). The per-step
-            # metrics row rides in the manifest meta — built lazily AFTER
-            # the table writes so n_new can come off the frontier-advance
-            # Observation instead of a dedicated count job.
-            # K2: per-fetched-page text (north-rule invariant) — already
-            # extracted in the fused parse pass; this is a cache scan.
-            # A politeness-small batch (e.g. the seed superstep: dozens of
-            # rows) would otherwise inherit the pages-scan partitioning —
-            # ~100 write tasks for ~50 rows, pure dispatch overhead — so
-            # collapse it to one file; large waves keep full fan-out.
-            page_text = parsed.select(
-                "discovery_seq", F.col("page_url").alias("url"), "text"
+            .withColumn("superstep", F.lit(step))
+            .select(
+                "superstep", "partition_id", "root_seed_id", "category",
+                "target_urls_found", "seed_urls_found", "total_urls_found",
             )
-            if n_pending <= cfg.lookup_pushdown_threshold:
-                page_text = page_text.coalesce(1)
-            commit: dict = {}
-            # advance-thread result cell + completion event, created HERE
-            # so _commit_meta can capture THIS step's instances as default
-            # args (the names are rebound every iteration)
-            adv: dict = {}
-            adv_done = threading.Event()
+        )
 
-            # every enclosing-scope name is captured as a DEFAULT ARG:
-            # this callable runs on the background write thread, possibly
-            # after the main loop has rebound step/next_seq/t0/counters
-            # for the next iteration — a closure reference would commit
-            # the wrong step number and a double-counted next_seq into
-            # the manifest (breaking resume)
-            def _commit_meta(step=step, n_work=n_work, n_admitted=n_admitted,
-                             n_denied=n_denied, n_ok=n_ok, n_failed=n_failed,
-                             next_seq=next_seq, t0=t0,
-                             commit=commit, adv=adv,
-                             adv_done=adv_done) -> dict:
-                # n_new comes from the frontier-advance Observation — the
-                # union OUTPUT node, which always executes (an Observation
-                # riding the new_rows subtree itself can be skipped when
-                # the cache was filled by another job or the empty branch
-                # was pruned). The manifest commit therefore waits for the
-                # advance; its table writes have already overlapped it.
-                adv_done.wait()
-                if "n_new" not in adv:
-                    raise RuntimeError(
-                        "frontier advance failed before snapshot commit"
-                    )
-                n_new = adv["n_new"]
-                row = (
-                    step, n_work, n_admitted, n_denied,
-                    n_work - n_admitted - n_denied, n_ok, n_failed, n_new,
-                    # wall from step start to snapshot commit — with the
-                    # async write this includes the overlap into the next
-                    # superstep (the critical-path phase split is the
-                    # SPARK_GRAFT_PROFILE output)
-                    time.monotonic() - t0,
+    @staticmethod
+    def _step_counts(obs_adm: Observation, obs_ok: Observation) -> tuple:
+        """(n_work, n_admitted, n_denied, n_deferred, n_fetched_ok,
+        n_fetch_failed). The admission and fetch Observations are final
+        once the batch checkpoint evaluated their cached plans (sum()
+        over empty → None)."""
+        adm = obs_adm.get
+        n_work = adm["n_work"] or 0
+        n_admitted = adm["n_admitted"] or 0
+        n_denied = adm["n_denied"] or 0
+        n_ok = obs_ok.get["n_ok"] or 0
+        return (n_work, n_admitted, n_denied, n_work - n_admitted - n_denied,
+                n_ok, n_admitted - n_ok)
+
+    def _advance(self, frontier: DataFrame, updates: DataFrame,
+                 new_rows: DataFrame, n_pending: int, step: int,
+                 clock: _PhaseClock) -> tuple[DataFrame, int, int]:
+        """Fold step's delta into the in-memory frontier. Returns
+        (frontier, n_pending, n_new).
+
+        Runs on the executor, concurrently with the snapshot write: it
+        depends only on the updates plan and the new_rows cache (both
+        deterministic: batch is materialized), not on the written files;
+        Spark schedules jobs from both driver threads and the cache
+        layer serializes any shared partition computes. localCheckpoint
+        truncates the growing plan without a full-table parquet
+        round-trip; the next step's pending-work count rides this job as
+        an Observation."""
+        obs = Observation(f"advance_{step}")
+        with clock("advance_job"):
+            fr = (
+                self._apply_updates(
+                    frontier, updates,
+                    hint_broadcast=(
+                        n_pending <= self.cfg.broadcast_admitted_threshold
+                    ),
                 )
-                commit["n_new"] = n_new
-                commit["metrics_row"] = row
-                return {
-                    "next_seq": next_seq + n_new,
-                    "done": False,
-                    "metrics": row,
-                }
-
-            # advance the in-memory frontier CONCURRENTLY with the
-            # snapshot writes — it depends only on the updates plan and
-            # the new_rows cache (both deterministic: batch is
-            # materialized), not on the written files; Spark schedules
-            # jobs from both driver threads and the cache layer
-            # serializes any shared partition computes. localCheckpoint
-            # truncates the growing plan without a full-table parquet
-            # round-trip; the next iteration's pending-work count rides
-            # this job as an Observation.
-            import threading
-
-            def _advance():
-                try:
-                    _t_adv = time.monotonic()
-                    # thread-local tag: jobs this thread submits show up as
-                    # "advance step k" in the UI/event log (diagnostics)
-                    spark.sparkContext.setJobDescription(f"advance step {step}")
-                    obs_adv = Observation(f"advance_{step}")
-                    fr = (
-                        self._apply_updates(
-                            frontier, updates,
-                            hint_broadcast=(
-                                n_pending <= cfg.broadcast_admitted_threshold
-                            ),
-                        )
-                        .unionByName(new_rows)
-                        .observe(
-                            obs_adv,
-                            F.sum(F.when(_work_pred, 1).otherwise(0)).alias(
-                                "n_pending"
-                            ),
-                            # this step's new rows carry superstep == step
-                            # (roots are 0, old rows keep theirs), so the
-                            # advance reports n_new from the union OUTPUT
-                            # node — reliable even when the new_rows
-                            # branch is empty/pruned or its cache was
-                            # filled by a different job (an Observation
-                            # on the new_rows subtree itself can then
-                            # never resolve)
-                            F.sum(
-                                F.when(F.col("superstep") == step, 1)
-                                .otherwise(0)
-                            ).alias("n_new"),
-                        )
-                        # the union's partition count otherwise ACCRETES
-                        # superstep over superstep (each step's frontier =
-                        # previous checkpoint partitions + new_rows
-                        # partitions), and the eager localCheckpoint plus
-                        # every downstream consumer re-dispatches that
-                        # ever-growing task count over fixed-width rows.
-                        # Frontier entries are ~100 B, so 2×cluster-width
-                        # partitions stay well under task-size limits even
-                        # at a 10^10-row frontier's per-step slice; a real
-                        # cluster's defaultParallelism scales the target.
-                        # repartition, NOT coalesce: the MERGE join above
-                        # ends in an AQE exchange whose post-shuffle
-                        # partition count is decided by SIZE (with
-                        # parallelismFirst=false a whole multi-100k-row
-                        # frontier of ~100 B rows fits ONE advisory-sized
-                        # partition), and coalesce can only shrink — the
-                        # event log showed the entire advance (join +
-                        # union + localCheckpoint) fused into a SINGLE
-                        # task, a serial tail that costs the same absolute
-                        # seconds at every cluster size. A round-robin
-                        # exchange of narrow rows is ~free and guarantees
-                        # cluster-width parallelism for the checkpoint
-                        # store and every downstream frontier consumer.
-                        .repartition(2 * spark.sparkContext.defaultParallelism)
-                        .localCheckpoint(eager=True)
-                    )
-                    adv["frontier"] = fr
-                    vals = obs_adv.get
-                    adv["n_pending"] = vals["n_pending"] or 0
-                    adv["n_new"] = vals["n_new"] or 0
-                    if cfg.profile:
-                        print(
-                            f"[profile] step {step}: advance_job="
-                            f"{time.monotonic()-_t_adv:.1f}s",
-                            file=sys.stderr,
-                        )
-                except BaseException as e:  # noqa: BLE001 — re-raised below
-                    adv["err"] = e
-                finally:
-                    adv_done.set()  # unblock _commit_meta either way
-
-            adv_t = threading.Thread(target=_advance, daemon=True)
-            adv_t.start()
-            # the snapshot write ALSO runs off the main thread: step k's
-            # commit needs to finish only before step k+1's commit (or
-            # the terminal meta update) — enforced by _flush_write below
-            # — so its wall time overlaps the frontier advance AND the
-            # whole of step k+1's politeness/fetch/parse barrier instead
-            # of sitting on the critical path (the seed superstep's
-            # write was ~30% of its fixed cost). Kill-safety unchanged:
-            # a crash while step k's write is in flight loses step k
-            # only; resume folds the committed deltas ≤ k-1.
-            wr_state: dict = {}
-            write_tables = {
-                "updates": updates.coalesce(
-                    1 if n_pending <= cfg.lookup_pushdown_threshold else 8
-                ),
-                "new_rows": new_rows,
-                "lineage": step_lineage.coalesce(1),
-                "page_text": page_text,
-            }
-
-            def _write(tables=write_tables, meta=_commit_meta, k=step):
-                try:
-                    _t_wr = time.monotonic()
-                    spark.sparkContext.setJobDescription(f"write step {k}")
-                    self.store.write_step(k, tables, meta)
-                    if cfg.profile:
-                        print(
-                            f"[profile] step {k}: write_job="
-                            f"{time.monotonic()-_t_wr:.1f}s",
-                            file=sys.stderr,
-                        )
-                except BaseException as e:  # noqa: BLE001 — re-raised at flush
-                    wr_state["err"] = e
-
-            _flush_write()  # commit ordering: step k-1's manifest first
-            wr_t = threading.Thread(target=_write, daemon=True)
-            # a politeness-small step's write is a few mini-jobs while its
-            # advance is the critical path — let the advance run the
-            # cluster uncontended and start the write after it (it still
-            # overlaps the whole next superstep). A big wave's write is
-            # heavy (page_text fan-out), so there it starts immediately
-            # and overlaps the advance as well.
-            small_step = n_pending <= cfg.lookup_pushdown_threshold
-            if not small_step:
-                wr_t.start()
-            _mark("state_write")
-            adv_t.join()
-            if small_step:
-                wr_t.start()
-            if "err" in adv:
-                wr_t.join()  # settle the write before unwinding
-                raise adv["err"]
-            frontier = adv["frontier"]
-            n_pending = adv["n_pending"]
-            n_new = adv["n_new"]
-            next_seq += n_new
-            # caches stay alive until the write flush (the write scans
-            # parsed for updates/lineage/page_text and new_rows for the
-            # table write)
-            self._write_pending = (
-                wr_t, wr_state, step, commit,
-                (tagged, parsed, new_rows, updates),
+                .unionByName(new_rows)
+                .observe(
+                    obs,
+                    F.sum(F.when(_pending_work(), 1).otherwise(0)).alias(
+                        "n_pending"
+                    ),
+                    # this step's new rows carry superstep == step
+                    # (roots are 0, old rows keep theirs), so the
+                    # advance reports n_new from the union OUTPUT
+                    # node — reliable even when the new_rows
+                    # branch is empty/pruned or its cache was
+                    # filled by a different job (an Observation
+                    # on the new_rows subtree itself can then
+                    # never resolve)
+                    F.sum(
+                        F.when(F.col("superstep") == step, 1).otherwise(0)
+                    ).alias("n_new"),
+                )
+                # the union's partition count otherwise ACCRETES
+                # superstep over superstep (each step's frontier =
+                # previous checkpoint partitions + new_rows
+                # partitions), and the eager localCheckpoint plus
+                # every downstream consumer re-dispatches that
+                # ever-growing task count over fixed-width rows.
+                # Frontier entries are ~100 B, so 2×cluster-width
+                # partitions stay well under task-size limits even
+                # at a 10^10-row frontier's per-step slice; a real
+                # cluster's defaultParallelism scales the target.
+                # repartition, NOT coalesce: the MERGE join above
+                # ends in an AQE exchange whose post-shuffle
+                # partition count is decided by SIZE (with
+                # parallelismFirst=false a whole multi-100k-row
+                # frontier of ~100 B rows fits ONE advisory-sized
+                # partition), and coalesce can only shrink — the
+                # event log showed the entire advance (join +
+                # union + localCheckpoint) fused into a SINGLE
+                # task, a serial tail that costs the same absolute
+                # seconds at every cluster size. A round-robin
+                # exchange of narrow rows is ~free and guarantees
+                # cluster-width parallelism for the checkpoint
+                # store and every downstream frontier consumer.
+                .repartition(2 * self.spark.sparkContext.defaultParallelism)
+                .localCheckpoint(eager=True)
             )
-            _mark("advance")
-            if cfg.profile:
-                phases = " ".join(
-                    f"{k}={v:.1f}s" for k, v in _pstate["acc"].items()
-                )
-                print(f"[profile] step {step}: {phases}", file=sys.stderr)
+            vals = obs.get
+        return fr, vals["n_pending"] or 0, vals["n_new"] or 0
 
-        # settle any write still in flight (max_supersteps exit path — the
-        # n_pending==0 branch already flushed)
-        _flush_write()
+    def _commit(self, step: int, tables: dict, counts: tuple, next_seq: int,
+                t0: float, adv: Future, clock: _PhaseClock) -> None:
+        """Atomic DELTA commit of ``step`` (Iceberg-MERGE stand-in): only
+        the state-transition rows + new frontier rows + lineage + page
+        text hit disk, so write cost is O(delta), never O(frontier).
 
-        return self._result(frontier, metrics_rows, lineage_paths, text_paths,
-                            steps_run, latest)
+        Runs on the executor. The table writes overlap the advance; the
+        manifest (the commit point) waits for the advance future, since
+        n_new comes from the frontier-advance Observation — the union
+        OUTPUT node, which always executes (an Observation riding the
+        new_rows subtree itself can be skipped when the cache was filled
+        by another job or the empty branch was pruned). A failed advance
+        re-raises here, so its step gets no manifest."""
+
+        def meta() -> dict:
+            n_new = adv.result()[2]
+            # wall from step start to snapshot commit — with the async
+            # write this includes the overlap into the next superstep
+            row = (step, *counts, n_new, time.monotonic() - t0)
+            return {"next_seq": next_seq + n_new, "done": False, "metrics": row}
+
+        with clock("write_job"):
+            self.store.write_step(step, tables, meta)
 
 
 def run_log(result: CrawlResult) -> DataFrame:

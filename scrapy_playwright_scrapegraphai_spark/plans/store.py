@@ -83,14 +83,10 @@ class SnapshotStore:
                 written[name] = path
         if callable(meta):
             meta = meta()
-        manifest = {
+        self._commit_manifest(step, {
             "format": SNAPSHOT_FORMAT, "step": step, "tables": written,
             "meta": meta,
-        }
-        tmp = self._manifest_path(step) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, self._manifest_path(step))
+        })
 
     def update_meta(self, step: int, meta: dict[str, Any]) -> None:
         """Rewrite a step's manifest meta without touching table files
@@ -98,6 +94,12 @@ class SnapshotStore:
         lazily read this step's parquet, so files must not be rewritten)."""
         manifest = self.read_manifest(step)
         manifest["meta"] = meta
+        self._commit_manifest(step, manifest)
+
+    def _commit_manifest(self, step: int, manifest: dict[str, Any]) -> None:
+        """Publish ``manifest`` as step's manifest: write a tmp file, then
+        ``os.replace`` it into place — atomic on POSIX, so readers see the
+        old manifest or the new one, never a partial file."""
         tmp = self._manifest_path(step) + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)

@@ -2,6 +2,7 @@
 a run killed after superstep k and resumed must produce a final state
 identical to an uninterrupted run."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from scrapy_playwright_scrapegraphai_spark.plans.driver import CrawlConfig, CrawlEngine
@@ -19,6 +20,17 @@ def _key(frontier):
         )
         for r in frontier.collect()
     )
+
+
+def _metric_counts(result):
+    cols = [
+        "superstep", "n_work", "n_admitted", "n_denied", "n_deferred",
+        "n_fetched_ok", "n_fetch_failed", "n_new",
+    ]
+    return [
+        tuple(r[c] for c in cols)
+        for r in result.metrics.orderBy("superstep").collect()
+    ]
 
 
 def _engine(spark, corpus_spark, ckpt):
@@ -43,10 +55,60 @@ def test_resume_equals_uninterrupted(spark, corpus_spark, tmp_path):
     assert _key(resumed.frontier) == _key(full.frontier)
 
     # metrics history is complete and identical
-    cols = ["superstep", "n_work", "n_admitted", "n_new"]
-    a = [tuple(r[c] for c in cols) for r in resumed.metrics.orderBy("superstep").collect()]
-    b = [tuple(r[c] for c in cols) for r in full.metrics.orderBy("superstep").collect()]
-    assert a == b
+    assert _metric_counts(resumed) == _metric_counts(full)
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, corpus_spark, tmp_path_factory):
+    return _engine(spark, corpus_spark, str(tmp_path_factory.mktemp("full"))).run()
+
+
+def _fail_in_step_2(eng, fail_at, err):
+    """Make step 2's background ``fail_at`` task (advance or write) raise
+    ``err``."""
+    if fail_at == "advance":
+        apply_updates, calls = eng._apply_updates, []
+
+        def failing_apply_updates(*args, **kwargs):
+            calls.append(1)
+            if len(calls) == 2:  # one call per advance, no rebuild folds
+                raise err
+            return apply_updates(*args, **kwargs)
+
+        eng._apply_updates = failing_apply_updates
+    else:
+        write_step = eng.store.write_step
+
+        def failing_write_step(step, tables, meta):
+            if step == 2:
+                raise err
+            return write_step(step, tables, meta)
+
+        eng.store.write_step = failing_write_step
+
+
+@pytest.mark.parametrize("fail_at", ["advance", "write"])
+def test_background_failure_surfaces_and_resume_recovers(
+    spark, corpus_spark, tmp_path, uninterrupted, fail_at
+):
+    """Step 2's advance or snapshot write dies on the run's executor: the
+    error reaches the caller of run(), no part of step 2 is visible, and
+    a fresh engine resuming the directory ends equal to an uninterrupted
+    run."""
+    assert uninterrupted.supersteps_run >= 3
+    ckpt = str(tmp_path / "dies")
+    eng = _engine(spark, corpus_spark, ckpt)
+    err = RuntimeError(f"injected {fail_at} failure")
+    _fail_in_step_2(eng, fail_at, err)
+    with pytest.raises(RuntimeError) as raised:
+        eng.run()
+    assert raised.value is err
+    assert SnapshotStore(ckpt).latest_step() == 1
+
+    resumed = _engine(spark, corpus_spark, ckpt).run()
+    assert resumed.resumed_from == 1
+    assert _key(resumed.frontier) == _key(uninterrupted.frontier)
+    assert _metric_counts(resumed) == _metric_counts(uninterrupted)
 
 
 def test_resume_ignores_partial_step_without_manifest(spark, corpus_spark, tmp_path):

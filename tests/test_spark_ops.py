@@ -7,10 +7,11 @@ from pyspark.sql import functions as F
 
 from scrapy_playwright_scrapegraphai_spark.functions import kernels as K
 from scrapy_playwright_scrapegraphai_spark.functions.udfs import (
-    expand_pages,
+    explode_parsed,
     extract_links_udf,
     extract_text_udf,
     main_domain_udf,
+    parse_pages,
 )
 from scrapy_playwright_scrapegraphai_spark.operators.frontier import (
     anti_join_seen,
@@ -49,7 +50,7 @@ def test_main_domain_udf(spark):
     assert [r["d"] for r in rows] == ["user@h.t:8080", "h.t"]
 
 
-def test_expand_pages_matches_kernel_classification(spark, corpus):
+def test_parse_pages_explode_matches_kernel_classification(spark, corpus):
     page = next(p for p in corpus.pages if b"/page/" in p["html"])
     fetched = spark.createDataFrame(
         [
@@ -62,7 +63,7 @@ def test_expand_pages_matches_kernel_classification(spark, corpus):
         "target_patterns array<string>, seed_pattern string, html binary, "
         "discovery_seq long, root_seed_id int",
     )
-    rows = expand_pages(fetched).orderBy("item_seq").collect()
+    rows = explode_parsed(parse_pages(fetched)).orderBy("item_seq").collect()
     found = K.extract_links(page["html"], page["url"])
     expected = K.classify_links(
         page["url"], found, 2, [".pdf", r"/download/\d+"], "/page/", 0, 2
@@ -92,25 +93,16 @@ def test_anti_join_seen(spark):
     assert sorted(r["url"] for r in anti_join_seen(cand, seen).collect()) == ["a", "c"]
 
 
-@pytest.mark.parametrize("mode", ["window", "ranged"])
-def test_assign_global_seq_dense_and_ordered(spark, mode):
-    data = [(i % 7, i) for i in range(200)]  # (parent_seq, item_seq) unique pairs
+@pytest.mark.parametrize("n", [200, 0], ids=["rows", "empty"])
+def test_assign_global_seq_dense_and_ordered(spark, n):
+    data = [(i % 7, i) for i in range(n)]  # (parent_seq, item_seq) unique pairs
     df = spark.createDataFrame(data, "parent_seq long, item_seq int")
-    out = assign_global_seq(df, ["parent_seq", "item_seq"], start=10, mode=mode)
+    out = assign_global_seq(df, ["parent_seq", "item_seq"], start=10, key_bound=7)
     rows = out.orderBy("discovery_seq").collect()
-    assert [r["discovery_seq"] for r in rows] == list(range(10, 210))
+    assert [r["discovery_seq"] for r in rows] == list(range(10, 10 + n))
     # seq order == key order
     keys = [(r["parent_seq"], r["item_seq"]) for r in rows]
     assert keys == sorted(keys)
-
-
-def test_assign_global_seq_modes_agree(spark):
-    data = [(i * 13 % 101, i) for i in range(150)]
-    df = spark.createDataFrame(data, "parent_seq long, item_seq int")
-    a = assign_global_seq(df, ["parent_seq", "item_seq"], 0, "window").collect()
-    b = assign_global_seq(df, ["parent_seq", "item_seq"], 0, "ranged").collect()
-    key = lambda rows: sorted((r["parent_seq"], r["item_seq"], r["discovery_seq"]) for r in rows)
-    assert key(a) == key(b)
 
 
 def test_assign_global_seq_invariant_to_partitioning(spark):
@@ -126,9 +118,9 @@ def test_assign_global_seq_invariant_to_partitioning(spark):
     for nparts, buckets in [(1, 3), (5, 17), (40, 64)]:
         df = spark.createDataFrame(
             data, "parent_seq long, item_seq int"
-        ).repartition(nparts)
+        ).repartition(nparts).localCheckpoint(eager=True)
         out = assign_global_seq(
-            df, ["parent_seq", "item_seq"], start=5, mode="ranged",
+            df, ["parent_seq", "item_seq"], start=5, key_bound=97,
             num_partitions=buckets,
         ).collect()
         seqs = sorted(r["discovery_seq"] for r in out)
@@ -137,19 +129,12 @@ def test_assign_global_seq_invariant_to_partitioning(spark):
         assert key(out) == ref
 
 
-def test_assign_global_seq_with_count(spark):
-    df = spark.createDataFrame(
-        [(i, i) for i in range(50)], "parent_seq long, item_seq int"
-    )
-    out, n = assign_global_seq(
-        df, ["parent_seq", "item_seq"], start=0, mode="ranged", with_count=True
-    )
-    assert n == 50 == out.count()
-    empty = df.filter("parent_seq < 0")
-    out2, n2 = assign_global_seq(
-        empty, ["parent_seq", "item_seq"], start=9, mode="ranged", with_count=True
-    )
-    assert n2 == 0 == out2.count()
+def test_assign_global_seq_rejects_other_modes(spark):
+    df = spark.createDataFrame([(0, 0)], "parent_seq long, item_seq int")
+    with pytest.raises(ValueError):
+        assign_global_seq(
+            df, ["parent_seq", "item_seq"], start=0, key_bound=1, mode="ranged"
+        )
 
 
 # --- politeness admission -------------------------------------------------------

@@ -1,707 +1,311 @@
 #!/usr/bin/env python
-"""Benchmark harness.
+"""Benchmark: crawl throughput at local[2] and local[8] on one synthetic
+pages corpus, and the 50 contract queries at $SPARK_GRAFT_SF_DIR.
 
-Main mode: runs the headline operator queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the
-crawl-engine throughput benchmark at TWO parallelism levels (local[8] vs
-local[$SPARK_GRAFT_CPUS]) on an identical synthetic pages corpus — the
-sandbox stand-in for the N→4N-executor scaling criterion (BASELINE.md).
-Asserts the URL-seen set and crawl ordering are identical at both sizes
-(order-independent checksum over (discovery_seq, url, state)).
+    python bench.py
 
-Prints exactly ONE JSON line:
-  {"metric": "crawl_urls_per_sec_local32", "value": <urls/sec>,
-   "unit": "urls/sec", "queries": {<name>: seconds, ...}, "sf": ...,
-   "scaling": {...}, ...}
-
-Each crawl run executes in a fresh JVM (subprocess) so the two
-parallelism levels don't share a SparkContext.
+One straight-line run that ends inside BUDGET_S: the corpus, crawl leg
+pairs, then the queries; whatever would start past the deadline is
+recorded as skipped. The full record is rewritten to RECORD after every leg
+and query; the last stdout line is ``result_line(record)``. Environment:
+SPARK_GRAFT_SF_DIR (query tables), SPARK_GRAFT_CPUS (query-session cores,
+default the CPUs this process may use), SPARK_GRAFT_PROFILE=1 (per-phase
+superstep breakdown of each crawl leg on stderr).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
 
+T_START = time.monotonic()
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
+import __spark_entry__ as entry  # noqa: E402
+
+QUERIES = entry.queries()  # exactly the driver contract's queries
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-N_HOSTS = int(os.environ.get("SPARK_GRAFT_BENCH_HOSTS", "48"))
-# 4096 pages/host (~225k pages, ~1.4 GB html) keeps the parallel parse
-# section dominant over per-superstep fixed costs in the scaling
-# measurement — the representative regime for the 10^10-URL design point.
-# Corpus-size history: round 3 ran 2048/host because this sandbox's host
-# throttles sustained multi-minute full-core burns and the round-3
-# engine needed ~102-175 s per 8-core leg even at 2048. The round-4
-# engine is ~2.4x faster (parse-kernel rewrite, async snapshot writes,
-# real In-list pushdown, pre-sized heap), so the 8-core leg at 4096 now
-# runs in ~72 s — SHORTER than any round-3 leg — while the doubled
-# parallel section lifts the job's parallel fraction back to where fixed
-# costs (~18 s/run: seed superstep, plan builds, barriers) stop
-# dominating the 2-vs-8-core ratio. Measured single pair at 4096:
-# speedup 3.53/4 (raw 0.88), identical checksums; at 2048 the same
-# engine reads raw 0.68 purely because the parallel section halves while
-# the fixed cost stays. Override: SPARK_GRAFT_BENCH_PAGES.
-PAGES_PER_HOST = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "4096"))
-LINKS_PER_PAGE = int(os.environ.get("SPARK_GRAFT_BENCH_LINKS", "240"))
-WORDS_PER_PAGE = int(os.environ.get("SPARK_GRAFT_BENCH_WORDS", "1200"))
-# tmpfs (RAM-backed) for corpus, checkpoints, and shuffle spill: the
-# sandbox's shared disk has multi-second latency spikes that add ±50%
-# run-to-run noise to the scaling measurement; the crawl state fits in a
-# fraction of the 128 GiB RAM.
-BENCH_TMP = os.environ.get(
-    "SPARK_GRAFT_BENCH_TMP",
-    "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp",
-)
-CORPUS_PATH = os.environ.get(
-    "SPARK_GRAFT_BENCH_CORPUS",
-    f"{BENCH_TMP}/sps_bench/pages_{N_HOSTS}x{PAGES_PER_HOST}"
-    f"x{LINKS_PER_PAGE}w{WORDS_PER_PAGE}.parquet",
-)
+ALLOWED_CPUS = len(os.sched_getaffinity(0))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or ALLOWED_CPUS)
+PROFILE = os.environ.get("SPARK_GRAFT_PROFILE", "") == "1"
 
-HEADLINE = [
-    "politeness_topk",
-    "fifo_batch",
-    "anti_join_seen",
-    "first_writer_dedup",
-    "fetch_join",
-    "per_page_counts",
-    "frontier_stats",
-    "tpch_q1_like",
-    "tpch_q3_like",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    # pairs → clusters (iterative label propagation): tracks the cost of
-    # the O(log diameter) join rounds against the pair-gen ops above
-    "dedup_components",
-    # pairs → surviving corpus (clusters + anti-join): the pipeline's
-    # end product, priced end-to-end
-    "dedup_canonical",
-    "dedup_minhash_lsh",
-    # the full production chain (LSH candidates → exact verify →
-    # components → canonical corpus) priced as ONE job
-    "dedup_pipeline_lsh",
-    "dedup_simhash",
-    "embedding_dup_pairs_gated",
-    "config_url_log",
-    "text_quality",
-    "text_langid",
-    "text_winnowing",
-    "text_tokens_bpe",
-    "knn_bruteforce",
-    "knn_lsh",
-    "knn_ivf",
-    # the k-means-refined default's cost tracked against its seed-codebook
-    # baseline (VERDICT r3 task #4): the delta between these two IS the
-    # price of the Lloyd refinement job
-    "knn_ivf_seed",
-]
+BUDGET_S = 1500.0  # the whole run, from process start
+QUERY_RESERVE_S = 300.0  # no crawl leg starts inside this much of the end
+STOP_MARGIN_S = 30.0  # no query starts inside this much of the end
+LEG_CORES = (2, 8)  # N → 4N cores
+MAX_PAIRS = 3
+CONTROL_GROUPS_PER_CORE = 2  # parquet row groups (≈400 pages each)
+# hub-first hosts (host 0 is 8× larger), 240 links and 1 200 words per
+# page, so the parallel parse dominates the per-superstep fixed costs
+N_HOSTS, PAGES_PER_HOST, LINKS_PER_PAGE, WORDS_PER_PAGE = 48, 384, 240, 1200
+WORK = os.path.join(REPO, ".bench_work")
+CORPUS_PATH = os.path.join(WORK, f"pages_{N_HOSTS}x{PAGES_PER_HOST}"
+                           f"x{LINKS_PER_PAGE}w{WORDS_PER_PAGE}.parquet")
+RECORD = os.path.join(WORK, "bench_record.json")
+# local mode: the driver heap is the executor heap; a fifth of physical
+# memory leaves room for the Python workers beside it
+HEAP_GB = max(1, os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+              // 5 // 2**30)
 
 
 def make_spark(cores: int, app: str):
     from pyspark.sql import SparkSession
 
-    # SPARK_GRAFT_EVENTLOG=1: write the Spark event log (job/stage/task
-    # timings) for offline critical-path analysis — diagnostics only,
-    # never on during a measured bench run
-    evlog = os.environ.get("SPARK_GRAFT_EVENTLOG", "") == "1"
-    if evlog:
-        os.makedirs(f"{BENCH_TMP}/sps_eventlog", exist_ok=True)
-
-    # parallelismFirst stays at Spark's default (true): with =false the
-    # 64 MB advisory size collapses every sub-64 MB exchange to ONE
-    # reducer — event-log profiling showed the crawl's dedup aggregate
-    # (625k rows ≈ 40 MB), the frontier-advance MERGE, and the seq-rank
-    # window each running as a single 4-9 s SERIAL task per superstep, a
-    # fixed cost that torpedoes N→4N scaling (same absolute seconds at
-    # every core count). parallelism-first coalesces small shuffles to
-    # ~defaultParallelism ≥1 MB partitions instead: ~25 ms/task dispatch
-    # × cores is noise, and every post-shuffle stage keeps cluster-width
-    # parallelism — also the right behavior on a real cluster.
-    return (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app)
-        # local mode = one JVM: the driver heap IS the executor heap.
-        # 48g of the 128 GiB box; html binary batches are wide, so cap the
-        # vectorized reader batch at 1024 rows (1024 × ~35 KB ≈ 36 MB/task)
-        .config("spark.driver.memory", "48g")
-        # pin JVM GC parallelism to the simulated cluster size — otherwise
-        # G1 uses all 32 machine threads and quietly subsidizes the
-        # low-core run, skewing the scaling ratio
-        # -Xms = -Xmx: G1 sizes regions for the full heap from the start,
-        # so the timed crawl doesn't pay growth-driven full GCs mid-leg
-        # (measured: the first crawl in a fresh JVM ran ~16 s slower than
-        # the second purely on heap-growth + codegen warm-up; the plan
-        # warm-up crawl can't absorb heap growth because it's data-sized)
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms48g -XX:ParallelGCThreads={cores} "
-            f"-XX:ConcGCThreads={max(1, cores // 4)}",
-        )
-        .config("spark.local.dir", f"{BENCH_TMP}/sps_spark_local")
-        .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
-        # html pages are fat rows: 16 MB scan splits keep the pages-scan
-        # side of fetch/extract at full core fan-out (128 MB default gave
-        # 2-3 input tasks for the whole corpus) while halving the
-        # serial task-dispatch cost of the 8 MB splits used previously
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PART_BYTES", "16m"),
-        )
-        .config("spark.sql.shuffle.partitions", str(max(32, 2 * cores)))
-        .config("spark.default.parallelism", str(cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32m")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.eventLog.enabled", str(evlog).lower())
-        .config("spark.eventLog.dir", f"file://{BENCH_TMP}/sps_eventlog")
-        .getOrCreate()
-    )
+    conf = {
+        "spark.driver.memory": f"{HEAP_GB}g",
+        # -Xms = -Xmx: the heap never grows mid-leg; GC threads sized to the
+        # leg, or G1 would use every machine thread and subsidize the low leg
+        "spark.driver.extraJavaOptions": f"-Xms{HEAP_GB}g -XX:ParallelGCThreads="
+        f"{cores} -XX:ConcGCThreads={max(1, cores // 4)}",
+        "spark.local.dir": os.path.join(WORK, "spark-local"),
+        # html rows are wide: 1024-row reader batches (~36 MB per task) and
+        # 16 MB scan splits keep the pages scan at full core fan-out
+        "spark.sql.parquet.columnarReaderBatchSize": "1024",
+        "spark.sql.files.maxPartitionBytes": "16m",
+        "spark.sql.shuffle.partitions": str(max(32, 2 * cores)),
+        "spark.default.parallelism": str(cores),
+        # AQE keeps its default parallelism-first coalescing: a sub-64 MB
+        # exchange keeps ~cores reducers, not one serial task per superstep
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32m",
+        "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
+    }
+    spark = (SparkSession.builder.master(f"local[{cores}]").appName(app)
+             .config(map=conf).getOrCreate())
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
-# ---------------------------------------------------------------------------
-# crawl run (subprocess mode)
-# ---------------------------------------------------------------------------
+def pin(cores: int) -> set:
+    """Pin this process tree to the first ``cores`` allowed CPUs."""
+    before = os.sched_getaffinity(0)
+    os.sched_setaffinity(0, set(sorted(before)[:cores]))
+    return before
+
 
 def crawl_run(cores: int) -> dict:
-    import tempfile
+    """One leg in this fresh process: untimed warm-up, then the timed crawl."""
+    import shutil
 
-    # pin THIS process (and everything it spawns: the local-mode JVM, the
-    # Python UDF workers) to exactly `cores` CPUs. local[N] alone only
-    # caps task slots — JVM auxiliary threads (parquet decode, shuffle
-    # compression, GC, Netty) would otherwise run on the machine's spare
-    # cores and quietly subsidize the LOW-core run, understating the
-    # measured N→4N scaling. Affinity makes "local[2] vs local[8]" an
-    # honest 2-CPU vs 8-CPU machine comparison — the sandbox stand-in for
-    # two cluster sizes. Pin to the first N CPUs of the ALLOWED set (a
-    # container cpuset may not start at CPU 0 — range(cores) would then
-    # EINVAL or silently under-pin).
-    allowed = sorted(os.sched_getaffinity(0))
-    os.sched_setaffinity(0, set(allowed[:cores]))
-
+    pin(cores)
     from pyspark.sql import functions as F
 
-    from scrapy_playwright_scrapegraphai_spark.plans.driver import (
-        CrawlConfig,
-        CrawlEngine,
-    )
-    from scrapy_playwright_scrapegraphai_spark.sources.bench_corpus import (
-        bench_seeds_and_robots,
-    )
-    from scrapy_playwright_scrapegraphai_spark.sources.synth import (
-        ROBOTS_DDL,
-        SEEDS_DDL,
-    )
+    from scrapy_playwright_scrapegraphai_spark.plans.driver import CrawlConfig as Cfg
+    from scrapy_playwright_scrapegraphai_spark.plans.driver import CrawlEngine
+    from scrapy_playwright_scrapegraphai_spark.sources import bench_corpus, synth
 
     spark = make_spark(cores, f"sps-crawl-{cores}")
-    spark.sparkContext.setLogLevel("ERROR")
+    seeds, robots = (
+        spark.createDataFrame([tuple(row.values()) for row in rows], ddl)
+        for rows, ddl in zip(bench_corpus.bench_seeds_and_robots(N_HOSTS),
+                             (synth.SEEDS_DDL, synth.ROBOTS_DDL)))
     pages = spark.read.parquet(CORPUS_PATH)
-    seeds_rows, robots_rows = bench_seeds_and_robots(N_HOSTS)
-    seeds = spark.createDataFrame(
-        [tuple(s.values()) for s in seeds_rows], SEEDS_DDL
-    )
-    robots = spark.createDataFrame(
-        [tuple(r.values()) for r in robots_rows], ROBOTS_DDL
-    )
-    cfg = CrawlConfig(
-        superstep_seconds=1e6,  # politeness budget ≫ frontier → max admission
-        expected_urls=2_000_000,
-        profile=os.environ.get("SPARK_GRAFT_PROFILE", "") == "1",
-    )
+    warm = spark.read.parquet(bench_corpus.warm_corpus_path(CORPUS_PATH))
+    tmp = os.path.join(WORK, f"ckpt_{os.getpid()}")
+    # untimed: a micro-crawl with the same seeds compiles every superstep
+    # plan shape in this JVM (retry_times=0 skips its pointless retry
+    # step), then the main corpus's parquet footers are read by a scan
+    # whose filter prunes every page
+    CrawlEngine(spark, warm, seeds, robots, f"{tmp}/warm",
+                Cfg(superstep_seconds=1e6, retry_times=0)).run()
+    pages.select("url", "html").filter(F.col("url").isin(["~sentinel~"])).count()
 
-    # warm-up: an UNTIMED micro-crawl over the warm corpus (identical hub
-    # pages + 3 pages per host) compiles every superstep plan shape in this
-    # JVM — wholestage-codegen classes, window/join execs, the Python
-    # worker pool, the Hadoop committer — with the same embedded literals
-    # as the timed crawl (same seeds → same In-list and next_seq). First-
-    # plan-execution costs are seconds each and purely serial, so leaving
-    # them in the timed section would understate scaling efficiency at
-    # BOTH core counts while measuring JIT state, not the engine. Standard
-    # steady-state benchmarking practice; documented in BASELINE.md.
-    from scrapy_playwright_scrapegraphai_spark.sources.bench_corpus import (
-        warm_corpus_path,
-    )
-
-    import shutil as _sh
-
-    # retry_times=0 skips the warm-up's pointless retry superstep (56k
-    # frontier rows re-ranked to fetch pages that aren't in the micro
-    # corpus); only the tiny updates-CASE subtree differs from the timed
-    # crawl's plans, everything else matches literal-for-literal
-    warm_cfg = CrawlConfig(
-        superstep_seconds=1e6, expected_urls=2_000_000, retry_times=0,
-    )
-    warm_ckpt = tempfile.mkdtemp(prefix=f"sps_warm_ckpt_{cores}_", dir=BENCH_TMP)
-    warm_pages = spark.read.parquet(warm_corpus_path(CORPUS_PATH))
-    CrawlEngine(spark, warm_pages, seeds, robots, warm_ckpt, warm_cfg).run()
-    _sh.rmtree(warm_ckpt, ignore_errors=True)
-    # warm the MAIN corpus's scan metadata too (parquet footer +
-    # ColumnIndex parse + vectorized-reader init): the warm-up crawl reads
-    # only the micro corpus, so without this the timed leg's first seed
-    # point-lookup pays ~2 s of one-time per-FILE metadata parse — a
-    # fixed, core-count-independent cost that measures cold caches, not
-    # the engine (a steady-state cluster crawl has table metadata hot; cf.
-    # the engine's own background prewarm at run() start — run here before
-    # the timer so none of it overlaps the timed leg's first superstep).
-    # The sentinel prunes every data page, so nothing is decoded and the
-    # burn is ~2 s of footer parse.
-    pages.select("url", "html").filter(
-        F.col("url").isin(["~prewarm~sentinel~"])
-    ).count()
-    # let the host's burn budget replenish after the warm-up burn before
-    # the TIMED section starts — JIT/codegen state doesn't decay while
-    # idle, but this VM's sustained-burn limiter does recover (measured:
-    # legs starting right after a full-core burn read up to ~50% slow).
-    # Measurement hygiene for this sandbox only; a real cluster has no
-    # burn limiter and would skip this.
-    time.sleep(float(os.environ.get("SPARK_GRAFT_WARM_REST", "45")))
-
-    ckpt = tempfile.mkdtemp(prefix=f"sps_bench_ckpt_{cores}_", dir=BENCH_TMP)
     t0 = time.monotonic()
-    result = CrawlEngine(spark, pages, seeds, robots, ckpt, cfg).run()
+    # politeness budget ≫ frontier → maximal admission per superstep
+    result = CrawlEngine(spark, pages, seeds, robots, f"{tmp}/timed",
+                         Cfg(superstep_seconds=1e6, profile=PROFILE)).run()
     wall = time.monotonic() - t0
-
     frontier = result.frontier
     n_rows = frontier.count()
     fetched = frontier.filter(F.col("url_state") == "processed").count()
-    # order-independent exact checksum over (seq, url, state, depth);
-    # pmod keeps the ANSI-mode sum far from long overflow
-    checksum = frontier.select(
-        F.sum(
-            F.pmod(
-                F.xxhash64(
-                    F.col("discovery_seq"), F.col("url"), F.col("url_state"),
-                    F.col("depth"),
-                ),
-                F.lit(2**31),
-            )
-        ).alias("c")
-    ).collect()[0]["c"]
-    metrics = [r.asDict() for r in result.metrics.orderBy("superstep").collect()]
+    # order-independent exact checksum; pmod keeps the sum far from overflow
+    checksum = frontier.select(F.sum(F.pmod(F.xxhash64(
+        "discovery_seq", "url", "url_state", "depth"), F.lit(2**31)))).first()[0]
+    steps = [r["wall_time_s"] for r in result.metrics.orderBy("superstep").collect()]
     spark.stop()
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)  # tmpfs hygiene
-    return {
-        "cores": cores,
-        "wall_s": wall,
-        "frontier_rows": n_rows,
-        "fetched_pages": fetched,
-        "urls_per_sec": (n_rows + fetched) / wall,
-        "checksum": checksum,
-        "supersteps": len(metrics),
-        "superstep_wall_s": [round(m["wall_time_s"], 2) for m in metrics],
-    }
+    shutil.rmtree(tmp, ignore_errors=True)
+    return {"cores": cores, "wall_s": round(wall, 2), "frontier_rows": n_rows,
+            "fetched_pages": fetched, "checksum": checksum,
+            "urls_per_sec": round((n_rows + fetched) / wall, 1),
+            "superstep_wall_s": [round(s, 2) for s in steps]}
 
 
-# ---------------------------------------------------------------------------
-# main
-# ---------------------------------------------------------------------------
-
-def _hw_control_one(k: int, groups_per_core: int = 8) -> float:
-    """Hardware-ceiling control at ONE core count: the SAME fused
-    page-parse kernel via plain multiprocessing (no Spark, no JVM),
-    pinned to the first k allowed CPUs like the Spark runs. Returns
-    pages/sec. Measured immediately BEFORE and AFTER each crawl (see
-    main) because this VM's sustained-clock state drifts on a scale of
-    minutes — a control measured once up front misses throttling that
-    hits only the later crawl, which is exactly the run-to-run noise the
-    normalization exists to remove.
-
-    Work unit = one parquet ROW GROUP (≈400 pages), one task per group,
-    dynamically scheduled (imap_unordered) with ``groups_per_core``
-    groups per core. Each worker decodes ONLY its own groups — the
-    previous stride-over-shared-prefix form made every worker decode the
-    full prefix, so the redundant-decode fraction GREW with k and the
-    control under-read the machine at high core counts (fake per-core
-    'degradation', ~30% idle on the pinned CPUs at k=8)."""
-    import multiprocessing as mp
-
-    full_affinity = os.sched_getaffinity(0)
-    os.sched_setaffinity(0, set(sorted(full_affinity)[:k]))
-    try:
-        import pyarrow.parquet as pq
-
-        n_groups_total = pq.ParquetFile(CORPUS_PATH).metadata.num_row_groups
-        n = min(groups_per_core * k, n_groups_total)
-        with mp.Pool(k) as pool:
-            # warm-up: one group per worker (imports + page cache hot)
-            pages = list(
-                pool.imap_unordered(
-                    _parse_rg, [(CORPUS_PATH, g % n_groups_total)
-                                for g in range(k)]
-                )
-            )
-            t0 = time.monotonic()
-            pages = list(
-                pool.imap_unordered(
-                    _parse_rg, [(CORPUS_PATH, g) for g in range(n)]
-                )
-            )
-            dt = time.monotonic() - t0
-    finally:
-        os.sched_setaffinity(0, full_affinity)
-    return sum(pages) / dt
-
-
-def _parse_rg(args) -> int:
-    """Parse every page of one parquet row group (the control kernel)."""
-    path, group = args
+def _parse_row_group(group: int) -> int:
+    """Parse every page of one corpus row group with the engine's kernel."""
     import pyarrow.parquet as pq
 
     from scrapy_playwright_scrapegraphai_spark.functions import kernels
 
-    tbl = pq.ParquetFile(path).read_row_group(group, columns=["url", "html"])
-    urls = tbl["url"].to_pylist()
-    htmls = tbl["html"].to_pylist()
-    for url, html in zip(urls, htmls):
+    tbl = pq.ParquetFile(CORPUS_PATH).read_row_group(group, columns=["url", "html"])
+    for url, html in zip(tbl["url"].to_pylist(), tbl["html"].to_pylist()):
         links, _text = kernels.parse_page(html, url)
         kernels.classify_links(url, links, 2, [".pdf"], "/page/", 1, 1)
-    return len(urls)
+    return tbl.num_rows
+
+
+def control(k: int) -> float:
+    """Pages/s of the parse kernel in k processes pinned like a k-core leg,
+    each parsing whole row groups: no Spark, no JVM."""
+    import multiprocessing as mp
+
+    import pyarrow.parquet as pq
+
+    n_groups = pq.ParquetFile(CORPUS_PATH).metadata.num_row_groups
+    before = pin(k)
+    try:
+        # spawn: fork is unsafe in a process that may hold threads
+        with mp.get_context("spawn").Pool(k) as pool:
+            pool.map(_parse_row_group, [g % n_groups for g in range(k)])  # warm
+            t0 = time.monotonic()
+            n = sum(pool.map(_parse_row_group,
+                             range(min(CONTROL_GROUPS_PER_CORE * k, n_groups))))
+            return round(n / (time.monotonic() - t0), 1)
+    finally:
+        os.sched_setaffinity(0, before)
+
+
+def save(record: dict) -> None:
+    with open(RECORD + ".tmp", "w") as fh:
+        json.dump(record, fh, indent=1)
+    os.replace(RECORD + ".tmp", RECORD)
+
+
+def run_leg(cores: int, deadline: float) -> dict:
+    """One crawl leg in a fresh subprocess, between two kernel controls."""
+    pre = control(cores)
+    try:
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--crawl-run", str(cores)],
+            capture_output=True, text=True, cwd=REPO,
+            timeout=max(1.0, deadline - time.monotonic()))
+    except subprocess.TimeoutExpired:
+        return {"cores": cores, "skipped": "ran past the deadline"}
+    line = [ln for ln in proc.stdout.splitlines() if ln.startswith("CRAWLJSON:")]
+    if not line:
+        print(proc.stderr[-4000:], file=sys.stderr)
+        raise RuntimeError(f"crawl leg at {cores} cores failed")
+    leg = dict(json.loads(line[-1][len("CRAWLJSON:"):]),
+               control_pre_post=[pre, control(cores)])
+    print(f"# local[{cores}]: {leg['wall_s']} s, {leg['urls_per_sec']} urls/s, "
+          f"control {leg['control_pre_post']} pages/s", file=sys.stderr)
+    return leg
+
+
+def pair_row(lo: dict, hi: dict, order: str, oversubscribed: bool) -> dict:
+    ratio = hi["cores"] / lo["cores"]
+    speedup = hi["urls_per_sec"] / lo["urls_per_sec"]
+    hw_speedup = (statistics.mean(hi["control_pre_post"])
+                  / statistics.mean(lo["control_pre_post"]))
+    # the last superstep is the streaming wave: the parallel section
+    wave = lo["superstep_wall_s"][-1] / hi["superstep_wall_s"][-1]
+    eff = {"efficiency": speedup / ratio, "hw_control_efficiency": hw_speedup / ratio,
+           "efficiency_normalized": speedup / hw_speedup,
+           "parallel_section_scaling": wave / ratio}
+    return {"order": order, "urls_per_sec_low": lo["urls_per_sec"],
+            "urls_per_sec_high": hi["urls_per_sec"], "wall_s_low": lo["wall_s"],
+            "wall_s_high": hi["wall_s"], "speedup": round(speedup, 3),
+            **{k: None if oversubscribed else round(v, 3) for k, v in eff.items()}}
+
+
+def scaling(pairs: list[dict], legs: list[dict]) -> dict:
+    """Medians over the completed pairs; efficiencies stay null when the
+    high leg had more cores than the host allows."""
+    lo, hi = LEG_CORES
+    out = {"cores_low": lo, "cores_high": hi, "allowed_cpus": ALLOWED_CPUS,
+           "oversubscribed": hi > ALLOWED_CPUS, "pairs": len(pairs)}
+    for key in ("urls_per_sec_low", "urls_per_sec_high", "wall_s_low",
+                "wall_s_high", "speedup", "efficiency", "hw_control_efficiency",
+                "efficiency_normalized", "parallel_section_scaling"):
+        vals = [p[key] for p in pairs if p[key] is not None]
+        out[key] = round(statistics.median(vals), 3) if vals else None
+    done = [g for g in legs if "checksum" in g]
+    out["checksum_equal"] = len({g["checksum"] for g in done}) == 1 if done else None
+    out["frontier_rows"] = done[0]["frontier_rows"] if done else None
+    return out
+
+
+def result_line(record: dict) -> str:
+    """The stdout contract line: the contract query seconds and the scaling
+    scalars only; the per-leg detail stays in the record file."""
+    sc = record["scaling"]
+    return json.dumps({"metric": f"crawl_urls_per_sec_local{sc['cores_high']}",
+                       "value": sc["urls_per_sec_high"], "unit": "urls/sec",
+                       "queries": record["queries"], "sf": record["sf"],
+                       "scaling": sc}, separators=(",", ":"))
+
+
+def run_queries(record: dict, deadline: float) -> None:
+    """Each contract query once, forced by a noop write: ``queries`` maps
+    name → seconds, or None (skipped or failed, why in ``query_notes``)."""
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    spark = make_spark(CPUS, "sps-bench-queries")
+    try:
+        noop(QUERIES["politeness_topk"](spark, SF_DIR))  # untimed session warm-up
+        slowest = 0.0
+        for name, fn in QUERIES.items():
+            if time.monotonic() + slowest > deadline - STOP_MARGIN_S:
+                record["query_notes"][name] = "skipped: past the deadline"
+                continue
+            t0 = time.monotonic()
+            try:
+                noop(fn(spark, SF_DIR))
+                record["queries"][name] = round(time.monotonic() - t0, 2)
+                slowest = max(slowest, record["queries"][name])
+            except Exception as e:  # noqa: BLE001 — recorded, not fatal
+                record["query_notes"][name] = f"failed: {e!r}"[:300]
+            print(f"# query {name}: {record['queries'][name]} s", file=sys.stderr)
+            save(record)
+    finally:
+        spark.stop()
 
 
 def main() -> None:
     if len(sys.argv) >= 3 and sys.argv[1] == "--crawl-run":
         print("CRAWLJSON:" + json.dumps(crawl_run(int(sys.argv[2]))))
         return
+    from scrapy_playwright_scrapegraphai_spark.sources import bench_corpus
 
-    out: dict = {"sf": SF_DIR, "unit": "urls/sec"}
-
-    # 1) bench corpus (generated once, reused by both crawl runs)
-    from scrapy_playwright_scrapegraphai_spark.sources.bench_corpus import (
-        generate_bench_corpus,
-    )
-
-    t0 = time.monotonic()
-    facts = generate_bench_corpus(
+    deadline = T_START + BUDGET_S
+    corpus = bench_corpus.generate_bench_corpus(
         CORPUS_PATH, N_HOSTS, PAGES_PER_HOST, LINKS_PER_PAGE,
-        words_per_page=WORDS_PER_PAGE,
-    )
-    print(
-        f"# corpus: {facts['rows']} pages "
-        f"(regen={facts['regenerated']}, {time.monotonic()-t0:.1f}s)",
-        file=sys.stderr,
-    )
-
-    # 2) crawl throughput at local[N] vs local[4N] — fresh JVM each,
-    # and BEFORE the operator-queries phase: the queries run a multi-
-    # minute full-width (local[32]) burn, and on this host a sustained
-    # burn depletes a clock budget that the NEXT few minutes inherit —
-    # round 3/4 artifacts show the scaling repeat that directly followed
-    # the queries phase reading 15-25% slow on its first leg. Scaling
-    # first means repeat 1 starts from whatever rest the host had, and
-    # the queries (which have no cross-leg ratio to distort) absorb the
-    # post-scaling state instead.
-    # REPEATED (default 3×) with the median reported. The scaling
-    # criterion is about the JOB's parallel fraction; this VM's per-core
-    # throughput itself degrades as occupancy rises (sustained-clock /
-    # hypervisor effects) AND drifts minute-to-minute, so (a) a
-    # multiprocessing control of the same kernel at the same core counts
-    # sandwiches every crawl leg and the normalized efficiency (spark
-    # speedup / control speedup) is reported beside the raw one, and
-    # (b) the whole pair is repeated and the MEDIAN raw + normalized
-    # efficiencies are the headline numbers — a single throttled window
-    # can no longer dominate the artifact, and the per-run spread is
-    # recorded so the noise band is visible instead of hidden.
-    # Overrides: SPARK_GRAFT_SCALE_CORES="8,32", SPARK_GRAFT_SCALE_REPEATS.
-    import statistics
-
-    lo, hi = (
-        int(x)
-        for x in os.environ.get("SPARK_GRAFT_SCALE_CORES", "2,8").split(",")
-    )
-    repeats = int(os.environ.get("SPARK_GRAFT_SCALE_REPEATS", "3"))
-    # idle pause before each crawl leg: this host's burn limiter
-    # replenishes during idle on a minutes scale, and a leg that starts
-    # on a depleted budget (inherited from the PREVIOUS leg's burn) reads
-    # up to ~50% slow — measured directly in round 3, where the only
-    # repeats whose 8-core leg started rested hit raw 0.70–0.78 while
-    # legs starting right after a 5-minute 2-core burn read 0.39–0.52.
-    cooldown_s = float(os.environ.get("SPARK_GRAFT_SCALE_COOLDOWN", "60"))
-    # calm-host gate (round 4): a FIXED cooldown is the wrong tool for a
-    # limiter whose recovery time depends on how much the previous legs
-    # burned — round-3/4 artifacts show 120 s sometimes restoring full
-    # speed and sometimes leaving the next leg 40% slow. Instead, after
-    # the minimum cooldown, the pre-leg hardware control doubles as a
-    # host-state probe: if it reads below CALM_FRAC of the best control
-    # seen this bench AT THE SAME core count, idle and re-probe (upper
-    # bound CALM_TRIES). Each leg then starts at a comparable,
-    # near-rested host state — which is the experimental condition the
-    # N→4N criterion assumes (two IDENTICAL clusters, not one rested and
-    # one depleted). The gate never touches the timed section; every
-    # probe reading and the total wait are recorded in the artifact.
-    calm_frac = float(os.environ.get("SPARK_GRAFT_CALM_FRAC", "0.9"))
-    calm_tries = int(os.environ.get("SPARK_GRAFT_CALM_TRIES", "8"))
-    calm_retry_s = float(os.environ.get("SPARK_GRAFT_CALM_RETRY", "45"))
-    calm_best: dict[int, float] = {}
-
-    def _one_leg(cores: int) -> tuple[dict, dict]:
-        time.sleep(cooldown_s)
-        probes: list[float] = []
-        t_gate = time.monotonic()
-        # cold-start: the FIRST probe at a core count would otherwise
-        # define the baseline and trivially pass — a leg could start on a
-        # depleted host just because nothing better had been seen yet.
-        # Require two spaced probes before the first leg at each count so
-        # the baseline reflects at least one recovery interval.
-        first_at_count = cores not in calm_best
-        for _ in range(calm_tries):
-            ctl_pre = _hw_control_one(cores)
-            probes.append(round(ctl_pre, 1))
-            calm_best[cores] = max(calm_best.get(cores, 0.0), ctl_pre)
-            if ctl_pre >= calm_frac * calm_best[cores] and (
-                not first_at_count or len(probes) >= 2
-            ):
-                break
-            time.sleep(calm_retry_s)
-        gate_wait = time.monotonic() - t_gate
-        if len(probes) > 1:
-            print(
-                f"# calm gate at {cores} cores: {len(probes)} probes "
-                f"{probes} over {gate_wait:.0f}s",
-                file=sys.stderr,
-            )
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--crawl-run", str(cores)],
-            capture_output=True, text=True, cwd=REPO,
-            env={**os.environ, "SPARK_GRAFT_BENCH_CORPUS": CORPUS_PATH},
-        )
-        line = [ln for ln in proc.stdout.splitlines() if ln.startswith("CRAWLJSON:")]
-        if not line:
-            print(proc.stdout[-2000:], file=sys.stderr)
-            print(proc.stderr[-4000:], file=sys.stderr)
-            raise RuntimeError(f"crawl run at {cores} cores failed")
-        run = json.loads(line[-1][len("CRAWLJSON:"):])
-        ctl_post = _hw_control_one(cores)
-        ctl = {
-            "pre": round(ctl_pre, 1),
-            "post": round(ctl_post, 1),
-            "mean": (ctl_pre + ctl_post) / 2.0,
-            "calm_probes": probes,
-            "calm_wait_s": round(gate_wait, 1),
-        }
-        print(
-            f"# crawl local[{cores}]: {run['wall_s']:.1f}s "
-            f"{run['urls_per_sec']:.0f} urls/s "
-            f"(hw control {ctl_pre:.0f}/{ctl_post:.0f} pages/s)",
-            file=sys.stderr,
-        )
-        return run, ctl
-
-    # mid-leg collapse validity rule (round 4): a repeat is INVALID when
-    # either leg's post-control reads below VALID_FRAC of its pre-control
-    # — the sandwiching controls witnessed the host's burn limiter
-    # engaging DURING the timed leg, i.e. the experimental condition the
-    # N→4N criterion assumes (two identically-provisioned clusters) was
-    # violated mid-measurement. Invalid repeats are NOT discarded: they
-    # are recorded in full under `invalid_runs` with the triggering
-    # controls, and the repeat is re-run, bounded by MAX_EXTRA extra
-    # attempts per bench (exhausted ⇒ the collapsed repeat counts, so the
-    # rule can never manufacture a result out of retries). The rule is
-    # one-sided by construction — it can only reject repeats the host
-    # provably corrupted, never fast ones — and every rejection is in the
-    # artifact for audit. (It is deliberately narrow: scaling4 repeat 1's
-    # slow 8-core leg with FLAT controls would NOT be rejected.)
-    valid_frac = float(os.environ.get("SPARK_GRAFT_VALID_FRAC", "0.7"))
-    max_extra = int(os.environ.get("SPARK_GRAFT_SCALE_MAX_EXTRA", "2"))
-    invalid_runs: list[dict] = []
-    extra_used = 0
-    run_details: list[dict] = []
-    checksums: set = set()
-    while len(run_details) < repeats:
-        # alternate which parallelism level runs first: leg order is not
-        # thermally neutral (the leg that runs first sees a cooler VM),
-        # so a fixed order would bias every repeat the same way; the
-        # median over alternating orders cancels it. Alternation follows
-        # ATTEMPTS (including invalidated ones) so retries keep cycling
-        # the thermal order instead of repeating one.
-        rep = len(run_details)
-        attempt = rep + extra_used
-        if attempt % 2 == 0:
-            rlo, clo = _one_leg(lo)
-            rhi, chi = _one_leg(hi)
-        else:
-            rhi, chi = _one_leg(hi)
-            rlo, clo = _one_leg(lo)
-        assert rlo["checksum"] == rhi["checksum"], (
-            "seen-set/ordering mismatch across parallelism levels!"
-        )
-        assert rlo["frontier_rows"] == rhi["frontier_rows"]
-        checksums.add(rlo["checksum"])
-        speedup = rhi["urls_per_sec"] / rlo["urls_per_sec"]
-        hw_speedup = chi["mean"] / clo["mean"]
-        detail = (
-            {
-                "order": "lo_first" if attempt % 2 == 0 else "hi_first",
-                # attempt index (counting invalidated ones) so order skew
-                # among the VALID runs is auditable at a glance — retries
-                # flip the thermal order, which can leave the valid set
-                # leaning toward one order
-                "attempt": attempt,
-                "urls_per_sec_low": round(rlo["urls_per_sec"], 1),
-                "urls_per_sec_high": round(rhi["urls_per_sec"], 1),
-                "wall_s_low": round(rlo["wall_s"], 2),
-                "wall_s_high": round(rhi["wall_s"], 2),
-                "speedup": round(speedup, 3),
-                "efficiency": round(speedup / (hi / lo), 3),
-                "hw_control_pre_post": {
-                    str(lo): [clo["pre"], clo["post"]],
-                    str(hi): [chi["pre"], chi["post"]],
-                },
-                "calm_gate": {
-                    str(lo): {"probes": clo["calm_probes"],
-                              "wait_s": clo["calm_wait_s"]},
-                    str(hi): {"probes": chi["calm_probes"],
-                              "wait_s": chi["calm_wait_s"]},
-                },
-                "hw_control_speedup": round(hw_speedup, 3),
-                "hw_control_efficiency": round(hw_speedup / (hi / lo), 3),
-                "efficiency_normalized": round(
-                    min(1.0, speedup / hw_speedup), 3
-                ),
-                "efficiency_normalized_unclamped": round(
-                    speedup / hw_speedup, 3
-                ),
-                "superstep_wall_s_high": rhi["superstep_wall_s"],
-                "superstep_wall_s_low": rlo["superstep_wall_s"],
-                # the big-wave superstep IS the parallel section (fused
-                # parse + explode + dedup + bloom + advance/write tail);
-                # its lo/hi wall ratio over the core ratio is the
-                # job-side scaling with the per-run fixed costs (seed
-                # superstep, plan builds) excluded — the transferable
-                # number for a cluster whose per-core clock doesn't
-                # depend on burn duration (this VM's does; the controls
-                # sandwich each leg to witness it)
-                "parallel_section_scaling": round(
-                    (rlo["superstep_wall_s"][-1] / rhi["superstep_wall_s"][-1])
-                    / (hi / lo), 3,
-                ) if rhi["superstep_wall_s"] else None,
-            }
-        )
-        collapsed = [
-            c for c, ctl in ((lo, clo), (hi, chi))
-            if ctl["post"] < valid_frac * ctl["pre"]
-        ]
-        if collapsed:
-            # always annotate a control-proven collapse — including the
-            # max_extra-exhausted case where the corrupted repeat COUNTS
-            # (an auditor must not have to recompute post/pre ratios to
-            # notice a counted-but-collapsed repeat)
-            detail["collapsed_controls"] = collapsed
-        if collapsed and extra_used < max_extra:
-            extra_used += 1
-            detail["invalid"] = (
-                f"mid-leg host collapse at {collapsed} cores: "
-                f"post-control < {valid_frac}×pre-control"
-            )
-            invalid_runs.append(detail)
-            print(
-                f"# scaling repeat {rep + 1}/{repeats} INVALID "
-                f"({detail['invalid']}; raw would have been "
-                f"{detail['efficiency']:.3f}) — retrying "
-                f"({extra_used}/{max_extra} extra attempts used)",
-                file=sys.stderr,
-            )
-            continue
-        run_details.append(detail)
-        print(
-            f"# scaling repeat {rep + 1}/{repeats}: raw efficiency "
-            f"{run_details[-1]['efficiency']:.3f}, normalized "
-            f"{run_details[-1]['efficiency_normalized_unclamped']:.3f}",
-            file=sys.stderr,
-        )
-    # every repeat at every parallelism level must produce the identical
-    # seen set + ordering — the checksum is over (seq, url, state, depth)
-    assert len(checksums) == 1, f"checksum drift across repeats: {checksums}"
-
-    med = lambda key: statistics.median(r[key] for r in run_details)  # noqa: E731
-    rep_med = min(  # the repeat whose raw efficiency IS the median
-        run_details,
-        key=lambda r: abs(r["efficiency"] - med("efficiency")),
-    )
-    out["scaling"] = {
-        "cores_low": lo,
-        "cores_high": hi,
-        "repeats": repeats,
-        # headline values = per-repeat MEDIANS (raw first-class, not
-        # rescued by the control normalization; the per-run spread is in
-        # `runs`)
-        "urls_per_sec_low": round(med("urls_per_sec_low"), 1),
-        "urls_per_sec_high": round(med("urls_per_sec_high"), 1),
-        "wall_s_low": round(med("wall_s_low"), 2),
-        "wall_s_high": round(med("wall_s_high"), 2),
-        "speedup": round(med("speedup"), 3),
-        "efficiency": round(med("efficiency"), 3),
-        "hw_control_efficiency": round(med("hw_control_efficiency"), 3),
-        "efficiency_normalized": round(med("efficiency_normalized"), 3),
-        "efficiency_normalized_unclamped": round(
-            med("efficiency_normalized_unclamped"), 3
-        ),
-        "runs": run_details,
-        "invalid_runs": invalid_runs,
-        # leg-order mix of the VALID runs (retries flip thermal order, so
-        # the valid set can skew toward one order; disclosed for audit)
-        "order_balance": {
-            o: sum(1 for r in run_details if r["order"] == o)
-            for o in ("lo_first", "hi_first")
-        },
-        "validity_rule": (
-            f"repeat invalid (recorded above, re-run, max {max_extra} "
-            f"extra attempts) when either leg's post-control < "
-            f"{valid_frac}×pre-control — the sandwiching controls "
-            "witnessed the host's burn limiter engaging mid-leg"
-        ),
-        "identical_seen_set_and_ordering": True,
-        "frontier_rows": rhi["frontier_rows"],
-        "fetched_pages": rhi["fetched_pages"],
-        "supersteps": rhi["supersteps"],
-        "superstep_wall_s_high": rep_med["superstep_wall_s_high"],
-        "parallel_section_scaling": round(
-            statistics.median(
-                r["parallel_section_scaling"] for r in run_details
-                if r["parallel_section_scaling"] is not None
-            ), 3,
-        ),
-    }
-    out["metric"] = f"crawl_urls_per_sec_local{hi}"
-    out["value"] = out["scaling"]["urls_per_sec_high"]
-
-    # 3) headline operator queries at sf dir (skippable for scaling-only
-    # iteration runs: SPARK_GRAFT_BENCH_SKIP_QUERIES=1). Runs AFTER the
-    # scaling phase — see the ordering note above.
-    if os.environ.get("SPARK_GRAFT_BENCH_SKIP_QUERIES", "") != "1":
-        from scrapy_playwright_scrapegraphai_spark import entry_queries as EQ
-
-        spark = make_spark(CPUS, "sps-bench-queries")
-        spark.sparkContext.setLogLevel("ERROR")
-        # untimed warmup: absorbs one-time session costs (codegen,
-        # committer init, python worker spawn, parquet footer reads) so
-        # the FIRST timed query doesn't carry them
-        EQ.QUERIES["politeness_topk"](spark, SF_DIR).count()
-        # knn_ivf_seed moved out of the driver contract (≤50 entries) but
-        # stays a bench headline — the delta vs knn_ivf prices the Lloyd job
-        all_queries = {**EQ.QUERIES, **EQ.PYTEST_ONLY_QUERIES}
-        qtimes: dict[str, float] = {}
-        for name in HEADLINE:
-            fn = all_queries[name]
+        words_per_page=WORDS_PER_PAGE)
+    record = {"sf": SF_DIR, "budget_s": BUDGET_S, "heap_gb": HEAP_GB,
+              "corpus": dict(corpus, s=round(time.monotonic() - T_START, 1)),
+              "legs": [], "pairs": [], "queries": dict.fromkeys(QUERIES),
+              "query_notes": {}, "status": "running"}
+    lo, hi = LEG_CORES
+    slowest = 0.0
+    for i in range(MAX_PAIRS):
+        order = (lo, hi) if i % 2 == 0 else (hi, lo)
+        got = {}
+        for cores in order:
             t0 = time.monotonic()
-            n = fn(spark, SF_DIR).count()
-            qtimes[name] = round(time.monotonic() - t0, 3)
-            print(
-                f"# query {name}: {qtimes[name]}s ({n} rows)", file=sys.stderr
-            )
-        spark.stop()
-        out["queries"] = qtimes
-
-    print(json.dumps(out))
+            if t0 + slowest > deadline - QUERY_RESERVE_S:
+                got[cores] = {"cores": cores, "skipped": "past the deadline"}
+            else:
+                got[cores] = run_leg(cores, deadline - QUERY_RESERVE_S)
+                slowest = max(slowest, time.monotonic() - t0)
+            record["legs"].append(dict(got[cores], pair=i))
+            save(record)
+        if all("checksum" in got[c] for c in order):
+            record["pairs"].append(pair_row(
+                got[lo], got[hi], "lo_first" if i % 2 == 0 else "hi_first",
+                hi > ALLOWED_CPUS))
+    record["scaling"] = scaling(record["pairs"], record["legs"])
+    save(record)
+    if record["scaling"]["checksum_equal"] is False:
+        raise RuntimeError("crawl checksum differs across legs")
+    run_queries(record, deadline)
+    record.update(status="done", wall_s=round(time.monotonic() - T_START, 1))
+    save(record)
+    print(result_line(record))
 
 
 if __name__ == "__main__":

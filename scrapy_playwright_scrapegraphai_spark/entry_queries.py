@@ -1452,17 +1452,13 @@ def q_text_winnowing(spark, sf):
     """Winnowing document fingerprints (k=3-gram rolling hashes, window
     w=4 minima — Schleimer et al. SIGMOD'03) as pure JVM array
     expressions with a portable md5-derived hash; the oracle recomputes
-    every fingerprint (functions/text.py winnowing_exprs)."""
+    every fingerprint (functions/text.py winnowing)."""
     d = _t(spark, sf, "documents")
-    wx = T.winnowing_exprs(F.col("text"), k=3, w=4)
     # mirrored NOT NULL filter (oracle has the same WHERE): NULL docs carry
     # no fingerprints on either engine — minhash/simhash precedent
-    return d.filter(F.col("text").isNotNull()).select(
-        "doc_id",
-        wx["n_kgrams"].alias("n_kgrams"),
-        wx["n_fingerprints"].alias("n_fingerprints"),
-        wx["fp_min"].alias("fp_min"),
-        wx["fp_max"].alias("fp_max"),
+    docs = d.filter(F.col("text").isNotNull()).select("doc_id", "text")
+    return T.winnowing(docs, "text", k=3, w=4).select(
+        "doc_id", "n_kgrams", "n_fingerprints", "fp_min", "fp_max"
     )
 
 

@@ -12,6 +12,7 @@ import hashlib
 from typing import Iterator
 
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 from pyspark.sql.pandas.functions import pandas_udf
@@ -114,63 +115,75 @@ def bpe_token_count_expr(text) -> Column:
 _MERSENNE61 = (1 << 61) - 1
 
 
-def md5_le64_expr(s) -> Column:
-    """Portable 61-bit hash: little-endian uint64 of the first 8 md5
-    bytes, masked to 61 bits — equals DuckDB's
+def hex_le64_expr(md5_hex) -> Column:
+    """Portable 61-bit hash of an md5 hex string: little-endian uint64 of
+    its first 8 bytes, masked to 61 bits — equals DuckDB's
     ``md5_number_upper(s) & (2^61-1)`` and Python's
-    ``int.from_bytes(md5(s)[:8], 'little') & (2^61-1)``. Built from the
-    md5 hex string with bitwise ORs only (no arithmetic → no ANSI-mode
-    overflow), all JVM-side."""
-    md5 = F.md5(s)
+    ``int.from_bytes(md5(s)[:8], 'little') & (2^61-1)``. Bitwise ORs
+    only (no arithmetic → no ANSI-mode overflow), all JVM-side. Takes the
+    hex string rather than ``s`` so a caller computes ``md5`` once: the
+    expression reads it 8 times, and inside a lambda nothing shares them."""
     total = F.lit(0).cast("long")
     for i in range(8):
-        byte = F.conv(F.substring(md5, 2 * i + 1, 2), 16, 10).cast("long")
+        byte = F.conv(F.substring(md5_hex, 2 * i + 1, 2), 16, 10).cast("long")
         total = total.bitwiseOR(F.shiftleft(byte, 8 * i))
     return total.bitwiseAND(F.lit(_MERSENNE61))
 
 
-def winnowing_exprs(text, k: int = 3, w: int = 4) -> dict[str, Column]:
+def winnowing(df: DataFrame, text: str = "text", k: int = 3,
+              w: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03) as
     pure JVM array expressions — the rolling-hash fingerprint selection
     used for plagiarism/near-dup detection at scale.
 
-    k-gram hashes h_1..h_n (portable md5-derived, ``md5_le64_expr``),
+    k-gram hashes h_1..h_n (portable md5-derived, ``hex_le64_expr``),
     sliding windows of ``w`` consecutive hashes, fingerprint set =
     {min(window)} deduplicated. Short docs (< k tokens: single k-gram =
     the whole text; < w k-grams: one window over what exists) degrade
-    exactly like the jaccard shingler. Returns n_kgrams /
-    n_fingerprints / fp_min / fp_max column expressions — each engine
-    (Spark, DuckDB oracle) computes the identical values.
+    exactly like the jaccard shingler. Appends n_kgrams /
+    n_fingerprints / fp_min / fp_max to ``df``; each engine (Spark,
+    DuckDB oracle) computes the identical values.
+
+    Staged as successive projections (tokens → k-grams → hashes →
+    fingerprints), each lambda reading the previous stage's column.
+    Spark evaluates higher-order-function lambdas without common
+    subexpression elimination, so a lambda that captured the token split
+    or the hash array as an expression would recompute it per element:
+    O(n²) per document. A stage column that a lambda reads is also read
+    outside it, so CollapseProject keeps it a column instead of inlining
+    its expression into the lambda body.
     """
-    toks = tokens_expr(text)
-    kgrams = F.when(
-        F.size(toks) >= k,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - k),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-    hs = F.transform(kgrams, md5_le64_expr)
-    n = F.size(hs)
-    windows = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - w, F.lit(0))),
-        lambda j: F.array_min(F.slice(hs, j + 1, w)),
+    toks, kgrams, hs, fps = (f"_winnow_{c}" for c in ("toks", "kgrams", "hs", "fps"))
+    t = F.col(text)
+    staged = (
+        df.withColumn(toks, tokens_expr(t))
+        .withColumn(kgrams, F.when(
+            F.size(toks) >= k,
+            F.transform(
+                F.sequence(F.lit(0), F.size(toks) - k),
+                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
+            ),
+        ).otherwise(F.array(F.concat_ws(" ", toks))))
+        .withColumn(hs, F.transform(F.transform(kgrams, F.md5), hex_le64_expr))
+        .withColumn(fps, F.array_distinct(F.transform(
+            F.sequence(F.lit(0), F.greatest(F.size(hs) - w, F.lit(0))),
+            lambda j: F.array_min(F.slice(hs, j + 1, w)),
+        )))
     )
-    fps = F.array_distinct(windows)
     # NULL text carries no fingerprints (0/0/NULL/NULL) — without the
     # guard the kgram CASE falls to the single-empty-shingle branch and
-    # emits n_fingerprints=1 with fp=md5_le64(''), diverging from any
+    # emits n_fingerprints=1 with fp=hex_le64(md5('')), diverging from any
     # relational recomputation (which drops NULL docs at the tokenizer);
     # same guard class lang_id_expr already has.
-    null_text = F.isnull(text)
-    return {
-        "n_kgrams": F.when(null_text, F.lit(0)).otherwise(n).cast("long"),
+    null_text = F.isnull(t)
+    return staged.withColumns({
+        "n_kgrams": F.when(null_text, F.lit(0)).otherwise(F.size(hs)).cast("long"),
         "n_fingerprints": F.when(null_text, F.lit(0))
         .otherwise(F.size(fps))
         .cast("long"),
         "fp_min": F.when(~null_text, F.array_min(fps)),
         "fp_max": F.when(~null_text, F.array_max(fps)),
-    }
+    }).drop(toks, kgrams, hs, fps)
 
 
 @pandas_udf(LongType())

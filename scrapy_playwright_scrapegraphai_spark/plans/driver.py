@@ -678,36 +678,13 @@ class CrawlEngine:
             # admitted join below filters any deferred/denied rows
             # the scan decoded.
             batch_urls = [r["url"] for r in work.select("url").collect()]
-            # Spark rewrites In(url, [...]) to a min/max RANGE filter
-            # once the list exceeds parquet.pushdown.inFilterThreshold
-            # (default 10); a seed batch spanning many hosts has a
-            # range covering the whole corpus, so nothing prunes and
-            # the scan decodes every row group's url column. Raising
-            # the threshold to cover the lookup list pushes the actual
-            # point set → row-group stats + ColumnIndex page pruning
-            # do their job (measured 6.5 s → 1.9 s on the bench
-            # corpus). Capped at PARQUET_IN_PUSHDOWN_SAFE_MAX: a
-            # pushed In overflows the executor stack at ~800 terms on
-            # a cold JVM (nested binary OR tree — see the constant's
-            # docstring); larger small-batches keep the exact isin()
-            # filter post-scan and a range filter in the scan.
-            _key = "spark.sql.parquet.pushdown.inFilterThreshold"
-            try:
-                if (
-                    int(spark.conf.get(_key, "10")) <= len(batch_urls)
-                    <= PARQUET_IN_PUSHDOWN_SAFE_MAX
-                ):
-                    # min(): the conf persists across batches, so it
-                    # must never exceed the cap — Spark pushes an In
-                    # when len <= threshold, so a cap-sized threshold
-                    # still pushes a cap-sized list while a cap+1 list
-                    # falls back to the range filter
-                    spark.conf.set(_key, str(min(
-                        len(batch_urls) + 1,
-                        PARQUET_IN_PUSHDOWN_SAFE_MAX,
-                    )))
-            except Exception:
-                pass  # conf not supported on this session — range scan
+            # The exact In list reaches the parquet scan only up to
+            # parquet.pushdown.inFilterThreshold terms (beyond it Spark
+            # pushes a min/max range filter, which prunes nothing for a
+            # batch spanning many hosts). __init__ sets that conf once
+            # to min(lookup_pushdown_threshold, the cold-JVM-safe
+            # PARQUET_IN_PUSHDOWN_SAFE_MAX); larger lists keep the exact
+            # isin() filter post-scan.
             page_content = page_content.filter(
                 F.col("url").isin(batch_urls)
             ).coalesce(

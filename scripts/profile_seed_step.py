@@ -3,9 +3,9 @@ artifact).
 
 Generates the bench corpus if absent, then runs ``bench.py --crawl-run
 CORES`` (CORES = first argument, default 8) as a child process with
-``SPARK_GRAFT_PROFILE=1`` and a 10 s warm-up rest unless the caller set
-them. The child's per-phase superstep breakdown prints to stderr, and its
-result line (``CRAWLJSON:{...}``) to stdout; the exit code is the child's.
+``SPARK_GRAFT_PROFILE=1`` unless the caller set it. The child's
+per-phase superstep breakdown prints to stderr, and its result line
+(``CRAWLJSON:{...}``) to stdout; the exit code is the child's.
 
     python scripts/profile_seed_step.py [CORES]
 """
@@ -17,7 +17,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 os.environ.setdefault("SPARK_GRAFT_PROFILE", "1")
-os.environ.setdefault("SPARK_GRAFT_WARM_REST", "10")
 
 import bench  # noqa: E402
 from scrapy_playwright_scrapegraphai_spark.sources.bench_corpus import (  # noqa: E402

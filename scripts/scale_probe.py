@@ -6,6 +6,8 @@ Runs, at a given core count (affinity-pinned like bench.crawl_run):
   C: scan -> parse_pages -> explode -> first_writer_dedup    (+ JVM explode/agg)
   D: C + localCheckpoint(eager)                              (+ barrier store)
 
+Reads bench.py's corpus (run ``python bench.py`` once to generate it).
+
 Usage: python scripts/scale_probe.py <cores>
 Prints one JSON line PROBEJSON:{...}.
 """
@@ -17,22 +19,16 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-CORPUS = os.environ.get(
-    "SPARK_GRAFT_BENCH_CORPUS",
-    "/dev/shm/sps_bench/pages_48x2048x240w1200.parquet",
-)
+import bench  # noqa: E402
 
 
 def main():
     cores = int(sys.argv[1])
-    allowed = sorted(os.sched_getaffinity(0))
-    os.sched_setaffinity(0, set(allowed[:cores]))
+    bench.pin(cores)
 
-    import bench
     from pyspark.sql import functions as F
 
     spark = bench.make_spark(cores, f"probe-{cores}")
-    spark.sparkContext.setLogLevel("ERROR")
 
     import pandas as pd
 
@@ -43,7 +39,7 @@ def main():
         first_writer_dedup,
     )
 
-    pages = spark.read.parquet(CORPUS)
+    pages = spark.read.parquet(bench.CORPUS_PATH)
     # mimic the fetch-join output columns parse_pages expects
     fetched = pages.select(
         "url", "html",

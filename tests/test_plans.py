@@ -229,9 +229,15 @@ def test_cap_sized_in_list_actually_pushes_through_a_real_scan(spark, tmp_path):
     below the cold failure). Push an exactly-cap-sized In through a
     real parquet scan and evaluate it, so a Spark/JVM upgrade that moves
     the limit below the cap fails THIS test loudly instead of crashing a
-    production superstep. Also pins the engine's conf algebra: the
-    session threshold never exceeds the cap, cap-sized lists push,
-    cap+1 lists fall back to a range filter."""
+    production superstep. Also pins what the engine's one conf set
+    (``CrawlEngine.__init__``: threshold = max(10, min(lookup threshold,
+    cap))) relies on: a list no longer than the threshold pushes, and a
+    cap+1 list falls back to a range filter.
+
+    Limit: this runs on the session's shared, already warm JVM, so its
+    first scan is not cold and it cannot reproduce the cold-JVM overflow
+    the cap guards against; a cold-only regression below ~800 terms
+    would pass here."""
     from scrapy_playwright_scrapegraphai_spark.plans.driver import (
         PARQUET_IN_PUSHDOWN_SAFE_MAX,
     )

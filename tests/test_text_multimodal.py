@@ -48,18 +48,27 @@ def test_winnowing_null_text(spark):
     df = spark.createDataFrame(
         [(1, None), (2, "a b c d e f g")], "doc_id long, text string"
     )
-    wx = T.winnowing_exprs(F.col("text"), k=3, w=4)
-    rows = {
-        r["doc_id"]: r
-        for r in df.select(
-            "doc_id", *[v.alias(k) for k, v in wx.items()]
-        ).collect()
-    }
+    rows = {r["doc_id"]: r for r in T.winnowing(df, "text", k=3, w=4).collect()}
     assert rows[1]["n_kgrams"] == 0
     assert rows[1]["n_fingerprints"] == 0
     assert rows[1]["fp_min"] is None and rows[1]["fp_max"] is None
     assert rows[2]["n_kgrams"] == 5 and rows[2]["n_fingerprints"] >= 1
     assert rows[2]["fp_min"] is not None
+
+
+def test_winnowing_plan_tokenizes_and_hashes_once(spark):
+    """The text_winnowing plan computes the token split and the k-gram md5
+    once per document: staged projections, not expressions captured in
+    lambda bodies, which Spark would re-evaluate per element (O(n²) per
+    document: 28 splits and 56 md5 calls in the unstaged plan)."""
+    from scrapy_playwright_scrapegraphai_spark import entry_queries as EQ
+
+    plan = (
+        EQ.q_text_winnowing(spark, SF)._jdf.queryExecution()
+        .optimizedPlan().toString()
+    )
+    assert plan.count("md5(") == 1, plan
+    assert plan.count("split(") == 1, plan
 
 
 def test_fingerprints(spark):

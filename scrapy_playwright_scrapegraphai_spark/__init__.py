@@ -18,7 +18,8 @@ snapshots for exact resume.
 Layout
 ------
 functions/  pure Python kernels (shared with the single-process oracle —
-            byte parity by construction) + pandas-UDF wrappers + text
+            byte parity by construction) + their Spark wrappers (the fused
+            page parse, the robots verdict, the JVM host key) + text
             analytics (lang-id, quality, tokens, fingerprints)
 sources/    deterministic synthetic corpus generator (pages/seeds/robots)
             and driver-testdata loaders
@@ -29,8 +30,9 @@ operators/  classification, frontier dedup, politeness ranking, seen-set
 plans/      snapshot store (parquet + atomic manifest; Iceberg-snapshot
             stand-in) and the superstep driver loop
 oracle/     single-process pure-Python oracle crawler (golden outputs)
-streaming/  intentionally empty — the reference is not a streaming
-            system (SURVEY.md §2.8); all state is batch-iterative
+
+The reference is not a streaming system (SURVEY.md §2.8): all crawl
+state is batch-iterative superstep state with snapshot checkpoints.
 """
 
 __version__ = "0.1.0"

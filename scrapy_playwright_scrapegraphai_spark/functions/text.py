@@ -1,22 +1,16 @@
 """Text-analytics expression builders for web-text pipelines.
 
-All hot-path functions are pure JVM expressions (whole-stage codegen,
-oracle-expressible in ANSI SQL); only the rolling-hash fingerprint needs
-an Arrow UDF. Numeric outputs are integers or integer-ratio doubles
-(single IEEE division of two exact ints — bit-identical across engines).
+All functions are pure JVM expressions (whole-stage codegen,
+oracle-expressible in ANSI SQL). Numeric outputs are integers or
+integer-ratio doubles (single IEEE division of two exact ints —
+bit-identical across engines).
 """
 
 from __future__ import annotations
 
-import hashlib
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import LongType
 
 # Small fixed stopword lists for the lang-id heuristic (shared with the
 # SQL oracle — keep in sync with entry_queries._LANG_STOPWORDS).
@@ -185,33 +179,3 @@ def winnowing(df: DataFrame, text: str = "text", k: int = 3,
         "fp_max": F.when(~null_text, F.array_max(fps)),
     }).drop(toks, kgrams, hs, fps)
 
-
-@pandas_udf(LongType())
-def rolling_fingerprint_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """64-bit polynomial rolling hash over UTF-8 bytes (mod 2^61-1) — the
-    document-fingerprint variant used when incremental / windowed hashing
-    matters (e.g. prefix dedup). Arrow-batched; no SQL oracle (the driver
-    records a rows-only check)."""
-    M = (1 << 61) - 1
-    B = 1_000_003
-    for texts in it:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            h = 0
-            for byte in t.encode("utf-8"):
-                h = (h * B + byte) % M
-            out.append(h)
-        yield pd.Series(out, dtype="object")
-
-
-def blake2_fingerprint(text: str) -> int:
-    """Pure-Python reference for tests."""
-    M = (1 << 61) - 1
-    B = 1_000_003
-    h = 0
-    for byte in text.encode("utf-8"):
-        h = (h * B + byte) % M
-    return h

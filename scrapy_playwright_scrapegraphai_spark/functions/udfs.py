@@ -1,9 +1,10 @@
-"""Arrow-vectorized Spark wrappers around the pure kernels.
+"""Spark wrappers around the pure kernels, one per job.
 
-Everything here is batch-vectorized (pandas UDF / mapInPandas over Arrow
-record batches) — the north rule forbids per-row Python in the hot path.
-The wrapped kernels live in ``kernels.py`` and are shared verbatim with
-the single-process oracle (byte parity by construction).
+The Python stages are batch-vectorized (pandas UDF / mapInPandas over
+Arrow record batches) — the north rule forbids per-row Python in the hot
+path; the host key ``main_domain_native`` is a JVM expression. The
+wrapped kernels live in ``kernels.py`` and are shared verbatim with the
+single-process oracle (byte parity by construction).
 """
 
 from __future__ import annotations
@@ -29,46 +30,6 @@ from . import kernels
 # --- scalar pandas UDFs (iterator form amortizes worker/parser setup) ------
 
 
-@pandas_udf(ArrayType(StringType()))
-def extract_links_udf(
-    it: Iterator[tuple[pd.Series, pd.Series]],
-) -> Iterator[pd.Series]:
-    """(html binary, base_url) → array<string> of resolved links.
-
-    Vectorizes kernels.extract_links (frontier_spider.py:186-212 parity).
-    """
-    for html, base in it:
-        yield pd.Series(
-            [
-                kernels.extract_links(h, b) if h is not None else []
-                for h, b in zip(html, base)
-            ]
-        )
-
-
-@pandas_udf(StringType())
-def extract_text_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """html binary → extracted visible text (north-rule byte invariant)."""
-    for html in it:
-        yield pd.Series(
-            [kernels.extract_text(h) if h is not None else None for h in html]
-        )
-
-
-@pandas_udf(StringType())
-def main_domain_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """urlparse(url).netloc (frontier_model.py:53-58). Python-urllib parity
-    path; ``F.parse_url(url,'HOST')`` is the native prefilter variant."""
-    for urls in it:
-        yield urls.map(lambda u: kernels.main_domain(u) if u else None)
-
-
-@pandas_udf(BooleanType())
-def is_valid_url_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for urls in it:
-        yield urls.map(lambda u: kernels.is_valid_url(u) if u is not None else False)
-
-
 @pandas_udf(StringType())
 def canonicalize_url_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
     """Normalization-mode canonical URL (seen-set scale key)."""
@@ -76,30 +37,6 @@ def canonicalize_url_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield urls.map(
             lambda u: kernels.canonicalize_url(u, mode="normalize") if u else None
         )
-
-
-@pandas_udf(BooleanType())
-def matches_pattern_udf(
-    it: Iterator[tuple[pd.Series, pd.Series]],
-) -> Iterator[pd.Series]:
-    """(url, patterns array) → dual substring/regex match (url_utils.py:14-24).
-
-    Invalid-regex rows yield False here (row-granular use); page-granular
-    abort semantics live in ``parse_pages`` (via ``kernels.classify_links``).
-    """
-    import re
-
-    for urls, pats in it:
-        out = []
-        for u, p in zip(urls, pats):
-            if u is None:
-                out.append(False)
-                continue
-            try:
-                out.append(kernels.matches_pattern(u, list(p) if p is not None else []))
-            except re.error:
-                out.append(False)
-        yield pd.Series(out)
 
 
 @pandas_udf(BooleanType())
@@ -263,30 +200,22 @@ def explode_parsed(parsed: DataFrame) -> DataFrame:
     )
 
 
-def with_main_domain(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Attach main_domain. Uses the urllib-parity pandas UDF; the native
-    ``parse_url`` expression exists as a prefilter but urllib and Java
-    disagree on edge cases (userinfo, bare ports), so the stored column
-    comes from the parity path."""
-    return df.withColumn("main_domain", main_domain_udf(F.col(url_col)))
-
-
 def main_domain_native(url: "F.Column | str"):
-    """JVM-side ``urlparse(url).netloc`` — valid ONLY for urls that pass
-    ``kernels.is_valid_url`` (scheme + netloc present), which is the
-    invariant of every row reaching ``finalize_new_rows`` (the P2
-    validity gate runs inside the fused parse before classification).
+    """JVM-side ``urlparse(url).netloc`` — the host key of every frontier
+    row, root seeds and discovered urls alike.
 
-    Replicates CPython ``urlsplit`` exactly on that domain: tab/CR/LF
-    removed anywhere, the LEADING C0-control/space run stripped (CPython
-    does not strip trailing — a netloc really can end in a space), then
-    the authority is everything between ``scheme://`` and the first of
-    ``/ ? #``. Java's ``parse_url(..., 'HOST')`` is NOT equivalent
-    (drops userinfo and port), hence the regexp. Property-tested against
-    the Python kernel in tests/test_kernels.py; keeps the frontier
-    advance free of Python workers (the Arrow eval was 2-3 s/superstep
-    at 8 cores on the bench corpus)."""
+    Replicates CPython ``urlsplit`` exactly on every string ``urlparse``
+    accepts: tab/CR/LF removed anywhere, the LEADING C0-control/space run
+    stripped (CPython does not strip trailing — a netloc really can end
+    in a space), then the authority is everything between ``//`` (after
+    an optional ``scheme:``) and the first of ``/ ? #``, else empty.
+    (``urlparse`` raises on an unbalanced ``[``; ``seeds_from_config``
+    rejects such seeds and ``is_valid_url`` such links.) Java's
+    ``parse_url(..., 'HOST')`` is NOT equivalent (drops userinfo and
+    port), hence the regexp. Property-tested against the Python kernel in
+    tests/test_kernels.py; keeps the frontier free of Python workers (the
+    Arrow eval was 2-3 s/superstep at 8 cores on the bench corpus)."""
     c = F.col(url) if isinstance(url, str) else url
     c = F.regexp_replace(c, "[\\t\\n\\r]", "")
     c = F.regexp_replace(c, "^[\\x00-\\x20]+", "")
-    return F.regexp_extract(c, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1)
+    return F.regexp_extract(c, "^(?:[A-Za-z][A-Za-z0-9+.-]*:)?//([^/?#]*)", 1)

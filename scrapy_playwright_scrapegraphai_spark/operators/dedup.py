@@ -29,7 +29,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
@@ -110,17 +110,6 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text",
         )
     )
     return clean.unionByName(resolved)
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """Keep exactly the first-writer row per distinct text."""
-    w = Window.partitionBy(F.xxhash64(F.col(text_col))).orderBy(id_col)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 # --------------------------------------------------------------------------

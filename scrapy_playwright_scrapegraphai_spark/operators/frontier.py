@@ -98,7 +98,6 @@ def first_writer_dedup(
 def anti_join_seen(
     candidates: DataFrame,
     seen: DataFrame,
-    broadcast_candidates: bool = True,
     unique_urls: bool = False,
 ) -> DataFrame:
     """J1: drop candidates whose ``url`` already exists in the seen set.
@@ -109,24 +108,17 @@ def anti_join_seen(
     the engine does not call; a caller that uses one must re-check its
     false positives here, never drop them.
 
-    Default plan (``broadcast_candidates=True``): the candidate batch is
-    politeness-bounded, hence broadcastable BY DESIGN, while the seen set
-    is the 10^10-row side. A plain left-anti would shuffle the SEEN side
-    (Spark cannot broadcast the left of a left-anti), so instead:
+    Plan: the candidate batch is politeness-bounded, hence broadcastable
+    BY DESIGN, while the seen set is the 10^10-row side. A plain left-anti
+    would shuffle the SEEN side (Spark cannot broadcast the left of a
+    left-anti), so instead:
     (1) hits = seen ⋉ broadcast(candidate urls) — the big side STREAMS
     map-side, zero shuffle, and Iceberg bucket/bloom metadata can prune
     the scan; (2) candidates anti-join broadcast(hits) — hits ≤ batch,
     also shuffle-free. ``unique_urls=True`` (engine hot path: the batch
     is first-writer-deduped and the frontier is url-unique by J1/J2)
     skips the defensive distincts, making the whole plan shuffle-FREE.
-    ``broadcast_candidates=False`` falls back to the co-partitioned
-    shuffle join for unbounded candidate sets.
     """
-    if not broadcast_candidates:
-        # no distinct() on the seen side: a left-anti join only tests
-        # existence, so deduplicating the 10^10-row side first would be a
-        # full extra shuffle+aggregate for identical output
-        return candidates.join(seen.select("url"), on="url", how="left_anti")
     cand_urls = candidates.select("url")
     seen_urls = seen.select("url")
     if not unique_urls:
@@ -209,10 +201,9 @@ def assign_global_seq(
 def finalize_new_rows(new: DataFrame, superstep: int) -> DataFrame:
     """Classified+deduped child rows → full frontier-schema rows.
 
-    ``main_domain`` uses the JVM-native netloc expression: every row
-    here passed the P2 validity gate (scheme + netloc present), the
-    domain on which the expression is property-tested equal to the
-    urllib kernel — no Python worker on the frontier-advance path."""
+    ``main_domain`` uses the JVM-native netloc expression, which is
+    property-tested equal to the urllib kernel on every string
+    ``urlparse`` accepts — no Python worker on the frontier-advance path."""
     from ..functions.udfs import main_domain_native
 
     return (

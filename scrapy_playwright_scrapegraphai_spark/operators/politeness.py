@@ -23,21 +23,12 @@ URLs → 'skipped' (state exists in the reference enum, schema.sql:24).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.udfs import robots_allows_udf
 
 DEFAULT_CRAWL_DELAY_S = 2.0  # settings.py:77 DOWNLOAD_DELAY = 2
-
-
-@dataclass
-class AdmissionResult:
-    admitted: DataFrame
-    deferred: DataFrame  # politeness-deferred; stay pending for next superstep
-    denied: DataFrame    # robots-denied → url_state 'skipped'
 
 
 _REGEX_META = set(".^$*+?{}[]()|\\")
@@ -86,13 +77,6 @@ def robots_dim_profile(robots: DataFrame) -> tuple[bool, int]:
     return bool(row["ok"]), int(row["n"])
 
 
-def rules_are_regex_free(robots: DataFrame) -> bool:
-    """True iff every allow/deny pattern is ASCII and free of regex
-    metacharacters (see ``robots_dim_profile`` — this is the same
-    aggregate, kept for callers that only need the verdict)."""
-    return robots_dim_profile(robots)[0]
-
-
 def _contains_any(url, patterns) -> "F.Column":
     lurl = F.lower(url)
     return F.exists(patterns, lambda p: lurl.contains(F.lower(p)))
@@ -102,9 +86,10 @@ def with_robots(work: DataFrame, robots: DataFrame,
                 native: bool = False, broadcast: bool = True) -> DataFrame:
     """Join politeness rules onto work rows.
 
-    ``native=True`` (caller has verified ``rules_are_regex_free``) keeps
-    the allow/deny verdict entirely JVM-side; otherwise the Python-parity
-    UDF evaluates the reference's dual substring/regex semantics.
+    ``native=True`` (the caller's ``robots_dim_profile`` found the rules
+    regex-free) keeps the allow/deny verdict entirely JVM-side; otherwise
+    the Python-parity UDF evaluates the reference's dual substring/regex
+    semantics.
 
     ``broadcast=True`` hints the rules as the broadcast build side — the
     right plan while the dim is genuinely small (the reference's config
@@ -156,7 +141,7 @@ def admit_tagged(
     # non-positive/NULL crawl delays fall back to the default — matching
     # kernels.host_budget (the oracle's budget) exactly; a bare coalesce
     # would divide by zero (NULL in non-ANSI Spark) for crawl_delay_s <= 0
-    # and admit 1 URL/host where the oracle admits superstep/default
+    # and let 1 URL/host through where the oracle admits superstep/default
     _delay = F.coalesce(F.col("crawl_delay_s"), F.lit(DEFAULT_CRAWL_DELAY_S))
     _delay = F.when(_delay > 0, _delay).otherwise(F.lit(DEFAULT_CRAWL_DELAY_S))
     w = with_robots(
@@ -231,22 +216,3 @@ def admit_tagged(
     )
     return branch_in.unionByName(branch_out)
 
-
-def admit(
-    work: DataFrame,
-    robots: DataFrame,
-    superstep_seconds: float,
-    salt_shards: int = 8,
-    order_cols: tuple[str, ...] = ("discovery_seq",),
-) -> AdmissionResult:
-    """Split pending work into (admitted, deferred, denied)."""
-    tagged = admit_tagged(work, robots, superstep_seconds, salt_shards, order_cols)
-    return AdmissionResult(
-        admitted=tagged.filter(F.col("_disposition") == "admitted").drop(
-            "_disposition"
-        ),
-        deferred=tagged.filter(F.col("_disposition") == "deferred").drop(
-            "_disposition"
-        ),
-        denied=tagged.filter(F.col("_disposition") == "denied").drop("_disposition"),
-    )

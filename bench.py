@@ -89,9 +89,14 @@ def pin(cores: int) -> set:
 
 
 def crawl_run(cores: int) -> dict:
-    """One leg in this fresh process: untimed warm-up, then the timed crawl."""
+    """One leg in this fresh process: untimed warm-up, then the timed crawl.
+
+    Beside the timed ``wall_s`` the leg records its untimed parts:
+    ``warm_s`` (entry to timed start: session, warm-up micro-crawl,
+    footer prescan) and ``check_s`` (frontier counts and checksum)."""
     import shutil
 
+    t_entry = time.monotonic()
     pin(cores)
     from pyspark.sql import functions as F
 
@@ -120,16 +125,20 @@ def crawl_run(cores: int) -> dict:
     result = CrawlEngine(spark, pages, seeds, robots, f"{tmp}/timed",
                          Cfg(superstep_seconds=1e6, profile=PROFILE)).run()
     wall = time.monotonic() - t0
+    t_check = time.monotonic()
     frontier = result.frontier
     n_rows = frontier.count()
     fetched = frontier.filter(F.col("url_state") == "processed").count()
     # order-independent exact checksum; pmod keeps the sum far from overflow
     checksum = frontier.select(F.sum(F.pmod(F.xxhash64(
         "discovery_seq", "url", "url_state", "depth"), F.lit(2**31)))).first()[0]
+    check = time.monotonic() - t_check
     steps = [r["wall_time_s"] for r in result.metrics.orderBy("superstep").collect()]
     spark.stop()
     shutil.rmtree(tmp, ignore_errors=True)
-    return {"cores": cores, "wall_s": round(wall, 2), "frontier_rows": n_rows,
+    return {"cores": cores, "wall_s": round(wall, 2),
+            "warm_s": round(t0 - t_entry, 2), "check_s": round(check, 2),
+            "frontier_rows": n_rows,
             "fetched_pages": fetched, "checksum": checksum,
             "urls_per_sec": round((n_rows + fetched) / wall, 1),
             "superstep_wall_s": [round(s, 2) for s in steps]}
@@ -176,8 +185,10 @@ def save(record: dict) -> None:
 
 
 def run_leg(cores: int, deadline: float) -> dict:
-    """One crawl leg in a fresh subprocess, between two kernel controls."""
+    """One crawl leg in a fresh subprocess, between two kernel controls;
+    ``leg_s`` is the subprocess wall."""
     pre = control(cores)
+    t0 = time.monotonic()
     try:
         proc = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--crawl-run", str(cores)],
@@ -190,6 +201,7 @@ def run_leg(cores: int, deadline: float) -> dict:
         print(proc.stderr[-4000:], file=sys.stderr)
         raise RuntimeError(f"crawl leg at {cores} cores failed")
     leg = dict(json.loads(line[-1][len("CRAWLJSON:"):]),
+               leg_s=round(time.monotonic() - t0, 2),
                control_pre_post=[pre, control(cores)])
     print(f"# local[{cores}]: {leg['wall_s']} s, {leg['urls_per_sec']} urls/s, "
           f"control {leg['control_pre_post']} pages/s", file=sys.stderr)

@@ -1032,8 +1032,8 @@ WITH toks AS (
   FROM toks, unnest(generate_series(0, 63)) AS i(i)
   WHERE len(t) = 0
 ), bands AS (
-  -- md5 of the joined band slice == the engine's default bounded band
-  -- key (operators/dedup.py minhash_lsh_candidates band_key="md5")
+  -- md5 of the joined band slice == the engine's bounded band key
+  -- (operators/dedup.py minhash_lsh_candidates)
   SELECT doc, CAST(i // 4 AS INT) AS band_idx,
          md5(string_agg(sig_i::VARCHAR, '-' ORDER BY i)) AS band_hash
   FROM sig GROUP BY doc, i // 4
@@ -1309,7 +1309,7 @@ def q_knn_lsh(spark, sf):
     queries = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return S.knn_lsh(e, queries, k=5, num_planes=4, planes=_knn_lsh_planes())
+    return S.knn_lsh(e, queries, _knn_lsh_planes(), k=5)
 
 
 def _sql_knn_lsh() -> str:
@@ -1357,8 +1357,7 @@ def q_embedding_dup_pairs_gated(spark, sf):
     the identical gated pair set in SQL."""
     e = _t(spark, sf, "embeddings")
     return S.lsh_gated_cosine_dup_pairs(
-        e, threshold_num=3, threshold_den=10, num_planes=8,
-        planes_tables=_gated_planes_tables(),
+        e, _gated_planes_tables(), threshold_num=3, threshold_den=10
     )
 
 

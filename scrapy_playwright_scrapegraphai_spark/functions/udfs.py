@@ -73,7 +73,6 @@ PARSED_SCHEMA = StructType(
         StructField("target_patterns", ArrayType(StringType())),
         StructField("seed_pattern", StringType()),
         StructField("root_seed_id", IntegerType()),
-        StructField("found_count", IntegerType()),
         # per-page classified-item counts, computed inside the parse pass
         # so lineage aggregation reads 1 row/page instead of re-exploding
         # every child link (A1 semantics: crawl_manager_utils.py:33,42-48)
@@ -132,7 +131,6 @@ def parse_pages(fetched: DataFrame) -> DataFrame:
                     list(r.target_patterns) if r.target_patterns is not None else []
                 )
                 if r.html is None:
-                    found: list = []
                     items: list = []
                     text = None
                 else:
@@ -149,7 +147,6 @@ def parse_pages(fetched: DataFrame) -> DataFrame:
                 cols["target_patterns"].append(patterns)
                 cols["seed_pattern"].append(r.seed_pattern)
                 cols["root_seed_id"].append(int(r.root_seed_id))
-                cols["found_count"].append(len(found))
                 nt = sum(1 for i in items if i.is_target)
                 cols["n_targets"].append(nt)
                 cols["n_seeds"].append(len(items) - nt)
@@ -169,20 +166,14 @@ def explode_parsed(parsed: DataFrame) -> DataFrame:
 
     Output columns: url, category, url_type, depth, max_depth,
     target_patterns, seed_pattern, is_target, parent_url (the page url),
-    parent_seq (the page's discovery_seq), item_seq, root_seed_id,
-    found_count, partition_id. ``item_seq`` preserves the reference's
-    yielded-item order (targets in link order, then seeds);
-    ``found_count`` is the page's len(found_links) for lineage metrics
-    (logging_utils.py:93-122).
-
-    The explode is native columnar JVM work; ``partition_id`` (per-
-    partition lineage grain) is taken on the parsed-page rows.
+    parent_seq (the page's discovery_seq), item_seq, root_seed_id.
+    ``item_seq`` preserves the reference's yielded-item order (targets in
+    link order, then seeds). The explode is native columnar JVM work.
     """
     return (
-        parsed.withColumn("partition_id", F.spark_partition_id())
-        .select(
+        parsed.select(
             "category", "url_type", "max_depth", "target_patterns",
-            "seed_pattern", "root_seed_id", "found_count", "partition_id",
+            "seed_pattern", "root_seed_id",
             F.col("page_url").alias("parent_url"),
             F.col("discovery_seq").alias("parent_seq"),
             F.explode("items").alias("_it"),
@@ -195,7 +186,7 @@ def explode_parsed(parsed: DataFrame) -> DataFrame:
             F.col("_it.is_target").alias("is_target"),
             "parent_url", "parent_seq",
             F.col("_it.item_seq").alias("item_seq"),
-            "root_seed_id", "found_count", "partition_id",
+            "root_seed_id",
         )
     )
 

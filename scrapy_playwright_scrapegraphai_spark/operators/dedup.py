@@ -192,9 +192,9 @@ def _bucket_pair_expand(bucketed: DataFrame, key_cols: list[str],
 def make_minhash_udf(num_hashes: int = 64, shingle_n: int = 3):
     """pandas UDF: text → array<long> MinHash signature.
 
-    Universal-hash family h_i(x) = (a + i*b) mod p over blake2b-derived
-    (a, b) per shingle — stable across processes/versions (no PYTHONHASHSEED
-    dependence)."""
+    Universal-hash family h_i(x) = (a + i*b) mod p over md5-derived
+    (a, b) per shingle (``_hash_pair``) — stable across processes/versions
+    (no PYTHONHASHSEED dependence)."""
 
     @pandas_udf(ArrayType(LongType()))
     def minhash_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -244,7 +244,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
-    band_key: str = "md5",
     max_bucket_size: int | None = 1024,
 ) -> DataFrame:
     """Near-duplicate candidate pairs (id_a < id_b) via banded LSH.
@@ -257,18 +256,11 @@ def minhash_lsh_candidates(
     doc instead of all pairs — see ``_bucket_pair_expand``; the cluster
     stays connected, the local quadratic is gone.
 
-    ``band_key`` bounds the shuffle-key width of the band bucket join:
-    - ``"md5"`` (default): md5 hex of the joined band slice — 32 chars
-      regardless of band width, and still portable (the SQL oracle
-      applies the identical md5, so the check stays a full value check).
-    - ``"xxhash64"``: 8-byte long key — the leanest cluster-scale
-      shuffle; Spark-only (no oracle mirror), pair set identical up to a
-      ~2^-64 bucket-collision probability (engine-equality tested).
-    - ``"plain"``: the raw joined string (unbounded width — debugging /
-      legacy oracle form only).
+    The band key is the md5 hex of the joined band slice: 32 chars
+    regardless of band width, and portable — the SQL oracle applies the
+    identical md5, so the check stays a full value check.
     """
     assert num_hashes % bands == 0
-    assert band_key in ("md5", "xxhash64", "plain")
     r = num_hashes // bands
     df = df.filter(F.col(text_col).isNotNull())  # null docs carry no signature
     sig = df.select(
@@ -276,13 +268,6 @@ def minhash_lsh_candidates(
             F.col(text_col)
         ).alias("sig"),
     )
-
-    def _key(joined):
-        if band_key == "md5":
-            return F.md5(joined)
-        if band_key == "xxhash64":
-            return F.xxhash64(joined)
-        return joined
 
     # band extraction is UNROLLED over the (small, static) band count
     # rather than written as nested transform()/slice() lambdas: Spark
@@ -299,7 +284,7 @@ def minhash_lsh_candidates(
                 *[
                     F.struct(
                         F.lit(b).alias("band_idx"),
-                        _key(
+                        F.md5(
                             F.concat_ws(
                                 "-",
                                 *[
@@ -444,6 +429,66 @@ def simhash_candidates(
 # --------------------------------------------------------------------------
 
 
+def _doc_shingles(df: DataFrame, text_col: str, id_col: str, n: int,
+                  only: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
+    """Distinct (doc, sh) word n-gram shingles and per-doc (doc, n_sh)
+    counts; ``only`` (a (doc) frame) restricts both to its docs before
+    shingling.
+
+    Python str.split() semantics (split on whitespace RUNS, drop empty
+    tokens) — identical to the sketch UDFs' _shingles tokenizer and to
+    the oracle SQL's filtered regex split, so multi-space/tab/newline
+    documents shingle the same way on every path. A doc shorter than
+    ``n`` tokens is one shingle of all its tokens.
+    """
+    toks = df.select(
+        F.col(id_col).alias("doc"),
+        F.filter(
+            F.split(F.trim(F.col(text_col)), r"\s+"),
+            lambda x: x != F.lit(""),
+        ).alias("toks"),
+    )
+    if only is not None:
+        toks = toks.join(only, "doc", "left_semi")
+    shingled = toks.select(
+        "doc",
+        F.explode(
+            F.when(
+                F.size("toks") >= n,
+                F.transform(
+                    F.sequence(F.lit(0), F.size("toks") - n),
+                    lambda i: F.concat_ws(" ", F.slice("toks", i + 1, n)),
+                ),
+            ).otherwise(F.array(F.concat_ws(" ", F.col("toks"))))
+        ).alias("sh"),
+    ).distinct()
+    return shingled, shingled.groupBy("doc").agg(F.count("*").alias("n_sh"))
+
+
+def _jaccard_at_least(shared: DataFrame, counts: DataFrame, src: str,
+                      dst: str, p: int, q: int) -> DataFrame:
+    """(src, dst, shared) pairs with shingle-set Jaccard ≥ p/q, integer-
+    exact: shared/(n_a + n_b - shared) ≥ p/q ⟺ q·shared ≥ p·(n_a + n_b -
+    shared) — no floating point, so the DuckDB oracle matches
+    bit-for-bit. Returns (src, dst, shared, n_a, n_b).
+
+    The per-doc count tables are corpus-sized (one row per doc) — never
+    force-broadcast them; the surviving ``shared`` pair set is usually
+    the small side and AQE broadcasts it instead.
+    """
+    ca = counts.select(F.col("doc").alias(src), F.col("n_sh").alias("n_a"))
+    cb = counts.select(F.col("doc").alias(dst), F.col("n_sh").alias("n_b"))
+    return (
+        shared.join(ca, src)
+        .join(cb, dst)
+        .filter(
+            F.lit(q) * F.col("shared")
+            >= F.lit(p) * (F.col("n_a") + F.col("n_b") - F.col("shared"))
+        )
+        .select(src, dst, "shared", "n_a", "n_b")
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -453,42 +498,14 @@ def ngram_jaccard_pairs(
     threshold_den: int = 2,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
-    """Pairs with shingle-set Jaccard ≥ threshold_num/threshold_den.
-
-    Integer-exact: jaccard = shared/(n_a + n_b - shared) ≥ p/q
-    ⟺ q·shared ≥ p·(n_a + n_b - shared) — no floating point, so the
-    DuckDB oracle matches bit-for-bit. ``max_shingle_df`` drops shingles
-    appearing in more than that many docs before the self-join (skew
-    guard; candidate-complete for any threshold > 0 only if the dropped
-    shingles can't flip the verdict — use None for exact small-scale runs).
-    Returns (doc_a, doc_b, shared, n_a, n_b).
+    """Pairs with shingle-set Jaccard ≥ threshold_num/threshold_den
+    (integer-exact, ``_jaccard_at_least``). ``max_shingle_df`` drops
+    shingles appearing in more than that many docs before the self-join
+    (skew guard; candidate-complete for any threshold > 0 only if the
+    dropped shingles can't flip the verdict — use None for exact
+    small-scale runs). Returns (doc_a, doc_b, shared, n_a, n_b).
     """
-    # Python str.split() semantics (split on whitespace RUNS, drop empty
-    # tokens) — identical to the sketch UDFs' _shingles tokenizer and to
-    # the oracle SQL's filtered regex split, so multi-space/tab/newline
-    # documents shingle the same way on every path
-    toks = df.select(
-        F.col(id_col).alias("doc"),
-        F.filter(
-            F.split(F.trim(F.col(text_col)), r"\s+"),
-            lambda x: x != F.lit(""),
-        ).alias("toks"),
-    )
-    shingled = toks.select(
-        "doc",
-        F.explode(
-            F.when(
-                F.size("toks") >= n,
-                F.transform(
-                    F.sequence(F.lit(0), F.size("toks") - n),
-                    lambda i: F.concat_ws(
-                        " ", F.slice("toks", i + 1, n)
-                    ),
-                ),
-            ).otherwise(F.array(F.concat_ws(" ", F.col("toks"))))
-        ).alias("sh"),
-    ).distinct()
-    counts = shingled.groupBy("doc").agg(F.count("*").alias("n_sh"))
+    shingled, counts = _doc_shingles(df, text_col, id_col, n)
     if max_shingle_df is not None:
         # skew guard: shingles shared by more than max_shingle_df docs
         # (boilerplate/templates) are dropped BEFORE the self-join — they
@@ -508,20 +525,8 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .agg(F.count("*").alias("shared"))
     )
-    # per-doc count tables are corpus-sized (one row per doc) — never
-    # force-broadcast them; the surviving `shared` pair set is usually the
-    # small side and AQE broadcasts it instead
-    ca = counts.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    cb = counts.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    p, q = threshold_num, threshold_den
-    return (
-        shared.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .filter(
-            F.lit(q) * F.col("shared")
-            >= F.lit(p) * (F.col("n_a") + F.col("n_b") - F.col("shared"))
-        )
-        .select("doc_a", "doc_b", "shared", "n_a", "n_b")
+    return _jaccard_at_least(
+        shared, counts, "doc_a", "doc_b", threshold_num, threshold_den
     )
 
 
@@ -672,9 +677,9 @@ def verify_pairs_jaccard(
     the candidate set is the minority output of the banded sketch, so
     the whole verify costs O(candidates × shingles/doc).
 
-    Same integer-exact threshold algebra as ``ngram_jaccard_pairs``
-    (q·shared ≥ p·(n_a+n_b−shared)) and the same whitespace-run
-    tokenizer, so a SQL oracle reproduces it bit-for-bit. Pairs sharing
+    The same shingler and integer-exact predicate as
+    ``ngram_jaccard_pairs`` (``_doc_shingles``, ``_jaccard_at_least``),
+    so a SQL oracle reproduces it bit-for-bit. Pairs sharing
     zero shingles drop at the inner join — correct for any threshold
     > 0 (asserted). Returns (src, dst, shared, n_a, n_b).
     """
@@ -687,29 +692,7 @@ def verify_pairs_jaccard(
     )
     # shingle only candidate docs; candidate docs always carry non-null
     # text (the sketches filter nulls before signing)
-    toks = (
-        df.select(
-            F.col(id_col).alias("doc"),
-            F.filter(
-                F.split(F.trim(F.col(text_col)), r"\s+"),
-                lambda x: x != F.lit(""),
-            ).alias("toks"),
-        )
-        .join(cand_docs, "doc", "left_semi")
-    )
-    shingled = toks.select(
-        "doc",
-        F.explode(
-            F.when(
-                F.size("toks") >= n,
-                F.transform(
-                    F.sequence(F.lit(0), F.size("toks") - n),
-                    lambda i: F.concat_ws(" ", F.slice("toks", i + 1, n)),
-                ),
-            ).otherwise(F.array(F.concat_ws(" ", F.col("toks"))))
-        ).alias("sh"),
-    ).distinct()
-    counts = shingled.groupBy("doc").agg(F.count("*").alias("n_sh"))
+    shingled, counts = _doc_shingles(df, text_col, id_col, n, only=cand_docs)
     sa = shingled.select(F.col("doc").alias(src), "sh")
     sb = shingled.select(F.col("doc").alias(dst), "sh")
     shared = (
@@ -718,17 +701,8 @@ def verify_pairs_jaccard(
         .groupBy(src, dst)
         .agg(F.count("*").alias("shared"))
     )
-    ca = counts.select(F.col("doc").alias(src), F.col("n_sh").alias("n_a"))
-    cb = counts.select(F.col("doc").alias(dst), F.col("n_sh").alias("n_b"))
-    p, q = threshold_num, threshold_den
-    return (
-        shared.join(ca, src)
-        .join(cb, dst)
-        .filter(
-            F.lit(q) * F.col("shared")
-            >= F.lit(p) * (F.col("n_a") + F.col("n_b") - F.col("shared"))
-        )
-        .select(src, dst, "shared", "n_a", "n_b")
+    return _jaccard_at_least(
+        shared, counts, src, dst, threshold_num, threshold_den
     )
 
 

@@ -77,9 +77,9 @@ def robots_dim_profile(robots: DataFrame) -> tuple[bool, int]:
     return bool(row["ok"]), int(row["n"])
 
 
-def _contains_any(url, patterns) -> "F.Column":
-    lurl = F.lower(url)
-    return F.exists(patterns, lambda p: lurl.contains(F.lower(p)))
+def _contains_any(patterns: str) -> "F.Column":
+    """Some lower-cased pattern is a substring of the ``_lurl`` column."""
+    return F.exists(patterns, lambda p: F.col("_lurl").contains(p))
 
 
 def with_robots(work: DataFrame, robots: DataFrame,
@@ -102,11 +102,20 @@ def with_robots(work: DataFrame, robots: DataFrame,
     rules = robots.select(
         "main_domain", "allow_patterns", "deny_patterns", "crawl_delay_s"
     )
+    if native:
+        # lower-case each pattern once per rules row, on the small side
+        rules = rules.withColumns({
+            f"_{c}": F.transform(c, F.lower)
+            for c in ("allow_patterns", "deny_patterns")
+        })
     side = F.broadcast(rules) if broadcast else rules
     joined = work.join(side, on="main_domain", how="left")
     if native:
-        denied = _contains_any(F.col("url"), F.col("deny_patterns")) & ~F.coalesce(
-            _contains_any(F.col("url"), F.col("allow_patterns")), F.lit(False)
+        # and the url once per row: a lambda that captured lower(url)
+        # would evaluate it once per pattern
+        joined = joined.withColumn("_lurl", F.lower("url"))
+        denied = _contains_any("_deny_patterns") & ~F.coalesce(
+            _contains_any("_allow_patterns"), F.lit(False)
         )
         verdict = ~F.coalesce(denied, F.lit(False))
     else:
@@ -116,7 +125,7 @@ def with_robots(work: DataFrame, robots: DataFrame,
     return joined.withColumn(
         "_robots_ok",
         F.when(F.col("deny_patterns").isNull(), F.lit(True)).otherwise(verdict),
-    )
+    ).drop("_lurl", "_allow_patterns", "_deny_patterns")
 
 
 def admit_tagged(

@@ -5,15 +5,16 @@ bucketing is the scale path — at 10^9 vectors the cross product is
 impossible, but bucket-local brute force after a 16-bit sign-sketch
 band join touches ~n/2^16 of the space per probe.
 
-Numeric discipline: scores used in *oracle-checked* comparisons are
-integer-quantized (floor(x*1000)) so Spark and DuckDB agree bit-for-bit
-— float dot products differ across engines in the last ulp (summation
-order), which would flip top-k ties. All integer arithmetic stays below
-2^63 for 64-dim embeddings in [-1, 1].
+Numeric discipline: every score is integer-quantized
+(floor(x*``SCALE``)) so Spark and DuckDB agree bit-for-bit — float dot
+products differ across engines in the last ulp (summation order), which
+would flip top-k ties. All integer arithmetic stays below 2^63 for
+64-dim embeddings in [-1, 1].
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -24,11 +25,14 @@ from pyspark.sql.column import Column
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+# quantization factor; the SQL oracles hard-code floor(x * 1000.0)
+SCALE = 1000
 
-def quantize_expr(col, scale: int = 1000) -> Column:
-    """array<float> → array<long> via floor(x*scale) (exact & portable:
+
+def quantize_expr(col) -> Column:
+    """array<float> → array<long> via floor(x*SCALE) (exact & portable:
     IEEE multiply then floor is identical in any engine)."""
-    return F.transform(col, lambda x: F.floor(x * F.lit(float(scale))).cast("long"))
+    return F.transform(col, lambda x: F.floor(x * F.lit(float(SCALE))).cast("long"))
 
 
 def int_dot_expr(a, b) -> Column:
@@ -45,31 +49,30 @@ def sq_norm_expr(a) -> Column:
     return int_dot_expr(a, a)
 
 
-def knn_bruteforce(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
-) -> DataFrame:
-    """Exact top-k by quantized dot product for each query vector.
+def _quantized(df: DataFrame, id_col: str, vec_col: str, *keep) -> DataFrame:
+    """(vid, qv, *keep, n): the quantized vector and its int64 |qv|²."""
+    return df.select(
+        F.col(id_col).alias("vid"), quantize_expr(F.col(vec_col)).alias("qv"), *keep
+    ).withColumn("n", sq_norm_expr(F.col("qv")))
 
-    queries: (query_id, embedding). Broadcast the queries (small side),
-    stream the corpus once, per-query window top-k. Deterministic
-    tie-break: (dot DESC, neighbor id ASC). Output
-    (query_id, neighbor_id, dot, rank).
-    """
-    q = queries.select(
-        F.col("query_id"), quantize_expr(F.col(vec_col), scale).alias("qv")
+
+def _sq_dist() -> Column:
+    """int64 ||v−c||² = n − 2·v·c + cn over (qv, n) × (cv, cn) —
+    bit-stable across partitioning."""
+    return (
+        F.col("n") - F.lit(2) * int_dot_expr(F.col("qv"), F.col("cv"))
+        + F.col("cn")
     )
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        quantize_expr(F.col(vec_col), scale).alias("cv"),
-    )
-    scored = F.broadcast(q).crossJoin(c).select(
-        "query_id",
-        "neighbor_id",
+
+
+def _knn(q: DataFrame, c: DataFrame, k: int, on: str | None = None) -> DataFrame:
+    """Top-k of broadcast queries (query_id, qv[, on]) against candidates
+    (neighbor_id, cv[, on]) by integer dot product, crossed or joined on
+    ``on``. Deterministic tie-break: (dot DESC, neighbor id ASC). Output
+    (query_id, neighbor_id, dot, rank)."""
+    joined = F.broadcast(q).crossJoin(c) if on is None else F.broadcast(q).join(c, on)
+    scored = joined.select(
+        "query_id", "neighbor_id",
         int_dot_expr(F.col("qv"), F.col("cv")).alias("dot"),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -82,113 +85,47 @@ def knn_bruteforce(
     )
 
 
-def cosine_dup_pairs_exact_smallscale(
+def knn_bruteforce(
     embeddings: DataFrame,
-    threshold_num: int = 9,
-    threshold_den: int = 10,
+    queries: DataFrame,
+    k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 1000,
 ) -> DataFrame:
-    """Embedding near-duplicate pairs: quantized cosine ≥ p/q — the
-    SMALL-SCALE VERIFIER, deliberately O(n²).
+    """Exact top-k by quantized dot product for each query vector.
 
-    cos ≥ p/q ⟺ dot ≥ 0 ∧ q²·dot² ≥ p²·n_a·n_b — all int64, no sqrt,
-    no FP. The non-equi self-join (id_a < id_b) plans as a nested-loop
-    cross product: correct and exact, but quadratic — use it to measure
-    the recall of the scale path, never as the pipeline op. The default
-    embedding-dedup op is ``lsh_gated_cosine_dup_pairs`` below.
+    queries: (query_id, embedding). Broadcast the queries (small side),
+    stream the corpus once, per-query window top-k.
     """
-    v = embeddings.select(
-        F.col(id_col).alias("vid"), quantize_expr(F.col(vec_col), scale).alias("qv")
-    ).withColumn("n", sq_norm_expr(F.col("qv")))
+    q = queries.select("query_id", quantize_expr(F.col(vec_col)).alias("qv"))
+    c = embeddings.select(
+        F.col(id_col).alias("neighbor_id"),
+        quantize_expr(F.col(vec_col)).alias("cv"),
+    )
+    return _knn(q, c, k)
+
+
+def _self_pairs(v: DataFrame, on: str | None = None) -> DataFrame:
+    """(id_a < id_b, qa, qb, n_a, n_b) over a ``_quantized`` frame, all
+    pairs or those equal on ``on``."""
     a, b = v.alias("a"), v.alias("b")
-    p, q = threshold_num, threshold_den
-    pairs = a.join(b, F.col("a.vid") < F.col("b.vid")).select(
+    cond = F.col("a.vid") < F.col("b.vid")
+    if on is not None:
+        cond = (F.col(f"a.{on}") == F.col(f"b.{on}")) & cond
+    return a.join(b, cond).select(
         F.col("a.vid").alias("id_a"),
         F.col("b.vid").alias("id_b"),
-        int_dot_expr(F.col("a.qv"), F.col("b.qv")).alias("dot"),
+        F.col("a.qv").alias("qa"),
+        F.col("b.qv").alias("qb"),
         F.col("a.n").alias("n_a"),
         F.col("b.n").alias("n_b"),
     )
-    return pairs.filter(
-        (F.col("dot") > 0)
-        & (
-            F.lit(q * q) * F.col("dot") * F.col("dot")
-            >= F.lit(p * p) * F.col("n_a") * F.col("n_b")
-        )
-    ).select("id_a", "id_b", "dot", "n_a", "n_b")
 
 
-# backwards-compatible name; the default pipeline op is the gated form
-cosine_dup_pairs = cosine_dup_pairs_exact_smallscale
-
-
-def lsh_gated_cosine_dup_pairs(
-    embeddings: DataFrame,
-    threshold_num: int = 9,
-    threshold_den: int = 10,
-    num_planes: int = 8,
-    num_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
-    seed: int = 42,
-    planes_tables: list[list[list[int]]] | None = None,
-) -> DataFrame:
-    """DEFAULT embedding-dedup op: LSH bucket join → exact integer-cosine
-    verify.
-
-    Candidates are pairs that share a hyperplane-sign bucket in ANY of
-    ``num_tables`` independent tables (recall 1-(1-r)^T for per-table
-    collision rate r); each candidate is then verified with the SAME
-    integer inequality as the exact op, so the output is always a SUBSET
-    of ``cosine_dup_pairs_exact_smallscale`` (asserted in tests, recall
-    measured). At 10^9 vectors the pair space is bucket-local
-    (~n²/2^planes per table) instead of n² — the standard dedup-by-
-    embedding shape for a 100 TB corpus.
-
-    ``planes_tables`` (list of ``portable_planes`` matrices, one per
-    table) selects the integer-exact portable form the SQL oracle can
-    recompute; None uses the xxhash64 Rademacher planes (seeded per
-    table), no stored matrix.
-    """
-    if planes_tables is not None:
-        num_tables = len(planes_tables)
-    v = embeddings.select(
-        F.col(id_col).alias("vid"),
-        quantize_expr(F.col(vec_col), scale).alias("qv"),
-        F.col(vec_col).alias("_vec"),
-    ).withColumn("n", sq_norm_expr(F.col("qv")))
-    cand = None
-    for t in range(num_tables):
-        planes = planes_tables[t] if planes_tables is not None else None
-        # bucket is a per-row column — no (id, bucket) side table to join
-        # back, which would cost one corpus-wide join per LSH table
-        bv = v.select(
-            "vid", "qv", "n",
-            hyperplane_bucket_col(
-                F.col("_vec"), num_planes, seed=seed + 1000 * t,
-                planes=planes, scale=scale,
-            ).alias("bucket"),
-        )
-        a2, b2 = bv.alias("a"), bv.alias("b")
-        pairs_t = a2.join(
-            b2,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        ).select(
-            F.col("a.vid").alias("id_a"),
-            F.col("b.vid").alias("id_b"),
-            F.col("a.qv").alias("qa"),
-            F.col("b.qv").alias("qb"),
-            F.col("a.n").alias("n_a"),
-            F.col("b.n").alias("n_b"),
-        )
-        cand = pairs_t if cand is None else cand.unionByName(pairs_t)
-    cand = cand.dropDuplicates(["id_a", "id_b"])
-    p, q = threshold_num, threshold_den
-    scored = cand.withColumn("dot", int_dot_expr(F.col("qa"), F.col("qb")))
+def _cosine_at_least(pairs: DataFrame, p: int, q: int) -> DataFrame:
+    """Pairs with quantized cosine ≥ p/q: cos ≥ p/q ⟺ dot > 0 ∧
+    q²·dot² ≥ p²·n_a·n_b — all int64, no sqrt, no FP."""
+    scored = pairs.withColumn("dot", int_dot_expr(F.col("qa"), F.col("qb")))
     return scored.filter(
         (F.col("dot") > 0)
         & (
@@ -196,6 +133,62 @@ def lsh_gated_cosine_dup_pairs(
             >= F.lit(p * p) * F.col("n_a") * F.col("n_b")
         )
     ).select("id_a", "id_b", "dot", "n_a", "n_b")
+
+
+def cosine_dup_pairs_exact_smallscale(
+    embeddings: DataFrame,
+    threshold_num: int = 9,
+    threshold_den: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Embedding near-duplicate pairs: quantized cosine ≥ p/q — the
+    SMALL-SCALE VERIFIER, deliberately O(n²).
+
+    The non-equi self-join (id_a < id_b) plans as a nested-loop cross
+    product: correct and exact, but quadratic — use it to measure the
+    recall of the scale path, never as the pipeline op. The default
+    embedding-dedup op is ``lsh_gated_cosine_dup_pairs`` below.
+    """
+    v = _quantized(embeddings, id_col, vec_col)
+    return _cosine_at_least(_self_pairs(v), threshold_num, threshold_den)
+
+
+def lsh_gated_cosine_dup_pairs(
+    embeddings: DataFrame,
+    planes_tables: list[list[list[int]]],
+    threshold_num: int = 9,
+    threshold_den: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """DEFAULT embedding-dedup op: LSH bucket join → exact integer-cosine
+    verify.
+
+    ``planes_tables`` holds one ``portable_planes`` matrix per LSH table.
+    Candidates are pairs that share a hyperplane-sign bucket in ANY
+    table (recall 1-(1-r)^T for per-table collision rate r); each
+    candidate is then verified with the SAME integer inequality as the
+    exact op, so the output is always a SUBSET of
+    ``cosine_dup_pairs_exact_smallscale`` (asserted in tests, recall
+    measured). At 10^9 vectors the pair space is bucket-local
+    (~n²/2^planes per table) instead of n² — the standard dedup-by-
+    embedding shape for a 100 TB corpus.
+    """
+    v = _quantized(embeddings, id_col, vec_col, F.col(vec_col).alias("_vec"))
+    # bucket is a per-row column — no (id, bucket) side table to join
+    # back, which would cost one corpus-wide join per LSH table
+    cand = reduce(DataFrame.unionByName, (
+        _self_pairs(
+            v.select("vid", "qv", "n",
+                     hyperplane_bucket_col(F.col("_vec"), planes).alias("bucket")),
+            on="bucket",
+        )
+        for planes in planes_tables
+    ))
+    return _cosine_at_least(
+        cand.dropDuplicates(["id_a", "id_b"]), threshold_num, threshold_den
+    )
 
 
 def portable_planes(num_planes: int, dim: int, seed: int = 42) -> list[list[int]]:
@@ -219,216 +212,114 @@ def portable_planes(num_planes: int, dim: int, seed: int = 42) -> list[list[int]
     ]
 
 
-def hyperplane_bucket_col(
-    vec: Column,
-    num_planes: int = 16,
-    seed: int = 42,
-    planes: list[list[int]] | None = None,
-    scale: int = 1000,
-) -> Column:
-    """Random-hyperplane LSH sketch: the sign signature of ``vec`` as a
-    COLUMN expression — callers attach it with ``withColumn`` instead of
-    computing a (id, bucket) table and joining it back (which would cost
-    one corpus-wide join per LSH table). Equal buckets ⇒ angular-
-    similarity candidates; recall is tested against brute force.
+def hyperplane_bucket_col(vec: Column, planes: list[list[int]]) -> Column:
+    """Random-hyperplane LSH sketch: the sign signature of ``vec`` over
+    ``planes`` (e.g. from ``portable_planes``) as a COLUMN expression —
+    callers attach it with ``withColumn`` instead of computing a
+    (id, bucket) table and joining it back (which would cost one
+    corpus-wide join per LSH table). Equal buckets ⇒ angular-similarity
+    candidates; recall is tested against brute force.
 
-    Two equivalent plane sources:
-    - ``planes=None`` (scale default): plane p's coefficient for
-      dimension d is derived from xxhash64(seed, p, d) mapped to ±1 (a
-      Rademacher projection — JVM-side, no Python, no stored plane
-      matrix, float accumulate).
-    - explicit ``planes`` (e.g. from ``portable_planes``): projections
-      run over the quantized INTEGER vector, so the bucket is bit-stable
-      across engines and summation orders — the oracle-checkable form.
+    Vectorized Arrow path: ONE batched int64 matmul per Arrow batch —
+    quantize (floor(x*SCALE), same op as quantize_expr), project onto
+    the ±1 plane matrix, fold sign bits. Integer-exact, so the buckets
+    are bit-identical to the relational SQL-oracle computation, with
+    zero shuffles and none of the per-element interpreted
+    higher-order-function cost (zip_with/aggregate are not codegen'd);
+    the plane matrix rides the closure (tiny).
     """
-    sig = F.lit(0).cast("long")
-    if planes is not None:
-        # vectorized Arrow path: ONE batched int64 matmul per Arrow batch
-        # — quantize (floor(x*scale), same op as quantize_expr), project
-        # onto the ±1 plane matrix, fold sign bits. Integer-exact, so the
-        # buckets are bit-identical to the relational SQL-oracle
-        # computation, with zero shuffles and none of the per-element
-        # interpreted higher-order-function cost (zip_with/aggregate are
-        # not codegen'd); the plane matrix rides the closure (tiny).
-        P = np.array(planes, dtype=np.int64)
-        weights = (np.int64(1) << np.arange(P.shape[0], dtype=np.int64))
-        fscale = float(scale)
+    P = np.array(planes, dtype=np.int64)
+    weights = (np.int64(1) << np.arange(P.shape[0], dtype=np.int64))
 
-        @pandas_udf(LongType())
-        def _bucket(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            for vs in it:
-                if len(vs) == 0:
-                    yield pd.Series([], dtype="int64")
-                    continue
-                arr = np.floor(
-                    np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-                    * fscale
-                ).astype(np.int64)
-                proj = arr @ P.T  # (rows, planes), exact int64
-                yield pd.Series((proj > 0).astype(np.int64) @ weights)
+    @pandas_udf(LongType())
+    def _bucket(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        for vs in it:
+            if len(vs) == 0:
+                yield pd.Series([], dtype="int64")
+                continue
+            arr = np.floor(
+                np.stack([np.asarray(v, dtype=np.float64) for v in vs])
+                * float(SCALE)
+            ).astype(np.int64)
+            proj = arr @ P.T  # (rows, planes), exact int64
+            yield pd.Series((proj > 0).astype(np.int64) @ weights)
 
-        return _bucket(vec)
-
-    dim_idx = F.sequence(F.lit(0), F.size(vec) - 1)
-
-    def _rademacher(plane: int):
-        # closure (not a default arg — PySpark inspects lambda arity)
-        return lambda x, d: x * F.when(
-            F.pmod(F.xxhash64(F.lit(seed), F.lit(plane), d), F.lit(2)) == 0,
-            F.lit(1.0),
-        ).otherwise(F.lit(-1.0))
-
-    for p in range(num_planes):  # num_planes is small and static → unroll
-        proj = F.aggregate(
-            F.zip_with(vec, dim_idx, _rademacher(p)),
-            F.lit(0.0),
-            lambda a2, x: a2 + x,
-        )
-        sig = sig + F.when(proj > 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return sig
+    return _bucket(vec)
 
 
 def knn_lsh(
     embeddings: DataFrame,
     queries: DataFrame,
+    planes: list[list[int]],
     k: int = 5,
-    num_planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
-    planes: list[list[int]] | None = None,
 ) -> DataFrame:
     """Approximate top-k: brute-force only within matching LSH buckets.
 
     The scale path: bucket join replaces the cross join; with B buckets
     the scored pair space shrinks ~B×. Returns the same schema as
-    ``knn_bruteforce``; recall measured in tests. Pass ``planes`` (from
-    ``portable_planes``) for the integer-exact oracle-checkable form.
+    ``knn_bruteforce``; recall measured in tests. ``planes`` (from
+    ``portable_planes``) keeps the buckets integer-exact, so the oracle
+    recomputes them.
     """
-    bucket = hyperplane_bucket_col(
-        F.col(vec_col), num_planes, seed=seed, planes=planes
-    )
+    bucket = hyperplane_bucket_col(F.col(vec_col), planes).alias("bucket")
     c = embeddings.select(
         F.col(id_col).alias("neighbor_id"),
         quantize_expr(F.col(vec_col)).alias("cv"),
-        bucket.alias("bucket"),
+        bucket,
     )
-    q = queries.select(
-        "query_id", quantize_expr(F.col(vec_col)).alias("qv"),
-        bucket.alias("bucket"),
-    )
-    scored = F.broadcast(q).join(c, "bucket").select(
-        "query_id",
-        "neighbor_id",
-        int_dot_expr(F.col("qv"), F.col("cv")).alias("dot"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot", "rank")
-    )
+    q = queries.select("query_id", quantize_expr(F.col(vec_col)).alias("qv"), bucket)
+    return _knn(q, c, k, on="bucket")
 
 
-def _assign_nearest(v: DataFrame, cent: DataFrame,
-                    carry: tuple[str, ...] = ("qv",)) -> DataFrame:
-    """(vid, cell, *carry): nearest centroid per vector, as a
-    hash-aggregate argmin. ``min(struct(d2, cell, ...))`` compares
-    (d2, cell) lexicographically — the identical argmin + lowest-cell-id
-    tie-break as a row_number window — but gets map-side partial combine:
-    the shuffle carries ONE candidate per (vid, map partition) instead of
+def _assign_nearest(v: DataFrame, cent: DataFrame) -> DataFrame:
+    """(vid, cell, qv): nearest centroid per vector, as a hash-aggregate
+    argmin. ``min(struct(d2, cell, qv))`` compares (d2, cell)
+    lexicographically — the identical argmin + lowest-cell-id tie-break
+    as a row_number window — but gets map-side partial combine: the
+    shuffle carries ONE candidate per (vid, map partition) instead of
     num_cells rows per vid through a sort-window exchange. ``v`` needs
-    (vid, qv, n); ``cent`` needs (cell, cv, cn); distances are int64
-    ||v−c||² = n − 2·v·c + cn (bit-stable across partitioning)."""
-    d2 = (
-        F.col("n") - F.lit(2) * int_dot_expr(F.col("qv"), F.col("cv"))
-        + F.col("cn")
-    )
+    (vid, qv, n); ``cent`` needs (cell, cv, cn)."""
     return (
         v.crossJoin(F.broadcast(cent))
-        .withColumn("_d2", d2)
+        .withColumn("_d2", _sq_dist())
         .groupBy("vid")
-        .agg(
-            F.min(
-                F.struct(F.col("_d2"), F.col("cell"),
-                         *[F.col(c) for c in carry])
-            ).alias("m")
-        )
-        .select("vid", F.col("m.cell").alias("cell"),
-                *[F.col(f"m.{c}").alias(c) for c in carry])
+        .agg(F.min(F.struct("_d2", "cell", "qv")).alias("m"))
+        .select("vid", "m.cell", "m.qv")
     )
-
-
-def ivf_cells(
-    embeddings: DataFrame,
-    num_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
-) -> tuple[DataFrame, DataFrame]:
-    """IVF coarse quantizer: (centroids, assignments), all-integer.
-
-    Codebook = the ``num_cells`` vectors with the LOWEST ids (a
-    deterministic seed codebook — at cluster scale replace with a k-means
-    refinement job over a sample; the assignment/search machinery below
-    is identical either way). Assignment = argmin squared-L2 over the
-    broadcast codebook: ||v−c||² = n_v − 2·v·c + n_c in int64 after
-    quantization — no FP, so cell ids are bit-stable across partitioning
-    and parallelism. Tie-break: lowest cell id.
-    """
-    v = embeddings.select(
-        F.col(id_col).alias("vid"),
-        quantize_expr(F.col(vec_col), scale).alias("qv"),
-    ).withColumn("n", sq_norm_expr(F.col("qv")))
-    cent = (
-        v.orderBy("vid").limit(num_cells)
-        .select(
-            F.col("vid").alias("cell"),
-            F.col("qv").alias("cv"),
-            F.col("n").alias("cn"),
-        )
-    )
-    assign = _assign_nearest(v, cent, carry=("qv", "n"))
-    return cent, assign
 
 
 def kmeans_refine_cells(
     embeddings: DataFrame,
     num_cells: int = 16,
-    iters: int = 3,
+    iters: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 1000,
-) -> DataFrame:
-    """Lloyd's k-means refinement of the IVF coarse codebook — INTEGER
-    centroids, deterministic, partitioning-invariant, and portable (an
-    independent SQL engine recomputes the identical codebook).
+) -> tuple[DataFrame, DataFrame]:
+    """IVF coarse quantizer: (centroids, assignments) after ``iters``
+    Lloyd's k-means steps — INTEGER centroids, deterministic,
+    partitioning-invariant, and portable (an independent SQL engine
+    recomputes the identical codebook).
 
-    Start = the seed codebook (lowest-``num_cells`` ids, ``ivf_cells``).
-    Each iteration assigns every vector to its nearest centroid (argmin
-    int64 squared-L2, ties → lowest cell id) and recomputes centroids as
-    the element-wise FLOOR of the member mean: ``floor(S/m)`` where S is
-    the exact int64 member sum and m the member count. S and m are each
-    exactly representable as doubles (< 2^53), and a single IEEE
-    division + floor is bit-identical in every engine — so unlike a
-    float-mean codebook, the refined cells are fully oracle-checkable.
-    Determinism discipline:
+    Seed codebook (``iters=0``) = the ``num_cells`` vectors with the
+    LOWEST ids. Each iteration assigns every vector to its nearest
+    centroid and recomputes centroids as the element-wise FLOOR of the
+    member mean: ``floor(S/m)`` where S is the exact int64 member sum
+    and m the member count. S and m are each exactly representable as
+    doubles (< 2^53), and a single IEEE division + floor is
+    bit-identical in every engine — so unlike a float-mean codebook, the
+    refined cells are fully oracle-checkable. Determinism discipline:
     - cross-row aggregation is integer sum/count only (order-independent
       → physical partitioning cannot change results);
     - cells that lose all members keep their previous centroid.
-    Returns (cell, cv: array<long>, cn: long |cv|²) — the same codebook
-    shape ``ivf_cells`` emits, so the probe path is identical. Each
-    iteration is one broadcast-assign + one posexplode/sum shuffle — the
-    standard scalable Lloyd step at 10^9 vectors.
+    Centroids are (cell, cv: array<long>, cn: long |cv|²); assignments
+    (vid, cell, qv) = argmin int64 squared-L2 over the final codebook,
+    ties → lowest cell id. Each iteration is one broadcast-assign + one
+    posexplode/sum shuffle — the standard scalable Lloyd step at 10^9
+    vectors.
     """
-    v = embeddings.select(
-        F.col(id_col).alias("vid"),
-        quantize_expr(F.col(vec_col), scale).alias("qv"),
-    ).withColumn("n", sq_norm_expr(F.col("qv")))
+    v = _quantized(embeddings, id_col, vec_col)
     cent = (
         v.orderBy("vid").limit(num_cells)
         .select(
@@ -437,7 +328,7 @@ def kmeans_refine_cells(
             F.col("n").alias("cn"),
         )
     )
-    for _ in range(max(0, iters)):
+    for _ in range(iters):
         assign = _assign_nearest(v, cent)
         sums = (
             assign.select("cell", F.posexplode("qv").alias("pos", "val"))
@@ -481,7 +372,7 @@ def kmeans_refine_cells(
             # refine (the default) has a shallow plan — skipping the
             # eager materialization saves one job barrier
             cent = cent.localCheckpoint(eager=True)
-    return cent
+    return cent, _assign_nearest(v, cent)
 
 
 def knn_ivf(
@@ -492,7 +383,6 @@ def knn_ivf(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 1000,
     refine_iters: int = 1,
 ) -> DataFrame:
     """Approximate top-k via IVF: probe the ``nprobe`` nearest cells only.
@@ -512,45 +402,19 @@ def knn_ivf(
     is int64-exact and deterministic, so the oracle recomputes it
     bit-for-bit.
     """
-    if refine_iters > 0:
-        cent = kmeans_refine_cells(
-            embeddings, num_cells, refine_iters, id_col, vec_col, scale
-        )
-        v = embeddings.select(
-            F.col(id_col).alias("vid"),
-            quantize_expr(F.col(vec_col), scale).alias("qv"),
-        ).withColumn("n", sq_norm_expr(F.col("qv")))
-        assign = _assign_nearest(v, cent)
-    else:
-        cent, assign = ivf_cells(embeddings, num_cells, id_col, vec_col, scale)
-    q = queries.select(
-        "query_id", quantize_expr(F.col(vec_col), scale).alias("qv")
-    ).withColumn("qn", sq_norm_expr(F.col("qv")))
-    qd = F.broadcast(q).crossJoin(F.broadcast(cent)).select(
-        "query_id", "qv", "cell",
-        (
-            F.col("qn") - F.lit(2) * int_dot_expr(F.col("qv"), F.col("cv"))
-            + F.col("cn")
-        ).alias("d2"),
+    cent, assign = kmeans_refine_cells(
+        embeddings, num_cells, refine_iters, id_col, vec_col
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("cell").asc()
-    )
+    wq = Window.partitionBy("vid").orderBy(F.col("_d2").asc(), F.col("cell").asc())
     probes = (
-        qd.withColumn("_r", F.row_number().over(wq))
+        F.broadcast(_quantized(queries, "query_id", vec_col))
+        .crossJoin(F.broadcast(cent))
+        .withColumn("_d2", _sq_dist())
+        .withColumn("_r", F.row_number().over(wq))
         .filter(F.col("_r") <= nprobe)
-        .select("query_id", F.col("qv").alias("pqv"), "cell")
+        .select(F.col("vid").alias("query_id"), "qv", "cell")
     )
-    scored = F.broadcast(probes).join(assign, "cell").select(
-        "query_id",
-        F.col("vid").alias("neighbor_id"),
-        int_dot_expr(F.col("pqv"), F.col("qv")).alias("dot"),
+    c = assign.select(
+        F.col("vid").alias("neighbor_id"), F.col("qv").alias("cv"), "cell"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot", "rank")
-    )
+    return _knn(probes, c, k, on="cell")

@@ -39,6 +39,10 @@ write before the terminal ``done`` update. A background error surfaces
 on the main thread at the next join, and the executor's exit settles
 every task before ``run()`` raises it. A crash while write k is in
 flight loses step k only; resume folds the committed deltas ≤ k-1.
+The one other pool is inside the write task: ``SnapshotStore.write_step``
+opens a per-step ``ThreadPoolExecutor`` of ``len(tables)`` threads that
+write the step's tables concurrently, and closes it before the write
+returns.
 
 Scale notes (10^10-URL design point):
 - every join in the loop is either broadcast (admitted batch, robots) or
@@ -741,7 +745,7 @@ class CrawlEngine:
             new = anti_join_seen(
                 batch, frontier.filter(~F.col("is_root")),
                 unique_urls=True,  # batch deduped, frontier url-unique
-            ).drop("partition_id", "found_count")
+            )
             # the seq offsets are part of the lazy plan — no collect, no
             # checkpoint; determinism holds because ``batch`` is
             # materialized and the seen side is the localCheckpoint-ed

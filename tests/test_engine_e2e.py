@@ -245,6 +245,35 @@ def test_config_url_log_matches_oracle(engine_result, oracle_result):
             )
 
 
+def test_processing_stats_matches_per_root_counters(engine_result):
+    """A3: the six global processing stats over run_log equal the same
+    aggregates taken in Python over config_url_log's per-root counters,
+    which test_config_url_log_matches_oracle ties to the oracle."""
+    from scrapy_playwright_scrapegraphai_spark.operators.stats import (
+        config_url_log,
+        processing_stats,
+    )
+
+    (got,) = processing_stats(run_log(engine_result)).collect()
+    # run_log has a row per root with lineage, i.e. with found links
+    roots = [
+        r for r in config_url_log(
+            engine_result.frontier, engine_result.lineage
+        ).collect()
+        if r["total_urls_found"]
+    ]
+    assert roots
+    found = [r["total_urls_found"] for r in roots]
+    assert got.asDict() == pytest.approx({
+        "total_rows": len(roots),
+        "total_targets": sum(r["target_urls_found"] for r in roots),
+        "total_seeds": sum(r["seed_urls_found"] for r in roots),
+        "total_found": sum(found),
+        "avg_found_per_root": sum(found) / len(found),
+        "max_found_per_root": max(found),
+    })
+
+
 def test_per_page_counts_consistency(engine_result):
     # A1 on the final frontier: group children by parent
     children = engine_result.frontier.filter(~F.col("is_root"))

@@ -3,6 +3,9 @@
 ``oracle_sql()`` DuckDB result — row count, schema (column names), and
 order-insensitive values."""
 
+import json
+import os
+
 import duckdb
 import pandas as pd
 import pytest
@@ -10,6 +13,7 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF = "/root/testdata/sf0.01"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = (
     "region nation customer supplier part orders lineitem "
     "events documents embeddings"
@@ -46,8 +50,17 @@ QUERIES.update(
 def test_contract_size_within_driver_cap():
     # the round-4 driver silently recorded only the first 50 dict entries;
     # every contract query must land in CORRECTNESS_r{N}.json
-    assert len(entry_mod.queries()) <= 50
-    assert set(entry_mod.oracle_sql()) == set(entry_mod.queries())
+    names = set(entry_mod.queries())
+    assert len(names) == 50
+    assert set(entry_mod.oracle_sql()) == names
+    # a refactor cannot drop a query the benchmark times: the contract is
+    # exactly the benchmark's per-layer query.<name>_s metrics
+    with open(os.path.join(REPO, "BENCHMARK.json")) as fh:
+        layers = [m["name"] for m in json.load(fh)["per_layer"]]
+    timed = {n[len("query."):-len("_s")] for n in layers
+             if n.startswith("query.") and n.endswith("_s")}
+    assert names == timed
+    assert not names & set(EQ.PYTEST_ONLY_QUERIES)
 
 
 def test_entry_smoke(spark):

@@ -120,7 +120,7 @@ def test_gated_cosine_avoids_cross_join(spark):
     contrast to the exact verifier's nested loop."""
     e = EQ._t(spark, SF, "embeddings")
     gated = S.lsh_gated_cosine_dup_pairs(
-        e, 3, 10, planes_tables=[S.portable_planes(8, 64, seed=42)]
+        e, [S.portable_planes(8, 64, seed=42)], 3, 10
     )
     plan = _plan(gated)
     assert "BroadcastNestedLoopJoin" not in plan
@@ -154,6 +154,35 @@ def test_politeness_small_batch_skips_salted_exchange(spark):
     salted = _plan(P.admit_tagged(work, robots, 10.0, 8, native_robots=True))
     assert windows(salted) >= 2
     assert "_salt" in salted
+
+
+def test_native_robots_plan_lowers_url_once(spark):
+    """The native robots verdict lower-cases each url once per row and
+    each pattern on the rules side: the `exists` lambda bodies only read
+    columns. A lambda that captured lower(url) would re-evaluate it for
+    every pattern (Spark does no subexpression elimination inside
+    lambda bodies)."""
+    import re
+
+    from scrapy_playwright_scrapegraphai_spark.operators import politeness as P
+
+    work = spark.createDataFrame(
+        [(f"https://h0.t/P{i}", "h0.t", i) for i in range(4)],
+        "url string, main_domain string, discovery_seq long",
+    )
+    robots = spark.createDataFrame(
+        [("h0.t", ["/P1"], ["/p", "/X"], 2.0)],
+        "main_domain string, allow_patterns array<string>, "
+        "deny_patterns array<string>, crawl_delay_s double",
+    )
+    plan = (
+        P.with_robots(work, robots, native=True)._jdf.queryExecution()
+        .optimizedPlan().toString()
+    )
+    bodies = re.findall(r"exists\([^,]*, lambdafunction\((.*?)\), lambda", plan)
+    assert len(bodies) == 2, plan
+    assert not any("lower(" in b for b in bodies), bodies
+    assert plan.count("lower(url") == 1, plan
 
 
 def test_whole_stage_codegen_covers_scan_filter_agg(spark):

@@ -7,10 +7,12 @@ pages corpus, and the 50 contract queries at $SPARK_GRAFT_SF_DIR.
 One straight-line run that ends inside BUDGET_S: the corpus, crawl leg
 pairs, then the queries; whatever would start past the deadline is
 recorded as skipped. The full record is rewritten to RECORD after every leg
-and query; the last stdout line is ``result_line(record)``. Environment:
-SPARK_GRAFT_SF_DIR (query tables), SPARK_GRAFT_CPUS (query-session cores,
-default the CPUs this process may use), SPARK_GRAFT_PROFILE=1 (per-phase
-superstep breakdown of each crawl leg on stderr).
+and query; the last stdout line is ``result_line(record)``. Each crawl
+leg's record carries its timed crawl's ``CrawlResult.steps``: every
+superstep's phase seconds and size decisions, as committed to its
+manifest. Environment: SPARK_GRAFT_SF_DIR (query tables),
+SPARK_GRAFT_CPUS (query-session cores, default the CPUs this process may
+use).
 """
 
 from __future__ import annotations
@@ -32,7 +34,6 @@ QUERIES = entry.queries()  # exactly the driver contract's queries
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ALLOWED_CPUS = len(os.sched_getaffinity(0))
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or ALLOWED_CPUS)
-PROFILE = os.environ.get("SPARK_GRAFT_PROFILE", "") == "1"
 
 BUDGET_S = 1500.0  # the whole run, from process start
 QUERY_RESERVE_S = 300.0  # no crawl leg starts inside this much of the end
@@ -123,7 +124,7 @@ def crawl_run(cores: int) -> dict:
     t0 = time.monotonic()
     # politeness budget ≫ frontier → maximal admission per superstep
     result = CrawlEngine(spark, pages, seeds, robots, f"{tmp}/timed",
-                         Cfg(superstep_seconds=1e6, profile=PROFILE)).run()
+                         Cfg(superstep_seconds=1e6)).run()
     wall = time.monotonic() - t0
     t_check = time.monotonic()
     frontier = result.frontier
@@ -141,7 +142,8 @@ def crawl_run(cores: int) -> dict:
             "frontier_rows": n_rows,
             "fetched_pages": fetched, "checksum": checksum,
             "urls_per_sec": round((n_rows + fetched) / wall, 1),
-            "superstep_wall_s": [round(s, 2) for s in steps]}
+            "superstep_wall_s": [round(s, 2) for s in steps],
+            "steps": result.steps}
 
 
 def _parse_row_group(group: int) -> int:

@@ -28,21 +28,26 @@ drained) becomes "no pending fetchable rows". Each superstep phase
 method.
 
 Concurrency model: ``run()`` owns ONE ``ThreadPoolExecutor``, opened in
-a ``with`` block, so no background job of a run outlives it. Its tasks
-are the pages-scan prewarm (once per run), step k's politeness cache
-fill (overlaps plan building), step k's frontier advance and step k's
-snapshot write (they overlap each other; a politeness-small step starts
-its write only after the advance). The write's manifest waits for the
-advance future (it carries n_new), and the main thread joins the write
-at two points: write k before write k+1 is submitted, and the last
-write before the terminal ``done`` update. A background error surfaces
-on the main thread at the next join, and the executor's exit settles
-every task before ``run()`` raises it. A crash while write k is in
-flight loses step k only; resume folds the committed deltas ≤ k-1.
+a ``with`` block, so no background job of a run outlives it. Its tasks,
+plain ``pool.submit`` calls, are the pages-scan prewarm (once per run),
+step k's politeness cache fill (overlaps plan building), step k's
+frontier advance and step k's snapshot write (they overlap each other; a
+politeness-small step starts its write only after the advance). The
+write's manifest waits for the advance future (it carries n_new), and
+the main thread joins step k's tasks (``_settle``) before write k+1 is
+submitted and before the terminal ``done`` update. A background error
+surfaces on the main thread at the next join, and the executor's exit
+settles every task before ``run()`` raises it. A crash while write k is
+in flight loses step k only; resume folds the committed deltas ≤ k-1.
 The one other pool is inside the write task: ``SnapshotStore.write_step``
-opens a per-step ``ThreadPoolExecutor`` of ``len(tables)`` threads that
-write the step's tables concurrently, and closes it before the write
-returns.
+writes the step's tables concurrently, one thread each.
+
+Each step's one record is its ``_PhaseClock``: the size decisions
+``run()`` takes once from the pending-work count, and the wall seconds
+of each phase. All work, on the main thread or a task, runs inside
+``with clock(phase)``, which labels the thread's Spark jobs ``"<phase>
+step <k>"``. ``_settle`` commits the record into manifest k as
+``phase_s`` and ``decisions``; ``CrawlResult.steps`` reads them back.
 
 Scale notes (10^10-URL design point):
 - every join in the loop is either broadcast (admitted batch, robots) or
@@ -72,7 +77,6 @@ per-superstep canonicalization pass.
 
 from __future__ import annotations
 
-import sys
 import time
 from concurrent.futures import Future, ThreadPoolExecutor
 from contextlib import contextmanager
@@ -181,7 +185,6 @@ class CrawlConfig:
     # every executor. 100k rows ≈ tens of MB of patterns, the edge of
     # sensible broadcast on big-memory executors.
     robots_broadcast_max_rows: int = 100_000
-    profile: bool = False            # print per-phase wall times to stderr
 
 
 @dataclass
@@ -191,39 +194,57 @@ class CrawlResult:
     lineage: DataFrame
     supersteps_run: int = 0
     resumed_from: int | None = None
+    # one dict per committed step k >= 1: superstep, phase_s, decisions
+    # (None for steps committed before manifests carried them)
+    steps: list = field(default_factory=list)
     extra: dict = field(default_factory=dict)
 
 
 @dataclass
 class _History:
     """What the committed steps contribute to the result: one metrics row
-    each (from the manifest meta) and their lineage / page-text tables."""
+    and one ``steps`` entry each (from the manifest meta) and their
+    lineage / page-text tables."""
 
     metrics_rows: list = field(default_factory=list)
+    steps: list = field(default_factory=list)
     lineage_paths: list = field(default_factory=list)
     text_paths: list = field(default_factory=list)
 
     def add(self, manifest: dict) -> None:
-        self.metrics_rows.append(tuple(manifest["meta"]["metrics"]))
+        meta = manifest["meta"]
+        self.metrics_rows.append(tuple(meta["metrics"]))
+        self.steps.append({
+            "superstep": meta["metrics"][0],
+            "phase_s": meta.get("phase_s"),
+            "decisions": meta.get("decisions"),
+        })
         self.lineage_paths.append(manifest["tables"]["lineage"])
         if "page_text" in manifest["tables"]:
             self.text_paths.append(manifest["tables"]["page_text"])
 
 
 class _PhaseClock:
-    """Wall seconds per superstep phase: ``with clock("fetch_join"):``
-    adds the block's wall time to that phase. Background tasks time
-    their own phases on their step's clock; every phase name is written
-    by one thread only, so no update is lost. ``report`` prints the
-    ``[profile] <label>: <phase>=<s>s ...`` line when profiling is on."""
+    """One superstep's record: its size ``decisions`` and the wall
+    seconds of each phase. ``with clock("fetch_join"):`` sets the calling
+    thread's Spark job description to ``"fetch_join step <k>"`` for the
+    block (restoring the previous one on exit, also when the block
+    raises) and adds the block's wall time to that phase. Background
+    tasks time their own phases on their step's clock; every phase name
+    is written by one thread only, so no update is lost."""
 
-    def __init__(self, label: str, enabled: bool):
-        self.label = label
-        self.enabled = enabled
+    def __init__(self, spark: SparkSession, step: int,
+                 decisions: dict | None = None):
+        self.sc = spark.sparkContext
+        self.step = step
+        self.decisions = decisions or {}
         self.seconds: dict[str, float] = {}
 
     @contextmanager
     def __call__(self, phase: str):
+        key = "spark.job.description"
+        prev = self.sc.getLocalProperty(key)
+        self.sc.setLocalProperty(key, f"{phase} step {self.step}")
         t = time.monotonic()
         try:
             yield
@@ -231,11 +252,10 @@ class _PhaseClock:
             self.seconds[phase] = (
                 self.seconds.get(phase, 0.0) + time.monotonic() - t
             )
+            self.sc.setLocalProperty(key, prev)
 
-    def report(self) -> None:
-        if self.enabled:
-            phases = " ".join(f"{k}={v:.1f}s" for k, v in self.seconds.items())
-            print(f"[profile] {self.label}: {phases}", file=sys.stderr)
+    def phase_s(self) -> dict[str, float]:
+        return {k: round(v, 3) for k, v in self.seconds.items()}
 
 
 class CrawlEngine:
@@ -271,17 +291,13 @@ class CrawlEngine:
         # threshold still take the point-lookup path — the isin() filter
         # is evaluated post-scan as an InSet hash probe (any size is
         # fine); only the scan-level pruning degrades to the range filter.
+        self._in_filter_threshold = max(
+            10, min(self.cfg.lookup_pushdown_threshold,
+                    PARQUET_IN_PUSHDOWN_SAFE_MAX)
+        )
         spark.conf.set(
             "spark.sql.parquet.pushdown.inFilterThreshold",
-            str(
-                max(
-                    10,
-                    min(
-                        self.cfg.lookup_pushdown_threshold,
-                        PARQUET_IN_PUSHDOWN_SAFE_MAX,
-                    ),
-                )
-            ),
+            str(self._in_filter_threshold),
         )
 
     # -- initial state ---------------------------------------------------------
@@ -432,6 +448,7 @@ class CrawlEngine:
         )
         return CrawlResult(
             frontier, metrics, lineage, steps_run, resumed_from=resumed_from,
+            steps=hist.steps,
             extra={"page_text_paths": list(hist.text_paths)},
         )
 
@@ -454,49 +471,62 @@ class CrawlEngine:
         max_steps = cfg.max_supersteps if max_supersteps is None else max_supersteps
         latest = self.store.latest_step() if resume else None
         meta = None if latest is None else self._resume_meta(latest)
+        # labels the jobs outside any step: bootstrap, resume, prewarm
+        run_clock = _PhaseClock(self.spark, latest or 0)
         if meta is not None and meta.get("done"):
-            return self._result(*self._rebuild(latest), 0, latest)
+            with run_clock("resume"):
+                return self._result(*self._rebuild(latest), 0, latest)
 
         steps_run, pending = 0, None
         with ThreadPoolExecutor(max_workers=_BACKGROUND_THREADS) as pool:
-            self._submit(pool, "prewarm", latest or 0, self._prewarm)
+            pool.submit(self._prewarm, run_clock)
             if latest is None:
                 step, hist = 0, _History()
-                frontier, next_seq, n_pending = self._bootstrap()
+                with run_clock("bootstrap"):
+                    frontier, next_seq, n_pending = self._bootstrap()
             else:
                 step, next_seq = latest, meta["next_seq"]
-                frontier, hist = self._rebuild(latest)
-                # a fresh start reads this count off the step-0 write's
-                # Observation, and every later step off the advance's;
-                # resume pays one explicit count
-                n_pending = frontier.filter(_pending_work()).count()
+                with run_clock("resume"):
+                    frontier, hist = self._rebuild(latest)
+                    # a fresh start reads this count off the step-0
+                    # write's Observation, and every later step off the
+                    # advance's; resume pays one explicit count
+                    n_pending = frontier.filter(_pending_work()).count()
 
             while steps_run < max_steps:
                 if n_pending == 0:
-                    clock = _PhaseClock("done", cfg.profile)
+                    clock = _PhaseClock(self.spark, step)
                     with clock("term_check"):
                         # the last step's manifest must exist first
                         self._settle(pending, hist)
                         pending = None
-                        last = self.store.read_manifest(step)["meta"]
-                        self.store.update_meta(
-                            step, {**last, "next_seq": next_seq, "done": True}
-                        )
-                    clock.report()
+                    last = self.store.read_manifest(step)["meta"]
+                    phase_s = {**(last.get("phase_s") or {}), **clock.phase_s()}
+                    self.store.update_meta(
+                        step, next_seq=next_seq, done=True, phase_s=phase_s
+                    )
+                    if step:
+                        hist.steps[-1]["phase_s"] = phase_s
                     break
                 step += 1
                 steps_run += 1
                 t0 = time.monotonic()
-                clock = _PhaseClock(f"step {step}", cfg.profile)
-                # a politeness-small step: point-lookup fetch, unsalted
-                # rank, one-file tables, write after the advance
+                # the step's size path, decided once: a politeness-small
+                # step takes the point-lookup fetch, the unsalted rank,
+                # one-file tables and the write after the advance
                 small = n_pending <= cfg.lookup_pushdown_threshold
-                with clock("work_check"):
-                    work = frontier.filter(_pending_work())
+                clock = _PhaseClock(self.spark, step, {
+                    "small": small,
+                    "salt_shards": 1 if small else cfg.salt_shards,
+                    "broadcast_admitted": n_pending <= BROADCAST_ADMITTED_MAX_ROWS,
+                    "in_list": None,  # _fetch sets both on the lookup path
+                    "in_pushed": None,
+                    "native_robots": self._native_robots,
+                    "broadcast_robots": self._broadcast_robots,
+                })
                 with clock("politeness"):
-                    tagged, admitted, denied, obs_adm = self._admit(
-                        work, small, step
-                    )
+                    work = frontier.filter(_pending_work())
+                    tagged, admitted, denied, obs_adm = self._admit(work, clock)
                     # fill the politeness cache in the background: the
                     # rank subtree (window + cache + Observation) would
                     # otherwise evaluate serially inside the parse
@@ -505,11 +535,11 @@ class CrawlEngine:
                     # plan building shaves its latency off the barrier's
                     # critical path. Errors surface through the barrier
                     # itself (it evaluates the same cached plan).
-                    self._submit(pool, "politeness", step, tagged.count)
+                    fill = pool.submit(self._fill_politeness, tagged, clock)
                 with clock("fetch_join"):
-                    fetched = self._fetch(work, admitted, n_pending)
+                    fetched = self._fetch(work, admitted, clock.decisions)
                 parsed, failed, new_rows, obs_ok = self._expand(
-                    clock, fetched, admitted, frontier, step, next_seq
+                    clock, fetched, admitted, frontier, next_seq
                 )
                 with clock("metrics_lineage"):
                     updates = self._updates(parsed, failed, denied)
@@ -530,12 +560,11 @@ class CrawlEngine:
                         "lineage": lineage.coalesce(1),
                         "page_text": page_text.coalesce(1) if small else page_text,
                     }
-                    adv = self._submit(
-                        pool, "advance", step, self._advance,
-                        frontier, updates, new_rows, n_pending, step, clock,
+                    adv = pool.submit(
+                        self._advance, frontier, updates, new_rows, clock
                     )
                     write = partial(
-                        self._submit, pool, "write", step, self._commit,
+                        pool.submit, self._commit,
                         step, tables, counts, next_seq, t0, adv, clock,
                     )
                     self._settle(pending, hist)  # manifest k-1 before k
@@ -556,27 +585,14 @@ class CrawlEngine:
                 next_seq += n_new
                 # the write scans these caches; they are released once
                 # it is settled
-                pending = (wr, step, (tagged, parsed, new_rows, updates), clock)
+                pending = (clock, (wr, fill), (tagged, parsed, new_rows, updates))
             self._settle(pending, hist)  # a max_supersteps exit
 
         return self._result(frontier, hist, steps_run, latest)
 
     # -- background tasks ------------------------------------------------------
 
-    def _submit(self, pool: ThreadPoolExecutor, phase: str, step: int,
-                fn, *args) -> Future:
-        """Run ``fn(*args)`` on the run's executor. Pool threads are
-        reused and Spark local properties are per thread, so every task
-        sets its own job description ("<phase> step <k>") on entry —
-        the label the event log attributes its jobs by."""
-
-        def task():
-            self.spark.sparkContext.setJobDescription(f"{phase} step {step}")
-            return fn(*args)
-
-        return pool.submit(task)
-
-    def _prewarm(self) -> None:
+    def _prewarm(self, clock: _PhaseClock) -> None:
         """Warm the pages-table scan machinery: a zero-row pushed-down
         point probe parses every parquet footer + ColumnIndex and
         initializes the vectorized reader without decoding data. First
@@ -592,41 +608,50 @@ class CrawlEngine:
         # '~' (0x7E) sorts above every scheme-prefixed URL, so page
         # min/max stats prune all data pages: the job returns 0 rows
         try:
-            self.pages.select("url", "html").filter(
-                F.col("url").isin(["~prewarm~sentinel~"])
-            ).coalesce(2).count()
+            with clock("prewarm"):
+                self.pages.select("url", "html").filter(
+                    F.col("url").isin(["~prewarm~sentinel~"])
+                ).coalesce(2).count()
         except Exception:
             pass
 
+    @staticmethod
+    def _fill_politeness(tagged: DataFrame, clock: _PhaseClock) -> None:
+        with clock("politeness_fill"):
+            tagged.count()
+
     def _settle(self, pending: tuple | None, hist: _History) -> None:
-        """Join an in-flight snapshot write ``(future, step, caches,
-        clock)``: re-raise its error, fold its committed manifest into
-        ``hist``, release the step's caches and report its phases."""
+        """Join step k's in-flight tasks ``(clock, futures, caches)``:
+        re-raise an error, commit the step's phase seconds and decisions
+        into manifest k, fold it into ``hist`` and release the step's
+        caches."""
         if pending is None:
             return
-        future, step, caches, clock = pending
-        future.result()
-        hist.add(self.store.read_manifest(step))
+        clock, futures, caches = pending
+        for future in futures:
+            future.result()
+        hist.add(self.store.update_meta(
+            clock.step, phase_s=clock.phase_s(), decisions=clock.decisions
+        ))
         for df in caches:
             df.unpersist()
-        clock.report()
 
     # -- superstep phases --------------------------------------------------------
 
-    def _admit(self, work: DataFrame, small: bool, step: int):
+    def _admit(self, work: DataFrame, clock: _PhaseClock):
         """W2 + J5: politeness admission & robots — ONE cached plan.
         Returns (tagged, admitted, denied, admission Observation); the
         admission counts ride the plan (collected as a side-effect of the
         first job that evaluates it — no dedicated count job)."""
         cfg = self.cfg
-        obs = Observation(f"admission_{step}")
+        obs = Observation(f"admission_{clock.step}")
         tagged = (
             politeness.admit_tagged(
                 work, self.robots, cfg.superstep_seconds,
                 # small batches skip the salted two-phase rank (skew
                 # cannot bite; the extra exchange is pure fixed cost) —
                 # identical admission set either way
-                1 if small else cfg.salt_shards,
+                clock.decisions["salt_shards"],
                 order_cols=cfg.order_cols,
                 native_robots=self._native_robots,
                 broadcast_robots=self._broadcast_robots,
@@ -652,13 +677,13 @@ class CrawlEngine:
         return tagged, admitted, denied, obs
 
     def _fetch(self, work: DataFrame, admitted: DataFrame,
-               n_pending: int) -> DataFrame:
+               decisions: dict) -> DataFrame:
         """J3: fetch join — the admitted batch is politeness-bounded, so
         it is the broadcast build side and the big pages table streams
         exactly once. Failures (url not in corpus ≙ errback_playwright)
         are admitted minus ok on the unique discovery_seq — never a
         second pass over pages."""
-        spark, cfg = self.spark, self.cfg
+        spark = self.spark
         # a pages row with NULL html is an unfetchable page — treated
         # as fetch FAILURE (retry → failed), same as a missing row;
         # the oracle's pages.get(url) is None covers both cases, and
@@ -666,18 +691,19 @@ class CrawlEngine:
         page_content = self.pages.select("url", "html").filter(
             F.col("html").isNotNull()
         )
-        # small-batch point-lookup path: when the pending set is small
-        # (n_pending rides the previous advance Observation — no extra
-        # job), push the admitted URL list into the pages scan as an
-        # In predicate. With a sorted/page-indexed corpus (Iceberg
-        # metadata pruning at cluster scale) the scan decodes only the
-        # matching data pages instead of streaming the whole table —
-        # the difference between a seed superstep touching 50 rows and
-        # a full-corpus scan. Large batches keep the streaming scan.
-        if n_pending <= cfg.lookup_pushdown_threshold:
+        # small-batch point-lookup path (``run()`` decided ``small``
+        # from the pending count the previous advance Observation
+        # carried — no extra job): push the admitted URL list into the
+        # pages scan as an In predicate. With a sorted/page-indexed
+        # corpus (Iceberg metadata pruning at cluster scale) the scan
+        # decodes only the matching data pages instead of streaming the
+        # whole table — the difference between a seed superstep
+        # touching 50 rows and a full-corpus scan. Large batches keep
+        # the streaming scan.
+        if decisions["small"]:
             # the In list is the PENDING url set — a politeness-
-            # bounded superset of the admitted batch (this branch is
-            # gated on n_pending, so the list stays ≤ threshold).
+            # bounded superset of the admitted batch (``small`` bounds
+            # the pending count, so the list stays ≤ threshold).
             # Collecting it from the checkpointed frontier is a
             # narrow scan with no shuffle, so the politeness-rank
             # plan's first evaluation rides the parse barrier instead
@@ -692,6 +718,8 @@ class CrawlEngine:
             # to min(lookup_pushdown_threshold, the cold-JVM-safe
             # PARQUET_IN_PUSHDOWN_SAFE_MAX); larger lists keep the exact
             # isin() filter post-scan.
+            decisions["in_list"] = len(batch_urls)
+            decisions["in_pushed"] = len(batch_urls) <= self._in_filter_threshold
             page_content = page_content.filter(
                 F.col("url").isin(batch_urls)
             ).coalesce(
@@ -702,17 +730,15 @@ class CrawlEngine:
                 max(8, spark.sparkContext.defaultParallelism)
             )
         adm_side = (
-            F.broadcast(admitted)
-            if n_pending <= BROADCAST_ADMITTED_MAX_ROWS
-            else admitted
+            F.broadcast(admitted) if decisions["broadcast_admitted"] else admitted
         )
         return page_content.join(adm_side, on="url", how="inner")
 
     def _expand(self, clock: _PhaseClock, fetched: DataFrame,
-                admitted: DataFrame, frontier: DataFrame, step: int,
-                next_seq: int):
+                admitted: DataFrame, frontier: DataFrame, next_seq: int):
         """Parse, dedup, barrier, seen check and sequence numbers.
         Returns (parsed, failed, new_rows, fetch Observation)."""
+        step = clock.step
         obs_ok = Observation(f"fetch_{step}")
         with clock("plan_build"):
             # K1 + K2 + P2–P6: ONE Arrow pass per page — link extraction,
@@ -856,7 +882,7 @@ class CrawlEngine:
                 n_ok, n_admitted - n_ok)
 
     def _advance(self, frontier: DataFrame, updates: DataFrame,
-                 new_rows: DataFrame, n_pending: int, step: int,
+                 new_rows: DataFrame,
                  clock: _PhaseClock) -> tuple[DataFrame, int, int]:
         """Fold step's delta into the in-memory frontier. Returns
         (frontier, n_pending, n_new).
@@ -869,12 +895,13 @@ class CrawlEngine:
         truncates the growing plan without a full-table parquet
         round-trip; the next step's pending-work count rides this job as
         an Observation."""
+        step = clock.step
         obs = Observation(f"advance_{step}")
         with clock("advance_job"):
             fr = (
                 self._apply_updates(
                     frontier, updates,
-                    hint_broadcast=n_pending <= BROADCAST_ADMITTED_MAX_ROWS,
+                    hint_broadcast=clock.decisions["broadcast_admitted"],
                 )
                 .unionByName(new_rows)
                 .observe(

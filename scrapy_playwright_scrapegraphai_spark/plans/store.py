@@ -88,21 +88,24 @@ class SnapshotStore:
             "meta": meta,
         })
 
-    def update_meta(self, step: int, meta: dict[str, Any]) -> None:
-        """Rewrite a step's manifest meta without touching table files
-        (used for the terminal 'done' mark — the state DataFrames still
-        lazily read this step's parquet, so files must not be rewritten)."""
+    def update_meta(self, step: int, **fields: Any) -> dict[str, Any]:
+        """Merge ``fields`` into a step's manifest meta without touching
+        table files (the state DataFrames still lazily read this step's
+        parquet, so files must not be rewritten); returns the manifest."""
         manifest = self.read_manifest(step)
-        manifest["meta"] = meta
+        manifest["meta"].update(fields)
         self._commit_manifest(step, manifest)
+        return manifest
 
     def _commit_manifest(self, step: int, manifest: dict[str, Any]) -> None:
         """Publish ``manifest`` as step's manifest: write a tmp file, then
         ``os.replace`` it into place — atomic on POSIX, so readers see the
-        old manifest or the new one, never a partial file."""
+        old manifest or the new one, never a partial file. Compact
+        separators: each step's manifest carries its phase seconds and
+        decisions, a few hundred bytes that whitespace would inflate."""
         tmp = self._manifest_path(step) + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
+            json.dump(manifest, fh, separators=(",", ":"))
         os.replace(tmp, self._manifest_path(step))
 
     def reset(self, spark: SparkSession | None = None) -> dict[str, int]:

@@ -113,11 +113,17 @@ def test_minhash_lsh_finds_near_dups(docs):
             docs, num_hashes=64, bands=16, shingle_n=3
         ).collect()
     }
-    # every exact duplicate pair must collide (identical signatures)
-    for r in docs.filter(F.col("source") == "dup").collect():
-        orig = r["doc_id"] - 100000 if False else None
-    # exact dup pairs: (orig_id, 100000+2*k) — recover from text equality
-    groups = D.exact_dedup_groups(docs).filter(F.col("n_copies") > 1).collect()
+    # every appended exact duplicate collides with its canonical copy
+    # (identical signatures): pair it with its group's canonical id
+    dup_pairs = {
+        (r["canonical_id"], r["doc_id"])
+        for r in docs.filter(F.col("source") == "dup")
+        .withColumn("fp", F.md5("text"))
+        .join(D.exact_dedup_groups(docs), on="fp")
+        .collect()
+    }
+    assert len(dup_pairs) == 5
+    assert dup_pairs <= cands, dup_pairs - cands
     # near-dup pairs (1 token of ~30 changed → jaccard ~0.9) should mostly appear
     near = {
         (r["doc_a"], r["doc_b"])
@@ -265,10 +271,9 @@ def test_knn_lsh_recall(emb):
     recall = len(exact_set & approx_set) / len(exact_set)
     # 4 planes → 16 buckets over 500 vecs; self-match always collides
     assert recall >= 0.3, f"LSH recall {recall}"
-    # every query at least finds itself
-    for r in approx:
-        if r["rank"] == 1:
-            pass
+    # every query's rank-1 neighbour is itself
+    assert sorted((r["query_id"], r["neighbor_id"]) for r in approx
+                  if r["rank"] == 1) == [(q, q) for q in range(10)]
     assert {r["query_id"] for r in approx} == {r["query_id"] for r in exact}
 
 

@@ -370,3 +370,71 @@ def test_normalize_mode_canonicalized_ingestion(spark, tmp_path):
     # normalized — canonicalization is a no-op past ingestion
     urls = [r["url"] for r in result.frontier.select("url").collect()]
     assert all(canonicalize_url(u, mode="normalize") == u for u in urls)
+
+
+def _malformed_equals_oracle(spark, corpus, tmp_path):
+    """Crawl ``corpus`` with the engine and the oracle; the full frontier
+    (roots included) and the metrics counts must be equal."""
+    from scrapy_playwright_scrapegraphai_spark.sources.synth import (
+        corpus_to_spark,
+    )
+
+    pages_df, seeds_df, robots_df = corpus_to_spark(spark, corpus)
+    result = CrawlEngine(
+        spark, pages_df, seeds_df, robots_df, str(tmp_path / "ckpt"),
+        CrawlConfig(superstep_seconds=SS_SECONDS),
+    ).run()
+    oracle = oracle_crawl(
+        {p["url"]: p["html"] for p in corpus.pages}, corpus.seeds,
+        corpus.robots, superstep_seconds=SS_SECONDS,
+    )
+    got = sorted(
+        _frontier_key([r])[0] + (r["attempt"], r["is_root"])
+        for r in result.frontier.collect()
+    )
+    want = sorted(
+        (r.url, r.category, r.depth, r.is_target, r.parent_url, r.url_state,
+         r.discovery_seq, r.superstep, r.attempt, r.is_root)
+        for r in oracle.frontier
+    )
+    assert got == want
+    cols = ["superstep", "n_work", "n_admitted", "n_denied", "n_deferred",
+            "n_fetched_ok", "n_fetch_failed", "n_new"]
+    assert [tuple(r[c] for c in cols)
+            for r in result.metrics.orderBy("superstep").collect()] == [
+        tuple(m[c] for c in cols) for m in oracle.metrics]
+    return result, oracle
+
+
+def test_all_null_html_corpus_fails_every_fetch_like_oracle(
+    spark, corpus, tmp_path
+):
+    """Every pages row has NULL html: each root's fetch retries once and
+    then fails, nothing is discovered, and engine ≡ oracle."""
+    from scrapy_playwright_scrapegraphai_spark.sources.synth import SynthCorpus
+
+    null_html = SynthCorpus(
+        pages=[dict(p, html=None) for p in corpus.pages],
+        seeds=corpus.seeds, robots=corpus.robots,
+    )
+    result, oracle = _malformed_equals_oracle(spark, null_html, tmp_path)
+    states = {(r.url_state, r.attempt) for r in oracle.frontier}
+    assert states == {("failed", 2)}
+    assert result.supersteps_run == oracle.supersteps == 2
+
+
+def test_two_root_seeds_with_one_url_match_oracle(spark, corpus, tmp_path):
+    """Two root seeds with distinct ids share one URL: both roots are
+    fetched, and each discovered link belongs to the first writer (the
+    lower root id); engine ≡ oracle."""
+    from scrapy_playwright_scrapegraphai_spark.sources.synth import SynthCorpus
+
+    first = min(corpus.seeds, key=lambda s: s["url_seed_root_id"])
+    twin = dict(first, category="Twin", url_seed_root_id=max(
+        s["url_seed_root_id"] for s in corpus.seeds) + 1)
+    twins = SynthCorpus(pages=corpus.pages, seeds=[*corpus.seeds, twin],
+                        robots=corpus.robots)
+    result, oracle = _malformed_equals_oracle(spark, twins, tmp_path)
+    roots = [r for r in oracle.frontier if r.is_root and r.url == first["url"]]
+    assert [r.url_state for r in roots] == ["processed", "processed"]
+    assert not any(r.category == "Twin" for r in oracle.seen_rows())

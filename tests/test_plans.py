@@ -249,6 +249,33 @@ def test_point_lookup_batch_above_parquet_in_pushdown_cap(spark, tmp_path):
     assert processed == n_hosts * pages_per_host
 
 
+# Runs in a fresh local[1] JVM: the cap-sized push is that JVM's first
+# scan, so its parquet-mr frames are interpreted (the cold case the cap
+# guards). A cap+1 list then falls back to the range filter.
+COLD_CAP_PROBE = """
+import sys
+sys.path.insert(0, {root!r})
+from pyspark.sql import SparkSession, functions as F
+from scrapy_playwright_scrapegraphai_spark.plans.driver import (
+    PARQUET_IN_PUSHDOWN_SAFE_MAX as cap,
+)
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.parquet.pushdown.inFilterThreshold", str(cap))
+         .getOrCreate())
+urls = [f"https://h{{i % 50}}.example/p{{i}}" for i in range(cap)]
+scan = spark.read.parquet({path!r}).filter(F.col("url").isin(urls))
+plan = scan._jdf.queryExecution().executedPlan().toString()
+assert "PushedFilters: [In(url" in plan, plan[:2000]
+n = scan.count()
+over = spark.read.parquet({path!r}).filter(
+    F.col("url").isin(urls + ["https://h0.example/zzz"])
+).count()
+spark.stop()
+print("counts", n, over, cap)
+"""
+
+
 def test_cap_sized_in_list_actually_pushes_through_a_real_scan(spark, tmp_path):
     """PARQUET_IN_PUSHDOWN_SAFE_MAX encodes a parquet-mr recursion limit
     measured on THIS JVM's default thread stack (a pushed In compiles to
@@ -256,45 +283,34 @@ def test_cap_sized_in_list_actually_pushes_through_a_real_scan(spark, tmp_path):
     JVM — interpreted frames, first scan of the session — vs 1200+ OK
     once JIT-warmed, pyspark 4.1.2 / Java 17; the cap keeps ~2x margin
     below the cold failure). Push an exactly-cap-sized In through a
-    real parquet scan and evaluate it, so a Spark/JVM upgrade that moves
-    the limit below the cap fails THIS test loudly instead of crashing a
-    production superstep. Also pins what the engine's one conf set
-    (``CrawlEngine.__init__``: threshold = max(10, min(lookup threshold,
-    cap))) relies on: a list no longer than the threshold pushes, and a
-    cap+1 list falls back to a range filter.
+    real parquet scan and evaluate it as the first scan of a fresh
+    ``local[1]`` JVM in a subprocess, so a Spark/JVM upgrade that moves
+    the cold limit below the cap fails THIS test loudly instead of
+    crashing a production superstep. Also pins what the engine's one
+    conf set (``CrawlEngine.__init__``: threshold = max(10, min(lookup
+    threshold, cap))) relies on: a list no longer than the threshold
+    pushes, and a cap+1 list falls back to a range filter (invisible in
+    the plan string — PushedFilters shows the SOURCE-level In either
+    way; the threshold only switches the parquet-level predicate) while
+    the exact post-scan InSet keeps the result correct."""
+    import os
+    import subprocess
+    import sys
 
-    Limit: this runs on the session's shared, already warm JVM, so its
-    first scan is not cold and it cannot reproduce the cold-JVM overflow
-    the cap guards against; a cold-only regression below ~800 terms
-    would pass here."""
     from scrapy_playwright_scrapegraphai_spark.plans.driver import (
         PARQUET_IN_PUSHDOWN_SAFE_MAX,
     )
 
-    cap = PARQUET_IN_PUSHDOWN_SAFE_MAX
+    # the shared session writes the table; the probe JVM only reads it
     path = str(tmp_path / "urls.parquet")
     spark.range(5000).selectExpr(
         "concat('https://h', id % 50, '.example/p', id) AS url", "id"
     ).write.parquet(path)
-    urls = [f"https://h{i % 50}.example/p{i}" for i in range(cap)]
-    key = "spark.sql.parquet.pushdown.inFilterThreshold"
-    old = spark.conf.get(key, "10")
-    try:
-        spark.conf.set(key, str(cap))
-        scan = spark.read.parquet(path).filter(F.col("url").isin(urls))
-        plan = scan._jdf.queryExecution().executedPlan().toString()
-        assert "PushedFilters: [In(url" in plan, plan[:2000]
-        # the real check: evaluating the cap-sized OR tree on the
-        # executor must not overflow the stack
-        assert scan.count() == cap
-        # one term above the cap: parquet-mr falls back to the min/max
-        # range filter (invisible in the plan string — PushedFilters
-        # shows the SOURCE-level In either way; the threshold only
-        # switches the parquet-level predicate), and the exact post-scan
-        # InSet keeps the result correct
-        over = spark.read.parquet(path).filter(
-            F.col("url").isin(urls + ["https://h0.example/zzz"])
-        )
-        assert over.count() == cap
-    finally:
-        spark.conf.set(key, old)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", COLD_CAP_PROBE.format(root=root, path=path)],
+        cwd=root, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    cap = PARQUET_IN_PUSHDOWN_SAFE_MAX
+    assert proc.stdout.split()[-4:] == ["counts", str(cap), str(cap), str(cap)]

@@ -313,3 +313,115 @@ def test_fresh_start_wipes_stale_higher_steps(spark, corpus_spark, tmp_path):
     ).run()
     assert resumed.supersteps_run == 0  # fresh run had completed
     assert _key(resumed.frontier) == _key(fresh.frontier)
+
+
+def test_manifest_kill_between_table_writes_and_rename(
+    spark, corpus_spark, tmp_path, uninterrupted
+):
+    """A kill between step 2's table writes and its manifest rename:
+    the error reaches the caller, step 2's directory holds tables but no
+    manifest, and a fresh resuming engine rewrites that directory and
+    ends equal to an uninterrupted run."""
+    import os
+
+    ckpt = str(tmp_path / "norename")
+    eng = _engine(spark, corpus_spark, ckpt)
+    err = RuntimeError("injected kill before the manifest rename")
+    commit_manifest = eng.store._commit_manifest
+
+    def failing_commit_manifest(step, manifest):
+        # write_step's commit carries no phase record yet; the
+        # settle-time update_meta of an earlier step does
+        if step == 2 and "phase_s" not in manifest["meta"]:
+            raise err
+        return commit_manifest(step, manifest)
+
+    eng.store._commit_manifest = failing_commit_manifest
+    with pytest.raises(RuntimeError) as raised:
+        eng.run()
+    assert raised.value is err
+    store = SnapshotStore(ckpt)
+    assert store.latest_step() == 1
+    assert os.listdir(os.path.join(ckpt, "step=2"))
+    assert not os.path.exists(os.path.join(ckpt, "manifest_2.json"))
+
+    resumed = _engine(spark, corpus_spark, ckpt).run()
+    assert resumed.resumed_from == 1
+    assert store.read_manifest(2)["meta"]["phase_s"]
+    assert _key(resumed.frontier) == _key(uninterrupted.frontier)
+    assert _metric_counts(resumed) == _metric_counts(uninterrupted)
+
+
+MAIN_PHASES = {
+    "politeness", "fetch_join", "plan_build", "parse_barrier",
+    "expand_dedup_seq", "metrics_lineage", "state_write", "advance",
+}
+TASK_PHASES = {"politeness_fill", "advance_job", "write_job"}
+
+
+def test_manifests_record_phases_and_the_size_path(spark, corpus_spark, tmp_path):
+    """A crawl_wide-shaped crawl: a lookup threshold of the seed count
+    puts the seed step on the point-lookup path and the next wave on the
+    streaming scan. Every manifest k >= 1 commits the step's phase
+    seconds and its size decisions, ``CrawlResult.steps`` reads them
+    back, and a kill after step 1 plus a resume records the same
+    decisions and ends in the same frontier."""
+    pages, seeds, robots = corpus_spark
+    n_seeds = seeds.count()
+    cfg = CrawlConfig(superstep_seconds=SS, lookup_pushdown_threshold=n_seeds)
+
+    def engine(ckpt):
+        return CrawlEngine(spark, pages, seeds, robots, ckpt, cfg)
+
+    full_dir = str(tmp_path / "full")
+    full = engine(full_dir).run()
+    assert full.supersteps_run >= 3
+    store = SnapshotStore(full_dir)
+    assert [s["superstep"] for s in full.steps] == list(
+        range(1, full.supersteps_run + 1))
+    for s in full.steps:
+        meta = store.read_manifest(s["superstep"])["meta"]
+        assert meta["phase_s"] == s["phase_s"]
+        assert meta["decisions"] == s["decisions"]
+        assert MAIN_PHASES | TASK_PHASES <= set(s["phase_s"])
+        assert all(v >= 0 for v in s["phase_s"].values())
+    assert "term_check" in full.steps[-1]["phase_s"]
+
+    seed, wave = full.steps[0]["decisions"], full.steps[1]["decisions"]
+    assert seed["small"] and seed["salt_shards"] == 1
+    assert seed["in_list"] == n_seeds and seed["in_pushed"] is True
+    assert seed["broadcast_admitted"] is True
+    assert wave["small"] is False and wave["salt_shards"] == cfg.salt_shards
+    assert wave["in_list"] is None and wave["in_pushed"] is None
+
+    part_dir = str(tmp_path / "part")
+    engine(part_dir).run(max_supersteps=1)
+    resumed = engine(part_dir).run()
+    assert resumed.resumed_from == 1
+    assert [s["decisions"] for s in resumed.steps] == [
+        s["decisions"] for s in full.steps]
+    assert _key(resumed.frontier) == _key(full.frontier)
+
+
+def test_phase_clock_labels_and_restores_job_description(spark):
+    """``with clock(phase)`` labels the thread's Spark jobs
+    ``"<phase> step <k>"`` and restores the previous description on
+    exit, also when the block raises; the block's seconds are kept."""
+    from scrapy_playwright_scrapegraphai_spark.plans.driver import _PhaseClock
+
+    sc = spark.sparkContext
+    key = "spark.job.description"
+    sc.setLocalProperty(key, "outer")
+    clock = _PhaseClock(spark, 7)
+    try:
+        with clock("x"):
+            assert sc.getLocalProperty(key) == "x step 7"
+        assert sc.getLocalProperty(key) == "outer"
+        with pytest.raises(ValueError):
+            with clock("y"):
+                assert sc.getLocalProperty(key) == "y step 7"
+                raise ValueError
+        assert sc.getLocalProperty(key) == "outer"
+    finally:
+        sc.setLocalProperty(key, None)
+    assert set(clock.phase_s()) == {"x", "y"}
